@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted IVF-PQ similarity index — the index LIFECYCLE around
   * q90's one-shot query, mirroring what [[DedupIndex]] is to q24:
@@ -36,6 +37,22 @@ import org.apache.spark.sql.functions._
   * `TopKPerKey`-planned rank filter — no crossJoin, no full scan.
   */
 object AnnIndex {
+
+  // Declared store schemas: every read goes through
+  // `spark.read.schema(...)`, so it lists files but never runs a
+  // parquet schema-inference job. Partition columns come last, where
+  // partition discovery appends them; StoreSchemaSpec pins each
+  // declaration against what the writers below land.
+  private[graft] val CodebooksSchema =
+    StructType.fromDDL("part STRING, m INT, j INT, c ARRAY<DOUBLE>")
+  private[graft] val CodesSchema =
+    StructType.fromDDL("vec_id BIGINT, codes ARRAY<INT>, run STRING, cell INT")
+  private[graft] val TombstonesSchema = StructType.fromDDL("vec_id BIGINT")
+  /** The run-partitioned raw-vector side store a refine joins
+    * ([[searchRefined]]'s `vectors`), kept beside the index by
+    * [[HybridRetrieval]] and [[graft.streaming.AnnScreenStream]]. */
+  private[graft] val RawSchema =
+    StructType.fromDDL("vec_id BIGINT, vec ARRAY<DOUBLE>, run STRING")
 
   private val IvfIters = 4
   // ranking fidelity (round 11, mirroring the q90 query's fix): 8
@@ -182,7 +199,8 @@ object AnnIndex {
     val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(t)) codes
     else codes.join(
-      broadcast(spark.read.parquet(t.toString).select(col("vec_id")).distinct()),
+      broadcast(spark.read.schema(TombstonesSchema).parquet(t.toString)
+        .select(col("vec_id")).distinct()),
       Seq("vec_id"), "left_anti")
   }
 
@@ -210,7 +228,7 @@ object AnnIndex {
     // with tombstones pending the fold must run even over a single
     // run= partition — the rewrite IS the physical delete
     graft.ops.StoreCompaction.fold(spark, path, "run", "base",
-      notDeleted(spark, dir, spark.read.parquet(path)).drop("run"),
+      notDeleted(spark, dir, spark.read.schema(CodesSchema).parquet(path)).drop("run"),
       Seq("cell"), force = hasTombs)
     if (hasTombs && !fs.delete(tomb, true))
       throw new IllegalStateException(
@@ -260,7 +278,7 @@ object AnnIndex {
   def cellStats(spark: SparkSession, dir: String): CellStats = {
     graft.ops.StoreCompaction.heal(spark, s"$dir/codes", "run")
     val (ivf, _) = codebooks(spark, dir)
-    val per = notDeleted(spark, dir, spark.read.parquet(s"$dir/codes"))
+    val per = notDeleted(spark, dir, spark.read.schema(CodesSchema).parquet(s"$dir/codes"))
       .groupBy(col("cell")).agg(count(lit(1)).as("m"))
       .agg(coalesce(sum(col("m")), lit(0L)).as("n"),
         count(lit(1)).as("occ"), coalesce(max(col("m")), lit(0L)).as("mx"))
@@ -334,7 +352,7 @@ object AnnIndex {
     // MINUS its own prior append (run= is a partition column, so the
     // exclusion prunes those directories at the scan) —
     // DedupIndex.screen's excludeRun discipline
-    val codesBase = spark.read.parquet(s"$dir/codes")
+    val codesBase = spark.read.schema(CodesSchema).parquet(s"$dir/codes")
     val codesRuns = excludeRun.fold(codesBase)(r =>
       codesBase.filter(col("run") =!= r))
     val codesAll = notDeleted(spark, dir, codesRuns)
@@ -474,7 +492,7 @@ object AnnIndex {
 
   private def codebooks(spark: SparkSession,
                         dir: String): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
-    val rows = spark.read.parquet(s"$dir/codebooks")
+    val rows = spark.read.schema(CodebooksSchema).parquet(s"$dir/codebooks")
       .select(col("part"), col("m"), col("j"), col("c")).collect()
     val ivf = rows.filter(_.getString(0) == "ivf").sortBy(_.getInt(2))
       .map(_.getSeq[Double](3).toArray)

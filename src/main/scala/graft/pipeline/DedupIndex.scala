@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.ops.expressions.{MinHashSig, ShingleHashes}
 
 /** Incremental dedup screening: dedup a NEW batch of documents
@@ -86,7 +87,30 @@ object DedupIndex {
             lit(0L),
             (acc, v) => (acc * 31 + v) % lit(HashMod)))).as(Seq("band_idx", "band_hash")))
 
-  private val Tables = Seq("fingerprints", "shingles", "bands")
+  // Declared schema of each index table [[write]] lands, `run` (the
+  // partition column) last: screening and compaction read through
+  // `spark.read.schema(...)` and never run a schema-inference job.
+  // An old single-`fp` store would read `fp_hi` as NULL under this
+  // declaration, which is why [[requireWideLayout]] still checks each
+  // run directory's own footer before any of these reads.
+  // StoreSchemaSpec pins each declaration against the writer.
+  private[graft] val Schemas: scala.collection.immutable.ListMap[String, StructType] =
+    scala.collection.immutable.ListMap(
+      "fingerprints" -> "doc_id BIGINT, fp_hi BIGINT, fp_lo BIGINT, fp_len INT, run STRING",
+      "shingles" -> "doc_id BIGINT, hs ARRAY<BIGINT>, run STRING",
+      "bands" -> "doc_id BIGINT, band_idx INT, band_hash BIGINT, run STRING"
+    ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  private val Tables = Schemas.keys.toSeq
+
+  /** Table `t` of the index under its declared schema, restricted to
+    * `run=base` and approved runs, minus `excludeRun`. */
+  private def readRuns(spark: SparkSession, dir: String, t: String,
+                       ap: Set[String], excludeRun: Option[String] = None): DataFrame = {
+    val df = graft.ops.DeliveryMarker.approvedOnly(
+      spark.read.schema(Schemas(t)).parquet(s"$dir/$t"), ap)
+    excludeRun.fold(df)(r => df.filter(col("run") =!= lit(r)))
+  }
 
   /** Build (or rebuild) the index for a corpus. One scan of the
     * corpus text computes fingerprint + shingle set + minhash
@@ -178,10 +202,8 @@ object DedupIndex {
     requireWideLayout(spark, dir)
     val ap = graft.ops.DeliveryMarker.approved(spark, dir)
     Tables.foreach { t =>
-      val path = s"$dir/$t"
-      graft.ops.StoreCompaction.fold(spark, path, "run", "base",
-        graft.ops.DeliveryMarker.approvedOnly(
-          spark.read.parquet(path), ap).drop("run"))
+      graft.ops.StoreCompaction.fold(spark, s"$dir/$t", "run", "base",
+        readRuns(spark, dir, t, ap).drop("run"))
     }
     // markers clear only after the LAST table's fold (the unfolded
     // tables' approved partitions stay readable through the filter)
@@ -286,13 +308,8 @@ object DedupIndex {
           struct(col("jaccard"), negate(col("corpus_id")))).as("best"))
         .select(col("doc_id"), col("best.corpus_id").as("near_id"),
           col("best.jaccard").as("near_jaccard"))
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    def runs(path: String): DataFrame = {
-      val df = graft.ops.DeliveryMarker.approvedOnly(
-        spark.read.parquet(path), ap)
-      excludeRun.fold(df)(r => df.filter(col("run") =!= lit(r)))
-    }
-    val fps = runs(s"$dir/fingerprints")
+    val fps = readRuns(spark, dir, "fingerprints",
+        graft.ops.DeliveryMarker.approved(spark, dir), excludeRun)
         .select(col("doc_id").as("corpus_id"),
           col("fp_hi"), col("fp_lo"), col("fp_len"))
 
@@ -321,14 +338,9 @@ object DedupIndex {
                               broadcastMaxBands: Long = ProbeBroadcastMaxBands): DataFrame = {
     healAll(spark, dir) // complete any interrupted compaction first
     val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    def runs(path: String): DataFrame = {
-      val df = graft.ops.DeliveryMarker.approvedOnly(
-        spark.read.parquet(path), ap)
-      excludeRun.fold(df)(r => df.filter(col("run") =!= lit(r)))
-    }
-    val shs = runs(s"$dir/shingles")
+    val shs = readRuns(spark, dir, "shingles", ap, excludeRun)
       .select(col("doc_id").as("corpus_id"), col("hs").as("corpus_hs"))
-    val bands = runs(s"$dir/bands")
+    val bands = readRuns(spark, dir, "bands", ap, excludeRun)
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("corpus_id"))
     // Hard per-bucket cap on the INDEX side (q24/q29/q34's BucketCap
     // device, serving-probe form): a boilerplate flood puts ~10⁶

@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Persisted hybrid retrieval — the SERVED form of q111: build the
   * two ranker indexes once, absorb ingest batches incrementally,
@@ -47,10 +48,30 @@ import org.apache.spark.sql.functions._
   * cells) rows, ranks both sides on the bounded-heap
   * TopKPerKey/refine machinery, and fuses two O(queries·depth)
   * id-width rank tables with [[graft.queries.Search.rrfFuse]] — the
-  * ONE fusion definition shared with q111. */
+  * ONE fusion definition shared with q111. Serving reads every store
+  * under its declared schema (no schema-inference job) and lists only
+  * the query batch's `run=/tb=` bucket directories, so a search's
+  * metadata work follows the buckets it probes, not how many the
+  * store holds. */
 object HybridRetrieval {
 
-  private val TermBuckets = 64
+  private[graft] val TermBuckets = 64
+
+  // Declared store schemas, one per store [[writeLexical]] lands
+  // (the raw and ANN stores' live in [[AnnIndex]]): every read goes
+  // through `spark.read.schema(...)` and never runs a parquet
+  // schema-inference job. Partition columns come last, where
+  // partition discovery appends them; StoreSchemaSpec pins each
+  // declaration against the writers.
+  private[graft] val PostingsSchema = StructType.fromDDL(
+    "th BIGINT, doc_id BIGINT, dl DOUBLE, tf BIGINT, run STRING, tb INT")
+  private[graft] val TermstatsSchema =
+    StructType.fromDDL("th BIGINT, df BIGINT, run STRING, tb INT")
+  private[graft] val StatsSchema =
+    StructType.fromDDL("n BIGINT, sumdl BIGINT, run STRING")
+
+  private def readRaw(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(AnnIndex.RawSchema).parquet(s"$dir/raw")
 
   private def tokenHashes(c: Column) =
     array_distinct(graft.ops.expressions.TokenHashes(c))
@@ -206,7 +227,7 @@ object HybridRetrieval {
         runsOf(spark, s"$dir/ann/codes")
       missing.toSeq.sorted.foreach { r =>
         AnnIndex.append(spark,
-          spark.read.parquet(s"$dir/raw").where(col("run") === r)
+          readRaw(spark, dir).where(col("run") === r)
             .select(col("vec_id"), col("vec")),
           s"$dir/ann", r)
       }
@@ -233,19 +254,20 @@ object HybridRetrieval {
     * serve-time integer sums read identically before and after. */
   def compact(spark: SparkSession, dir: String): Unit = {
     val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    def ok(df: DataFrame) = graft.ops.DeliveryMarker.approvedOnly(df, ap)
+    def read(store: String, schema: StructType) = graft.ops.DeliveryMarker
+      .approvedOnly(spark.read.schema(schema).parquet(s"$dir/$store"), ap).drop("run")
     graft.ops.StoreCompaction.fold(spark, s"$dir/postings", "run", "base",
-      ok(spark.read.parquet(s"$dir/postings")).drop("run"), Seq("tb"))
+      read("postings", PostingsSchema), Seq("tb"))
     graft.ops.StoreCompaction.fold(spark, s"$dir/termstats", "run", "base",
-      ok(spark.read.parquet(s"$dir/termstats")).drop("run")
+      read("termstats", TermstatsSchema)
         .groupBy(col("th"), col("tb")).agg(sum(col("df")).as("df"))
         .select(col("th"), col("df"), col("tb")), Seq("tb"))
     graft.ops.StoreCompaction.fold(spark, s"$dir/stats", "run", "base",
-      ok(spark.read.parquet(s"$dir/stats")).drop("run")
+      read("stats", StatsSchema)
         .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl")),
       Nil)
     graft.ops.StoreCompaction.fold(spark, s"$dir/raw", "run", "base",
-      ok(spark.read.parquet(s"$dir/raw")).drop("run"), Nil)
+      read("raw", AnnIndex.RawSchema), Nil)
     // an UNAPPROVED raw run was just dropped, but the heal-on-append
     // loop may already have encoded it into codes — delete those
     // code runs BEFORE the codes fold, or the retry's re-encode
@@ -321,8 +343,7 @@ object HybridRetrieval {
         // (HybridRetrievalSpec pins row equivalence on the gate
         // corpus), so any serving divergence is attributable to the
         // ANN ranker alone.
-        val semAll = graft.ops.DeliveryMarker.approvedOnly(
-            spark.read.parquet(s"$dir/raw"), ap)
+        val semAll = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
           .select(col("vec_id").as("doc_id"), col("vec"))
           .crossJoin(broadcast(qv))
           .select(col("query_id"), col("doc_id"),
@@ -330,8 +351,7 @@ object HybridRetrieval {
         graft.plans.TopK.perKey(semAll, Seq("query_id"),
           Seq("cos" -> false, "doc_id" -> true), depth, rankCol = "srank")
       } else {
-        val raw = graft.ops.DeliveryMarker.approvedOnly(
-          spark.read.parquet(s"$dir/raw"), ap)
+        val raw = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
         AnnIndex.searchRefined(spark, qv, s"$dir/ann", raw, k = depth)
           .select(col("query_id"), col("vec_id").as("doc_id"),
             col("rn").cast("int").as("srank"))
@@ -397,8 +417,7 @@ object HybridRetrieval {
     // mining while its postings were filtered out of the term-sharing
     // exclusion — a doc sharing query terms could be emitted as a
     // "zero-shared-term" hard negative, contaminating training data
-    val raw = graft.ops.DeliveryMarker.approvedOnly(
-      spark.read.parquet(s"$dir/raw"), ap)
+    val raw = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
     val cand = AnnIndex.searchRefined(spark, qv, s"$dir/ann", raw,
         k = d, nprobe = nprobe, keepVec = true, exclude = Some(sharers))
       .select(col("query_id"), col("vec_id").as("doc_id"), col("cand_vec"))
@@ -439,7 +458,7 @@ object HybridRetrieval {
     // degrades to semantic-only fusion (the q111 paraphrase law's
     // posture: absent ranker pools weaken ranking, never crash it)
     val st = graft.ops.DeliveryMarker.approvedOnly(
-        spark.read.parquet(s"$dir/stats"), ap)
+        spark.read.schema(StatsSchema).parquet(s"$dir/stats"), ap)
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("sumdl")), lit(0L)).as("sumdl")).head()
     val (n, sumdl) = (st.getLong(0).toDouble, st.getLong(1).toDouble)
@@ -450,7 +469,7 @@ object HybridRetrieval {
         Seq("query_id"), Seq("score_u" -> false, "doc_id" -> true),
         depth, rankCol = "lrank")
     val (qt, terms, pruned) = prunedPostings(spark, queries, dir, ap)
-    val dfs = prunedScan(spark, terms, s"$dir/termstats", ap)
+    val dfs = prunedScan(spark, terms, s"$dir/termstats", TermstatsSchema, ap)
       .groupBy(col("th")).agg(sum(col("df")).as("df"))
     val matched = pruned
       .join(broadcast(qt), "th")
@@ -474,11 +493,39 @@ object HybridRetrieval {
     * the postings and the termstats scans (a collect per scan would
     * re-execute the query batch's upstream plan per store, and a
     * non-deterministic batch could even prune the two stores
-    * inconsistently, silently dropping terms' df rows). */
-  private def prunedScan(spark: SparkSession, terms: Array[Long],
-                         path: String, ap: Set[String]): DataFrame = {
+    * inconsistently, silently dropping terms' df rows).
+    *
+    * The scan reads under the store's declared `schema` and opens only
+    * the batch's bucket directories: one Hadoop `listStatus` of
+    * the root names the `run=` directories, one per approved run names
+    * its `tb=` directories, and only the query buckets' are read
+    * (`basePath` keeps `run` and `tb` as partition columns). Nothing
+    * lists the other buckets, and no directory matching yields an
+    * empty frame of the declared schema. Past Spark's 32-path
+    * threshold a batch's directories list in Spark's own parallel
+    * job, as a whole-store read did. The marker and partition filters
+    * below still apply. */
+  private def prunedScan(spark: SparkSession, terms: Array[Long], path: String,
+                         schema: StructType, ap: Set[String]): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     val buckets = terms.map(_ % TermBuckets).distinct
-    graft.ops.DeliveryMarker.approvedOnly(spark.read.parquet(path), ap)
+    val wanted = buckets.map(b => s"tb=$b").toSet
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def subdirs(p: Path) = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
+    def approved(runDir: String) = runDir.startsWith("run=") && {
+      val r = unescapePathName(runDir.stripPrefix("run="))
+      r == "base" || ap(r)
+    }
+    val leaves = subdirs(root).filter(p => approved(p.getName))
+      .flatMap(subdirs).filter(p => wanted(p.getName))
+    val scan =
+      if (leaves.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).option("basePath", path)
+        .parquet(leaves.map(_.toString).toIndexedSeq: _*)
+    graft.ops.DeliveryMarker.approvedOnly(scan, ap)
       .filter(col("tb").isin(buckets: _*) && col("th").isin(terms: _*))
   }
 
@@ -501,7 +548,7 @@ object HybridRetrieval {
     val qt = queries
       .select(col("query_id"), explode(tokenHashes(col("qtext"))).as("th"))
     val terms = qt.select(col("th")).distinct().as[Long].collect()
-    (qt, terms, prunedScan(spark, terms, s"$dir/postings", ap))
+    (qt, terms, prunedScan(spark, terms, s"$dir/postings", PostingsSchema, ap))
   }
 
   /** The lexical-ranker scan over the stores (spec hook: partition

@@ -54,7 +54,7 @@ object AnnScreenStream {
     AnnIndex.compact(spark, indexDir)
     val rd = rawDir(indexDir)
     graft.ops.StoreCompaction.fold(spark, rd, "run", "base",
-      spark.read.parquet(rd).drop("run"))
+      spark.read.schema(AnnIndex.RawSchema).parquet(rd).drop("run"))
   }
 
   /** One checkpointed pass over whatever vector files are new in
@@ -87,7 +87,7 @@ object AnnScreenStream {
     val b = batch.select(col("vec_id"), col("vec")).cache()
     try {
       graft.ops.StoreCompaction.heal(spark, rawDir(indexDir), "run")
-      val raw = spark.read.parquet(rawDir(indexDir))
+      val raw = spark.read.schema(AnnIndex.RawSchema).parquet(rawDir(indexDir))
         .select(col("vec_id"), col("vec"))
       val verdicts = AnnIndex.screenSemantic(spark, b, indexDir, raw, tau,
         excludeRun = Some(s"b$batchId")).cache()

@@ -152,6 +152,28 @@ class HybridRetrievalSpec extends AnyFunSuite {
         Seq((0L, "alpha")).toDF("query_id", "qtext"), dir)
       .select($"doc_id").as[Long].collect()
     assert(got.toSeq == Seq(42L), s"lone document not served: ${got.toSeq}")
+
+    // a batch whose terms hash only to buckets the store never wrote:
+    // the scan opens no directory, the lexical pool is empty, and the
+    // semantic ranker alone serves the query
+    import graft.pipeline.HybridRetrieval
+    val present = new java.io.File(s"$dir/postings/run=base").list()
+      .filter(_.startsWith("tb=")).map(_.stripPrefix("tb=").toLong).toSet
+    val absent = (0 until 200).map(i => s"zq$i").toDF("w")
+      .select($"w", explode(graft.ops.expressions.TokenHashes($"w")).as("th"))
+      .as[(String, Long)].collect()
+      .filter { case (_, th) => !present(th % HybridRetrieval.TermBuckets) }
+      .take(2).map(_._1)
+    assert(absent.length == 2, s"no absent-bucket terms among probes: $present")
+    val qAbsent = Seq((0L, absent.mkString(" "))).toDF("query_id", "qtext")
+    assert(HybridRetrieval.lexPlan(spark, qAbsent, dir).inputFiles.isEmpty,
+      "absent buckets must open no postings directory")
+    assert(HybridRetrieval.lexRanks(spark, qAbsent, dir).collect().isEmpty,
+      "absent buckets must give an empty lexical pool")
+    val semOnly = HybridRetrieval.search(spark, qAbsent, dir)
+      .select($"doc_id").as[Long].collect()
+    assert(semOnly.toSeq == Seq(42L),
+      s"absent-bucket batch must fall back to semantic-only fusion: ${semOnly.toSeq}")
   }
 
   test("a token-less store serves empty (semantic-only degrade), and a token-less query returns zero rows") {
@@ -199,6 +221,13 @@ class HybridRetrievalSpec extends AnyFunSuite {
     assert(byQ.contains(0L) && byQ(0L).nonEmpty, "well-formed query lost")
     assert(!byQ.contains(1L),
       "token-less query must be omitted per the no-results convention")
+    // a batch of ONLY token-less queries prunes to no bucket at all
+    // and serves zero rows
+    val blank = Seq((0L, " "), (1L, "")).toDF("query_id", "qtext")
+    assert(HybridRetrieval.lexPlan(spark, blank, dir2).inputFiles.isEmpty,
+      "a token-less batch must open no postings directory")
+    assert(HybridRetrieval.search(spark, blank, dir2).collect().isEmpty,
+      "a token-less batch must serve zero rows")
   }
 
   test("a crashed encode heals on the next append (raw run missing from codes is re-encoded)") {
@@ -514,6 +543,12 @@ class HybridRetrievalSpec extends AnyFunSuite {
       .select($"doc_id", $"rn").as[(Long, Long)].collect().toMap
     assert(hidden == before,
       s"unacknowledged run must be invisible to search: $hidden vs $before")
+    // the bucket listing itself skips the unapproved run's directories
+    def scanned(): Seq[String] =
+      HybridRetrieval.lexPlan(spark, qdf, root).inputFiles.toSeq
+    assert(scanned().exists(_.contains("/run=base/tb=")) &&
+      !scanned().exists(_.contains("/run=bX/")),
+      s"listing must read base buckets and skip the unapproved run: ${scanned()}")
     // ... and invisible to MINING too (r18 review find): doc 500
     // shares both query terms, but with its postings marker-filtered
     // and its raw vectors visible it would pass the zero-shared-term
@@ -537,5 +572,45 @@ class HybridRetrievalSpec extends AnyFunSuite {
       .select($"doc_id", $"rn").as[(Long, Long)].collect().toMap
     assert(after.contains(500L),
       s"retried delivery must surface the appended doc: $after")
+    // once approved, the run's bucket directories are listed too
+    assert(scanned().exists(_.contains("/run=bX/tb=")) &&
+      scanned().exists(_.contains("/run=base/tb=")),
+      s"listing must include the approved run's buckets: ${scanned()}")
+  }
+
+  test("a search runs no store-metadata job: no leaf-listing job, no parquet schema inference") {
+    // every store read is under a declared schema and the bucket scan
+    // lists its own directories without a job, so the only jobs a
+    // search runs are its own (term collect, stats, codebooks, cells,
+    // result) — never Spark's parallel leaf listing nor a `parquet at`
+    // schema-inference stage
+    import graft.pipeline.HybridRetrieval
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-hybrid-meta").toString + "/idx"
+    HybridRetrieval.build(spark, docs, root)
+    HybridRetrieval.append(spark,
+      Seq((700L, "alpha gamma delta")).toDF("doc_id", "text"), root, "b1")
+    val qdf = Seq((0L, "alpha beta"), (1L, "junk101x3 mid4")).toDF("query_id", "qtext")
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add((Option(j.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""),
+          j.stageInfos.map(_.name)))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val rows = try {
+      val r = HybridRetrieval.search(spark, qdf, root).collect()
+      org.apache.spark.ListenerShim.flush(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq
+    assert(rows.nonEmpty && seen.nonEmpty, s"search served nothing: $seen")
+    val listing = seen.filter(_._1.contains("Listing leaf files"))
+    assert(listing.isEmpty, s"search ran leaf-listing jobs: $listing")
+    val inference = seen.flatMap(_._2).filter(_.startsWith("parquet at"))
+    assert(inference.isEmpty, s"search ran parquet schema-inference stages: $inference")
   }
 }
