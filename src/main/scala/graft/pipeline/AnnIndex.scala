@@ -326,7 +326,7 @@ object AnnIndex {
     val centsSeq: Seq[Seq[Double]] = ivf.map(_.toSeq).toSeq
     val pqSeq: Seq[Seq[Seq[Double]]] = pq.map(_.map(_.toSeq).toSeq).toSeq
     val wc = Window.partitionBy(col("query_id")).orderBy(col("sc").desc, col("cell"))
-    val probes = broadcast(queries
+    val probePlan = queries
       .select(col("query_id"), col("qvec"),
         posexplode(typedLit(centsSeq)).as(Seq("cell", "cvec")))
       .select(col("query_id"), col("qvec"), col("cell"),
@@ -336,17 +336,24 @@ object AnnIndex {
       // the query's residual is PER PROBED CELL (IVFADC)
       .select(col("query_id"), col("cell"),
         zip_with(col("qvec"), centAt(ivf, col("cell")), (a, b) => a - b)
-          .as("qrv")))
-    // the probed cells, driver-side (bounded: ≤ IvfK distinct
-    // values): an isin on the hive partition column prunes every
-    // other inverted-list directory at the scan. A LARGE query
-    // batch probes most cells — the isin then prunes nothing and
-    // degenerates to a full-scan row filter — so past half the
-    // lists the predicate is dropped and the cell equi-join below
-    // does the filtering alone (the join IS the probe; rows of
-    // unprobed cells hash to no probe row and die in the join).
-    val cells = probes.select(col("cell")).distinct()
-      .collect().map(_.getInt(0).asInstanceOf[Any]).toSeq
+          .as("qrv"))
+    // the cell ranking runs ONCE: its probe rows (query_id, cell, qrv;
+    // ≤ queries·nprobe) are collected, name the probed cells, and come
+    // back as the broadcast side of the codes join below. A search
+    // collects only rows its plan broadcasts anyway, so driver memory
+    // stays on the order of what the broadcast needs.
+    val probeRows = probePlan.collect()
+    val probes = broadcast(spark.createDataFrame(
+      java.util.Arrays.asList(probeRows: _*), probePlan.schema))
+    // the probed cells (bounded: ≤ IvfK distinct values): an isin on
+    // the hive partition column prunes every other inverted-list
+    // directory at the scan. A LARGE query batch probes most cells —
+    // the isin then prunes nothing and degenerates to a full-scan row
+    // filter — so past half the lists the predicate is dropped and
+    // the cell equi-join below does the filtering alone (the join IS
+    // the probe; rows of unprobed cells hash to no probe row and die
+    // in the join).
+    val cells = probeRows.map(_.getInt(1)).distinct.sorted.toSeq
     graft.ops.StoreCompaction.heal(spark, s"$dir/codes", "run")
     // excludeRun: a re-delivered screening batch probes the index
     // MINUS its own prior append (run= is a partition column, so the

@@ -293,23 +293,32 @@ object HybridRetrieval {
   /** Serve a query batch: (query_id LONG, qtext STRING) →
     * (query_id, doc_id, rrf_nano, rn), top-`k` fused per query.
     *
-    * Lexical: the batch's term hashes collect to the driver (bounded
-    * — a query batch is human-sized) and prune the postings AND
-    * termstats scans to their `tb` buckets; df folds by summing the
+    * Lexical: the approved runs' `stats` rows (one per run) fold on
+    * the driver into (n, sumdl); the batch's (query_id, th) rows
+    * collect once (bounded — a query batch is human-sized), name the
+    * `tb` buckets the postings AND termstats scans open, and are the
+    * broadcast side of the postings join; df folds by summing the
     * pruned deltas; matched postings score the shared bm25Contrib
     * formula, micro-rounded PER TERM so the per-doc BIGINT sum is
     * shuffle-order-free, and rank on TopKPerKey. Semantic: unit
     * query embeddings through [[AnnIndex.searchRefined]] against the
     * stored codes + raw side store — for unit vectors the exact-L2
-    * refine rank IS the cosine rank. Fusion:
-    * [[graft.queries.Search.rrfFuse]]. A query whose terms none of
-    * the corpus contains simply has no lexical pool — the semantic
-    * ranker still serves it (q111's paraphrase law, held by the
-    * served path too). A query absent from BOTH pools (token-less
-    * qtext: no lexical terms AND a null-filtered embedding) returns
-    * ZERO rows rather than a marker row — rrfFuse's documented
-    * no-results convention; left-join to the query set for
-    * per-query accounting. */
+    * refine rank IS the cosine rank; its probe rows collect once in
+    * the same way. Fusion: [[graft.queries.Search.rrfFuse]].
+    *
+    * Before the result job a search runs four driver-side collects,
+    * each once: the stats rows, the query terms, the codebooks and
+    * the probe rows. Invariant: a search collects only rows its plan
+    * broadcasts anyway (or folds into literals), so driver memory
+    * stays on the order of what the broadcasts need.
+    *
+    * A query whose terms none of the corpus contains simply has no
+    * lexical pool — the semantic ranker still serves it (q111's
+    * paraphrase law, held by the served path too). A query absent
+    * from BOTH pools (token-less qtext: no lexical terms AND a
+    * null-filtered embedding) returns ZERO rows rather than a marker
+    * row — rrfFuse's documented no-results convention; left-join to
+    * the query set for per-query accounting. */
   def search(spark: SparkSession, queries: DataFrame, dir: String,
              k: Int = 10, denseExact: Boolean = false): DataFrame = {
     // the approved-run set is listed ONCE per search and threaded to
@@ -444,24 +453,25 @@ object HybridRetrieval {
     // None = standalone call (spec hooks): list markers here, once
     val ap = approvedRuns.getOrElse(
       graft.ops.DeliveryMarker.approved(spark, dir))
-    // heal BEFORE the first read (r18): the stats aggregate below is
-    // EAGER (.head()), and it used to run before prunedPostings'
-    // heal pass — a compaction of the stats store interrupted in the
-    // committed window (run dirs deleted, snapshot still in the
-    // hidden tmp dir) would read n = 0 and silently serve
-    // semantic-only fusion instead of healing first
+    // heal BEFORE the first read (r18): the stats read below is
+    // EAGER, and it used to run before prunedPostings' heal pass — a
+    // compaction of the stats store interrupted in the committed
+    // window (run dirs deleted, snapshot still in the hidden tmp dir)
+    // would read n = 0 and silently serve semantic-only fusion
+    // instead of healing first
     healStores(spark, dir)
-    // coalesced: a store built/appended from ONLY empty or token-less
-    // batches wrote null sum(dl) aggregates (and n = 0); getLong on
-    // that null is an NPE, and n = 0 would NaN every BM25 idf — so
+    // one row per approved run, folded on the driver (a scan, no
+    // aggregate shuffle). Nulls count as 0: a store built/appended
+    // from ONLY empty or token-less batches wrote null sum(dl)
+    // aggregates (and n = 0), and n = 0 would NaN every BM25 idf — so
     // the lexical ranker short-circuits to an EMPTY pool and search()
     // degrades to semantic-only fusion (the q111 paraphrase law's
     // posture: absent ranker pools weaken ranking, never crash it)
-    val st = graft.ops.DeliveryMarker.approvedOnly(
+    val runStats = graft.ops.DeliveryMarker.approvedOnly(
         spark.read.schema(StatsSchema).parquet(s"$dir/stats"), ap)
-      .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
-        coalesce(sum(col("sumdl")), lit(0L)).as("sumdl")).head()
-    val (n, sumdl) = (st.getLong(0).toDouble, st.getLong(1).toDouble)
+      .select(col("n"), col("sumdl")).collect()
+    def total(i: Int) = runStats.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
+    val (n, sumdl) = (total(0).toDouble, total(1).toDouble)
     if (n == 0)
       return graft.plans.TopK.perKey(
         queries.select(col("query_id"), lit(0L).as("doc_id"),
@@ -488,10 +498,11 @@ object HybridRetrieval {
   /** ONE definition of the term-pruned store read (lexRanks AND the
     * plan-pin spec hook go through it, so the pinned scan shape IS
     * the serving shape): filter a `tb`-partitioned store down to the
-    * query batch's terms. Takes the ALREADY-COLLECTED term array —
-    * the one driver-side collect in [[prunedPostings]] feeds both
-    * the postings and the termstats scans (a collect per scan would
-    * re-execute the query batch's upstream plan per store, and a
+    * query batch's terms. Takes the term array [[prunedPostings]]
+    * derives from its one collect of the batch's (query_id, th) rows,
+    * so the postings and termstats scans prune on the terms the
+    * postings join broadcasts (a collect per scan would re-execute
+    * the query batch's upstream plan per store, and a
     * non-deterministic batch could even prune the two stores
     * inconsistently, silently dropping terms' df rows).
     *
@@ -537,17 +548,25 @@ object HybridRetrieval {
     Seq("postings", "termstats", "stats", "raw")
       .foreach(s => graft.ops.StoreCompaction.heal(spark, s"$dir/$s", "run"))
 
-  /** Callers MUST [[healStores]] before this (every serving entry
+  /** The batch's (query_id, th) table, its distinct terms and the
+    * postings scan pruned to them. The batch is tokenized and its
+    * (query_id, th) rows collected ONCE: the terms come from those
+    * rows on the driver (sorted, so the pruning predicate reads the
+    * same for the same batch), and the same rows come back as a
+    * local relation, the broadcast side of the `th` joins downstream.
+    *
+    * Callers MUST [[healStores]] before this (every serving entry
     * point — lexRanks, hardNegatives, lexPlan — does, exactly once;
     * healing here too would double the remote-FS existence checks on
     * the hot path). */
   private def prunedPostings(spark: SparkSession, queries: DataFrame,
                              dir: String, ap: Set[String])
       : (DataFrame, Array[Long], DataFrame) = {
-    import spark.implicits._
-    val qt = queries
+    val qtPlan = queries
       .select(col("query_id"), explode(tokenHashes(col("qtext"))).as("th"))
-    val terms = qt.select(col("th")).distinct().as[Long].collect()
+    val qtRows = qtPlan.collect()
+    val qt = spark.createDataFrame(java.util.Arrays.asList(qtRows: _*), qtPlan.schema)
+    val terms = qtRows.map(_.getLong(1)).distinct.sorted
     (qt, terms, prunedScan(spark, terms, s"$dir/postings", PostingsSchema, ap))
   }
 

@@ -112,12 +112,12 @@ object Search {
     * doc embedding (persisted for the two ranker consumers); corpus
     * stats are a 1-row broadcast; each ranker ends in the
     * bounded-heap TopKPerKey (never a whole-corpus window); the
-    * fusion joins two O(queries·depth) id-width rank tables —
-    * nothing downstream of the scan is O(corpus) except the two
-    * ranker passes themselves. Determinism: ranks come from
-    * (score desc, doc_id) total orders; the RRF sum is two IEEE
-    * divisions of exact inputs folded in fixed ranker order, then
-    * nano-rounded — both engines bit-agree. */
+    * fusion sums over the union of two O(queries·depth) id-width
+    * rank tables — nothing downstream of the scan is O(corpus)
+    * except the two ranker passes themselves. Determinism: ranks
+    * come from (score desc, doc_id) total orders; the RRF sum is at
+    * most two IEEE divisions of exact inputs (a two-addend IEEE sum
+    * is order-free), then nano-rounded — both engines bit-agree. */
   private[graft] def hybridRrf(docs: DataFrame,
                                queries: Seq[(Int, String)] = RrfQueries): DataFrame = {
     val (lex, sem) = rrfRankers(docs, queries)
@@ -282,17 +282,21 @@ object Search {
                              topN: Int = RrfTopN): DataFrame = {
     val spark = lex.sparkSession
     import spark.implicits._
-    val fused = lex.select($"query_id", $"doc_id", $"lrank")
-      .join(sem.select($"query_id", $"doc_id", $"srank"),
-        Seq("query_id", "doc_id"), "full_outer")
-      .select($"query_id", $"doc_id",
-        floor((coalesce(lit(1.0) / (lit(RrfK) + $"lrank"), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(RrfK) + $"srank"), lit(0.0))) * lit(1e9) +
-          lit(0.5)).cast("bigint").as("rrf_nano"))
+    // one 1/(RrfK + rank) term per (ranker, query, doc) row, summed per
+    // (query, doc): each ranker pools a doc at most once per query, so
+    // a doc has one or two addends, and 0.0 + a + b is bit-exact in
+    // either order (IEEE addition commutes; 0.0 + a == a)
+    def terms(ranks: DataFrame, rank: String) = ranks
+      .select($"query_id", $"doc_id", (lit(1.0) / (lit(RrfK) + col(rank))).as("t"))
+    val fused = terms(lex, "lrank").unionByName(terms(sem, "srank"))
+      .groupBy($"query_id", $"doc_id")
+      .agg(floor(sum($"t") * lit(1e9) + lit(0.5)).cast("bigint").as("rrf_nano"))
+    // O(queries·topN) rows: one sorted partition is a total order
+    // without the range-partitioning sample job a global orderBy runs
     graft.plans.TopK.perKey(fused, Seq("query_id"),
       Seq("rrf_nano" -> false, "doc_id" -> true), topN, rankCol = "rn")
       .select($"query_id", $"doc_id", $"rrf_nano", $"rn".cast("bigint").as("rn"))
-      .orderBy($"query_id", $"rn")
+      .coalesce(1).sortWithinPartitions($"query_id", $"rn")
   }
 
   /** The q158 chain over the two rank tables (spec hook: planted

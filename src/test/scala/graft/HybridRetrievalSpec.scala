@@ -56,8 +56,8 @@ class HybridRetrievalSpec extends AnyFunSuite {
   }
 
   test("search heals an interrupted stats-store compaction BEFORE its eager stats read") {
-    // The r18 ordering fix: lexRanks' BM25 totals aggregate executes
-    // eagerly (.head()) and used to run before the heal pass — a
+    // The r18 ordering fix: lexRanks' BM25 totals read executes
+    // eagerly (a collect) and used to run before the heal pass — a
     // compaction of the stats store crashed in the COMMITTED window
     // (marker present, run dirs deleted, snapshot in the hidden tmp
     // dir) read n = 0 and silently served semantic-only fusion. The
@@ -459,6 +459,28 @@ class HybridRetrievalSpec extends AnyFunSuite {
     spark.catalog.clearCache() // hybridRrf persist contract
   }
 
+  test("rrfFuse closed form: shared, lexical-only and semantic-only docs, a tie broken by doc_id") {
+    // planted pools, query 0: doc 10 in both (lrank 1, srank 3), doc
+    // 40 lexical-only (lrank 2), docs 50 and 20 semantic-only (srank
+    // 1, 2) — docs 40 and 20 tie at 1/62 and doc_id orders them;
+    // query 1 has a semantic pool only
+    val lex = Seq((0L, 10L, 1), (0L, 40L, 2)).toDF("query_id", "doc_id", "lrank")
+    val sem = Seq((0L, 50L, 1), (0L, 20L, 2), (0L, 10L, 3), (1L, 20L, 1))
+      .toDF("query_id", "doc_id", "srank")
+    def nano(x: Double) = math.floor(x * 1e9 + 0.5).toLong
+    val expected = Seq(
+      (0L, 10L, nano(1.0 / (60 + 1) + 1.0 / (60 + 3)), 1L),
+      (0L, 50L, nano(1.0 / (60 + 1)), 2L),
+      (0L, 20L, nano(1.0 / (60 + 2)), 3L),
+      (0L, 40L, nano(1.0 / (60 + 2)), 4L),
+      (1L, 20L, nano(1.0 / (60 + 1)), 1L))
+    def fuse(topN: Int) = graft.queries.Search.rrfFuse(lex, sem, topN)
+      .as[(Long, Long, Long, Long)].collect().toSeq
+    // collected in (query_id, rn) order, values bit-exact
+    assert(fuse(10) == expected, s"fused rows: ${fuse(10)}")
+    assert(fuse(3) == expected.filterNot(_._4 > 3), s"top-3 rows: ${fuse(3)}")
+  }
+
   test("q158 rank overlap: identical lists score AO 1 / RBO 1-2^-k, disjoint 0, hand-overlap exact") {
     import org.apache.spark.sql.DataFrame
     def ranks(col: String, ids: Seq[Long]): DataFrame =
@@ -581,9 +603,10 @@ class HybridRetrievalSpec extends AnyFunSuite {
   test("a search runs no store-metadata job: no leaf-listing job, no parquet schema inference") {
     // every store read is under a declared schema and the bucket scan
     // lists its own directories without a job, so the only jobs a
-    // search runs are its own (term collect, stats, codebooks, cells,
-    // result) — never Spark's parallel leaf listing nor a `parquet at`
-    // schema-inference stage
+    // search runs are its own: one collect each of the stats rows, the
+    // query terms, the codebooks and the probe rows, then the result's
+    // query stages and broadcasts — never Spark's parallel leaf
+    // listing nor a `parquet at` schema-inference stage
     import graft.pipeline.HybridRetrieval
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = java.nio.file.Files
@@ -612,5 +635,8 @@ class HybridRetrievalSpec extends AnyFunSuite {
     assert(listing.isEmpty, s"search ran leaf-listing jobs: $listing")
     val inference = seen.flatMap(_._2).filter(_.startsWith("parquet at"))
     assert(inference.isEmpty, s"search ran parquet schema-inference stages: $inference")
+    // each driver-side read runs once and fusion needs no sampling
+    // job: one search runs 16 jobs on this fixture
+    assert(seen.size <= 16, s"search ran ${seen.size} jobs: ${seen.map(_._2)}")
   }
 }
