@@ -1,10 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: print the formatted physical plan of one or more
   * catalog queries (all of them with no names given) —
-  * `runMain graft.Explain <sfDir> [query...]`. Same session config
-  * as Verify, so what prints here is what the gate executes.
+  * `runMain graft.Explain <sfDir> [query...]`. The session comes from
+  * [[GraftSession]], as Verify's does, so what prints here is what
+  * the gate executes.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -12,16 +12,7 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     names.foreach { n =>
       println(s"\n==== $n ====")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool (the [[Explain]] convention): print the formatted
@@ -10,61 +9,27 @@ import org.apache.spark.sql.functions._
   * during construction and the returned frame is just the final
   * rank projection. `runMain graft.ExplainPageRank <sfDir>` builds
   * the same citation edge frame q101 ranks, materializes the
-  * loop-invariant state exactly as run() does, and explains the
-  * first round's `next` frame (the shape every round repeats).
-  * Committed as plans/r19/q101_pagerank_round_after.txt.
+  * loop-invariant (src, dst, outdeg) frame and sparse rank state as
+  * run() does, and explains the first round's `next` frame (the
+  * shape every round repeats). Committed as
+  * plans/r19/q101_pagerank_round_after.txt.
   */
 object ExplainPageRank {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     import spark.implicits._
     val e = graft.queries.CitationStage.edges(spark, sfDir)
-    val nodes = e.select($"src".as("node"))
-      .union(e.select($"dst".as("node")))
-      .distinct().localCheckpoint()
-    // ---- the r18 loop body (for the _before plan): lazy edge list
-    // re-derived per round, out-degree joined per round, dense rank
-    // state re-spined through nodes LEFT JOIN inflow per round
-    val outdegOld = e.groupBy($"src")
-      .agg(count(lit(1)).as("outdeg")).localCheckpoint()
-    val ranksOld = nodes.select($"node", lit(1000L).as("rm")).localCheckpoint()
-    val contribOld = e
-      .join(ranksOld.withColumnRenamed("node", "src"), Seq("src"))
-      .join(outdegOld, Seq("src"))
-      .select($"dst", floor($"rm".cast("double") / lit(1e6) /
-        $"outdeg".cast("double") * lit(1e6) + lit(0.5))
-        .cast("long").as("c"))
-    val inflowOld = contribOld.groupBy($"dst").agg(sum($"c").as("infl"))
-    val nextOld = nodes
-      .join(inflowOld.withColumnRenamed("dst", "node"), Seq("node"), "left")
-      .select($"node", (lit(100L) +
-        floor(lit(0.85) * coalesce($"infl", lit(0L)).cast("double")
-          + lit(0.5)).cast("long")).as("rm"))
-    println("==== pagerank_round_before ====")
-    nextOld.explain("formatted")
-    // ---- the r19 loop body: loop-invariant (src, dst, outdeg)
-    // checkpointed once, sparse in-edge-keyed rank state, no
-    // per-round node spine join. The round itself is the REAL
-    // operator's PageRank.roundBody (r19 advisor note: the explained
-    // plan must not drift from run()); the placeholder micro
-    // constants only stand in for the computed initMicro/baseMicro —
-    // both are literals in the plan either way.
     val ew = e
       .join(e.groupBy($"src").agg(count(lit(1)).as("outdeg")), Seq("src"))
       .select($"src", $"dst", $"outdeg")
       .localCheckpoint()
     val ranks = ew.select($"dst".as("node")).distinct()
       .select($"node", lit(1000L).as("rm")).localCheckpoint()
+    // the round is the real PageRank.roundBody, so the explained plan
+    // cannot drift from run(); the placeholder micro constants stand
+    // in for the computed initMicro/baseMicro — both are literals in
+    // the plan either way
     val next = graft.ops.PageRank.roundBody(
       ew, ranks, defaultRm = 900L, baseMicro = 100L, damping = 0.85)
     println("==== pagerank_round_after ====")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run [[graft.pipeline.CurationExport]] over a corpus at a
   * given byte target and print the output file-size histogram — the
   * §6 output-sizing receipt (OPTIMIZATION_r20.md).
@@ -12,16 +10,7 @@ object ExportSize {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(1).getOrElse("/tmp/graft-export-size")
     val target = args.lift(2).map(_.toLong)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(GraftSession.envCpus)
     graft.pipeline.CurationExport
       .run(spark, sfDir, outDir, targetFileBytes = target)
       .collect().foreach(r => println(s"[export] $r"))

@@ -67,11 +67,10 @@ object ScaleProbe {
       .otherwise(textOf(docId, bodyLen))
   }
 
-  /** The FIXED ingest batch for the screen-latency receipt (r18
-    * verdict #4): 500 docs at ids disjoint from every generated
-    * corpus, from the same generator — so ~25 are exact copies of
-    * template families the index holds, ~25 near-dups, the rest
-    * unique. Its derivation cost is CONSTANT across index scales by
+  /** The FIXED ingest batch for the screen-latency receipt: 500
+    * docs at ids disjoint from every generated corpus, from the same
+    * generator — so ~25 are exact copies of template families the
+    * index holds, ~25 near-dups, the rest unique. Its derivation cost is CONSTANT across index scales by
     * construction; what the probe measures is whether screening it
     * stays O(batch) as the index grows. */
   private[graft] def fixedScreenBatch(spark: SparkSession) =
@@ -227,19 +226,19 @@ object ScaleProbe {
     // the exact syndication matrix (one fingerprint pass, bounded
     // per-group pair fan-out)
     "q181_syndication",
-    // round-19 (r18 verdict #4): the incremental-screening latency
-    // receipt — NOT a gated query: DedupIndex.screen of the SAME
-    // fixed 500-doc batch against an index built over the 1× vs the
-    // mult× corpus. The O(batch)-not-O(corpus) claim
+    // the incremental-screening latency receipt — NOT a gated query:
+    // DedupIndex.screen of the SAME fixed 500-doc batch against an
+    // index built over the 1× vs the mult× corpus. The
+    // O(batch)-not-O(corpus) claim
     // (DedupIndex.scala screen scale-shape note) is structural
     // (band-key equi-joins, never a corpus scan); this measures it —
     // the receipt is a flat exponent (≈ 0) in INDEX size. Index
     // builds are untimed setup (the thing a daily ingest amortizes);
     // only the screen is timed.
     "dedup_screen",
-    // round-20 (r19 verdict #5): the SKEW receipt — no declared query
-    // trips AQE's skew threshold at sf0.1, so the salting devices
-    // (q19/q82) were structural claims without a measurement. Both
+    // the SKEW receipt — no declared query trips AQE's skew
+    // threshold at sf0.1, so the salting devices (q19/q82) were
+    // structural claims without a measurement. Both
     // probes join a planted-hot-key fact table (key 0 owns 40% of
     // rows — [[skewFact]]) against a dim table too big to broadcast
     // honestly at scale (MERGE-hinted so both variants compare the
@@ -259,7 +258,7 @@ object ScaleProbe {
     // over [[generateEdges]]' planted graph — same reason, and the
     // probe graph is DENSER than the gated derivation (8 edges/node,
     // local triangle structure) so the wedge/closure joins do real
-    // work at 10× (the round-15 verdict's ask).
+    // work at 10×.
 
   /** Salt fan-out of the skew probes (q82 uses 8; the probe matches). */
   private val SkewSalts = 8
@@ -347,7 +346,7 @@ object ScaleProbe {
       // keeps measuring their FULL chain (the exponent the README
       // table claims is the end-to-end one)
       graft.queries.NearDupStage.reset()
-      // q177/q179 read the memoized source-term count table (r19)
+      // q177/q179 read the memoized source-term count table
       graft.queries.SourceTermStage.reset()
       // chains that persist a derived stage (SparkEntry's cache
       // contract) would otherwise serve rep 2 from rep 1's cached
@@ -366,7 +365,7 @@ object ScaleProbe {
     * because the synthetic corpus's tokens-per-doc differs from
     * sf0.1's and the doc-ratio denominator under-normalizes exactly
     * the rows where fixed overhead can no longer hide a superlinear
-    * term (round-17 verdict #3). */
+    * term. */
   private val TokenNormalized = Set("q144_lang_confusion",
     "q153_source_kl", "q155_concentration", "q159_length_drift",
     "q173_padding_waste")
@@ -381,20 +380,14 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val work = args.headOption.getOrElse("/tmp/graft-scaleprobe")
     val baseDir = "/root/testdata/sf0.1"
-    // second scale point (r17): GRAFT_PROBE_MULT=30 pushes the
+    // second scale point: GRAFT_PROBE_MULT=30 pushes the
     // near-linear token counters to a corpus where fixed overhead
     // cannot hide a superlinear term
     val mult = sys.env.getOrElse("GRAFT_PROBE_MULT", "10").toInt
-    val cpus = Runtime.getRuntime.availableProcessors()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // dev-loop filter: probe only the named queries (unknown names
+    // refuse before any corpus is generated)
+    val probed = GraftSession.only("probe", sys.env.get("GRAFT_PROBE_ONLY"), Probed)
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors())
 
     val big = s"$work/sf1x$mult"
     generate(spark, big, mult)
@@ -402,20 +395,6 @@ object ScaleProbe {
     // is the scale side — both from the same planted-triangle shape
     generateEdges(spark, s"$work/g1x", 5000L)
     generateEdges(spark, s"$work/g10x", 5000L * mult)
-
-    // dev-loop filter (Bench's SPARK_GRAFT_BENCH_ONLY doctrine):
-    // probe only the named queries; unknown names REFUSE, a typo must
-    // not emit a plausible empty table
-    val only = sys.env.get("GRAFT_PROBE_ONLY").map(_.split(',').toSet)
-    only.foreach { o =>
-      val unknown = o -- Probed.toSet
-      if (unknown.nonEmpty) {
-        System.err.println(s"[probe] REFUSING: unknown GRAFT_PROBE_ONLY " +
-          s"names ${unknown.toSeq.sorted.mkString(",")}")
-        sys.exit(2)
-      }
-    }
-    val probed = Probed.filter(n => only.forall(_.contains(n)))
 
     // dedup_screen setup: prebuild the two indexes the screen-latency
     // receipt probes — UNTIMED, like the corpus generation above (the
@@ -434,7 +413,7 @@ object ScaleProbe {
         s"$work/idxbig")
     }
 
-    // skew-receipt setup (r19 verdict #5): planted-hot-key fact + dim
+    // skew-receipt setup: planted-hot-key fact + dim
     // at both scales — UNTIMED, like every other generator above —
     // and a one-shot equality check (25 rows) pinning that the salted
     // and plain variants compute the same table before their times

@@ -1,15 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name filter (dev loop —
     // the driver always passes two)
-    val (sfDir, outDir, only) = args match {
+    val (sfDir, outDir, filter) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o, f) => (s, o, Some(f))
       case _ =>
         System.err.println(
           "usage: graft.Verify <sfDir> <outDir> [queryFilter]\n" +
@@ -17,25 +18,12 @@ object Verify {
             "(dev loop; the driver always passes two args)")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // plain int64-micros timestamps in output parquet (pyarrow/
-      // DuckDB-friendly; INT96 is deprecated and reads differently)
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val queries = SparkEntry.queries
+    val names = GraftSession.only("verify", filter, queries.keys.toSeq)
+    val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -44,21 +32,10 @@ object Verify {
       // across the rest of the catalog
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control character: a tab or CR in
+    // builder-authored SQL must not break the driver's json.load
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new ObjectMapper().writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

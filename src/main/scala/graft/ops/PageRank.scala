@@ -47,8 +47,8 @@ object PageRank {
     * inflow, apply the damped update. `ranks == null` means the
     * uniform init state (every source holds `defaultRm`). Extracted
     * so [[graft.ExplainPageRank]] explains the SAME expressions the
-    * loop executes — the committed plan artifact cannot drift from
-    * the operator (r19 advisor note). */
+    * loop executes: the round plan it prints cannot drift from the
+    * operator. */
   private[graft] def roundBody(ew: DataFrame, ranks: DataFrame,
       defaultRm: Long, baseMicro: Long, damping: Double): DataFrame = {
     val spark = ew.sparkSession
@@ -78,9 +78,10 @@ object PageRank {
     val nodes = e.select($"src".as("node"))
       .union(e.select($"dst".as("node")))
       .distinct().localCheckpoint()
-    // r19 OPTIMIZATION (guide §2.4 remove shuffles outright) — two
-    // loop-shape changes, plan diff in
-    // plans/r19/q101_pagerank_round_{before,after}.txt:
+    // Two loop-shape choices remove per-round shuffles outright
+    // (the round-19 plan diff is committed as
+    // plans/r19/q101_pagerank_round_{before,after}.txt; the current
+    // round's plan prints with graft.ExplainPageRank):
     //  (1) The (src, dst, outdeg) frame is LOOP-INVARIANT, but the
     //      old loop re-derived the lazy edge list and re-joined
     //      out-degrees EVERY round — `rounds` extra edge derivations

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.{IntegerType, StringType}
   * only from the Column API.
   *
   * Registered via `spark.sql.extensions=graft.plans.GraftExtensions`
-  * (Verify/Bench/TestSpark session builders).
+  * (set in [[graft.GraftSession.local]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import graft.ops.expressions._

@@ -4,16 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    // events.parquet is TIMESTAMP(NANOS) — see Tables.events
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
 }
 
@@ -61,7 +52,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("q76 aggregated-levels builder equals the verbatim WITH RECURSIVE text") {
-    // r19 optimization guard: the builder no longer runs the
+    // optimization guard: the builder no longer runs the
     // recursive CTE (it aggregates (node, paths) per level so the
     // edge derivation scans once instead of once per UnionLoop
     // iteration); the CTE text still defines the semantics and runs
@@ -140,9 +131,9 @@ class RelationalSpec extends AnyFunSuite {
     // a sign-flipped refund. The out-of-domain pair must land in ONE
     // digit-0 bucket with null expected/χ² (the row is the audit
     // signal), and the Benford expectation must be computed over the
-    // 2 in-domain rows only — not 4 (round-15 advisor note: before
-    // this guard, cents=0 produced digit 0 → log10(∞) garbage on the
-    // Spark side and a cast fault in the DuckDB twin).
+    // 2 in-domain rows only — not 4 (without the guard, cents=0
+    // produces digit 0 → log10(∞) garbage on the Spark side and a
+    // cast fault in the DuckDB twin).
     val prices = Seq(1.00, 9.99, 0.0, -3.50).toDF("l_extendedprice")
     val out = graft.queries.Relational.benfordDigits(prices)
       .as[(Long, Long, Option[Long], Option[Long])].collect().toSeq
