@@ -19,7 +19,7 @@ object ExplainPageRank {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = GraftSession.local(GraftSession.envCpus)
     import spark.implicits._
-    val e = graft.queries.CitationStage.edges(spark, sfDir)
+    val e = graft.queries.Stages.citationEdges.get(spark, sfDir)
     val ew = e
       .join(e.groupBy($"src").agg(count(lit(1)).as("outdeg")), Seq("src"))
       .select($"src", $"dst", $"outdeg")

@@ -220,7 +220,7 @@ object ScaleProbe {
     "q178_secret_scan",
     // round-17 additions: the Burrows-Delta profile (the q151-family
     // token pass, O(sources·F) after) and the cluster-size spectrum
-    // (the full q24+CC chain — NearDupStage resets per rep — plus an
+    // (the full q24+CC chain — the stages reset per rep — plus an
     // O(clusters) rollup)
     "q179_stylometry", "q180_dup_spectrum",
     // the exact syndication matrix (one fingerprint pass, bounded
@@ -335,19 +335,11 @@ object ScaleProbe {
   private def time(spark: SparkSession, name: String, dir: String,
                    reps: Int = 2): Double =
     (1 to reps).map { _ =>
-      // full chain including training: of the probed set only q104
-      // (the shared ivf quantizer) and q174 (the probe weights)
-      // consume a SessionStage memo — reset them so every rep pays
-      // the whole pipeline, which is the thing whose scaling is
-      // being measured
-      graft.queries.TextVector.centsStageReset()
-      graft.queries.ProbeStage.reset()
-      // q147/q157 read the memoized pair stage — reset so the probe
-      // keeps measuring their FULL chain (the exponent the README
-      // table claims is the end-to-end one)
-      graft.queries.NearDupStage.reset()
-      // q177/q179 read the memoized source-term count table
-      graft.queries.SourceTermStage.reset()
+      // full chain including training: q104, q147, q157, q174, q177,
+      // q179 and q180 of the probed set read a SessionStage memo —
+      // reset every stage so each rep pays the whole pipeline, which
+      // is the thing whose scaling is being measured
+      graft.ops.SessionStage.resetAll()
       // chains that persist a derived stage (SparkEntry's cache
       // contract) would otherwise serve rep 2 from rep 1's cached
       // blocks — the min would then measure the CACHE, not the

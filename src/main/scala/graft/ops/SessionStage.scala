@@ -5,13 +5,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A stage materialized ONCE per (session, corpus dir) and shared by
-  * every consumer — the memo device behind
-  * [[graft.queries.NearDupStage]] (near-dup labels),
-  * [[graft.queries.BpeStage]] (trained merge table),
-  * [[graft.queries.ProbeStage]] (trained probe weights) and q104/
-  * q108's shared quantizer: a production pipeline builds its index/
-  * model state once and every reader consumes it, so query builders
-  * must not re-run training per invocation.
+  * every consumer: a production pipeline builds its index/model state
+  * once and every reader consumes it, so query builders must not
+  * re-run training per invocation. The catalog's stages are the vals
+  * of [[graft.queries.Stages]].
+  *
+  * Every stage has one `name`, registered at construction: it keys
+  * [[SessionStage.buildSecs]], [[SessionStage.readsIn]] and, for a
+  * [[ParquetStage]], the scratch path.
   *
   * Contract (shared by all instances, stated once here):
   *   - staleness: data under `dir` is IMMUTABLE for the session's
@@ -23,15 +24,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   - `buildCount`/`reset` are spec hooks (N consumers, one build;
   *     test isolation).
   */
-final class SessionStage[T](build: (SparkSession, String) => T,
-                            onDrop: T => Unit = (_: T) => (),
-                            metricName: String = "") {
+final class SessionStage[T](val name: String,
+                            build: (SparkSession, String) => T,
+                            onDrop: T => Unit = (_: T) => ()) {
+  SessionStage.register(this)
 
   private val cache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), T]
   private val builds = new AtomicInteger(0)
 
   def get(s: SparkSession, d: String): T = {
+    SessionStage.recordRead(name)
     cache.keys.filter(_._1.sparkContext.isStopped).foreach { k =>
       cache.remove(k).foreach(onDrop)
     }
@@ -39,8 +42,7 @@ final class SessionStage[T](build: (SparkSession, String) => T,
       builds.incrementAndGet()
       val t0 = System.nanoTime()
       val v = build(s, d)
-      if (metricName.nonEmpty)
-        SessionStage.recordBuild(metricName, (System.nanoTime() - t0) / 1e9)
+      SessionStage.recordBuild(name, (System.nanoTime() - t0) / 1e9)
       v
     })
   }
@@ -60,15 +62,23 @@ final class SessionStage[T](build: (SparkSession, String) => T,
 
 object SessionStage {
 
-  // cumulative wall seconds per named stage build, across every build
-  // this JVM ran (r19 verdict #3: the trained-stage memos execute in
-  // Bench's UNTIMED warmup, so their cost appeared in no timed number;
-  // Bench now reads this registry after warmup and emits
-  // `trained_stage_build_secs` in both JSON lines)
+  private val registry =
+    scala.collection.concurrent.TrieMap.empty[String, SessionStage[_]]
+
+  private def register(stage: SessionStage[_]): Unit =
+    require(registry.putIfAbsent(stage.name, stage).isEmpty,
+      s"two stages named ${stage.name}")
+
+  /** Reset every stage (ScaleProbe's per-rep cold start). */
+  def resetAll(): Unit = registry.values.foreach(_.reset())
+
+  // cumulative wall seconds per stage, across every build this JVM
+  // ran: the builds happen in Bench's untimed warmup, so this is the
+  // only place their cost shows (`trained_stage_build_secs`)
   private val buildTimes =
     scala.collection.concurrent.TrieMap.empty[String, Double]
 
-  private[ops] def recordBuild(name: String, secs: Double): Unit = {
+  private def recordBuild(name: String, secs: Double): Unit = {
     buildTimes.updateWith(name) {
       case Some(t) => Some(t + secs)
       case None => Some(secs)
@@ -76,11 +86,24 @@ object SessionStage {
     ()
   }
 
-  /** Snapshot of cumulative build seconds per named stage. */
+  /** Snapshot of cumulative build seconds per stage name. */
   def buildSecs: Map[String, Double] = buildTimes.toMap
 
   /** Spec/probe hook: forget recorded build times. */
   def resetBuildSecs(): Unit = buildTimes.clear()
+
+  // names served on this thread inside readsIn (null outside it)
+  private val reads = new ThreadLocal[Set[String]]
+
+  private def recordRead(name: String): Unit =
+    Option(reads.get).foreach(r => reads.set(r + name))
+
+  /** `body`'s value and the names of the stages it read on this
+    * thread, memo hits included (Bench's `trained_stages`). */
+  def readsIn[A](body: => A): (A, Set[String]) = {
+    reads.set(Set.empty)
+    try { val a = body; (a, reads.get) } finally reads.remove()
+  }
 }
 
 /** A [[SessionStage]] whose value materializes as PARQUET under a
@@ -88,13 +111,13 @@ object SessionStage {
   * memo form for any stage OTHER QUERIES JOIN AGAINST: a
   * checkpointed-RDD scan carries no size statistics, so consumers
   * lose adaptive broadcast exactly when the stage grows (measured at
-  * the round-16 10× probe: q147 5.1 s → 26.6 s when its pair memo
-  * was checkpoint-backed), while a parquet scan has file-size stats
-  * and Catalyst/AQE keep choosing the same join shapes as the inline
+  * a 10× probe: q147 5.1 s → 26.6 s when its pair memo was
+  * checkpoint-backed), while a parquet scan has file-size stats and
+  * Catalyst/AQE keep choosing the same join shapes as the inline
   * chain at every scale. The file also outlives
   * `spark.catalog.clearCache()` like any other store.
   *
-  * Path contract (the round-16 advisor note): the stage writes under
+  * Path contract: the stage writes under
   * `<scratch root>/graft-stage/<app>-<session>/<name>-<dir token>`,
   * where the scratch root is `spark.graft.scratchDir` when set and
   * the local JVM tmpdir otherwise. ON A MULTI-NODE CLUSTER
@@ -105,13 +128,12 @@ object SessionStage {
   * with the default. The path is DETERMINISTIC per (session, name,
   * data dir): rebuilds within a session overwrite in place rather
   * than accreting temp dirs, and [[reset]] (and stopped-session
-  * eviction) deletes it. The `<app>-<session>` segment is the
-  * round-17 advisor fix — the path used to omit any process/session
-  * token while the cache is keyed per (session, dir), so two live
+  * eviction) deletes it. The `<app>-<session>` segment exists because
+  * the cache is keyed per (session, dir): without it two live
   * sessions in one JVM, or two driver processes sharing the default
-  * tmpdir (Verify running beside Bench), resolved to ONE directory:
-  * one side's overwrite corrupted the other's mid-scan reads and
-  * either side's reset() deleted the survivor's files. applicationId
+  * tmpdir (Verify running beside Bench), resolve to ONE directory,
+  * one side's overwrite corrupts the other's mid-scan reads and
+  * either side's reset() deletes the survivor's files. applicationId
   * + PID separates processes (two local-mode drivers started in the
   * same millisecond share the `local-<millis>` applicationId); a
   * JVM-unique session sequence separates sibling `newSession()`s
@@ -125,12 +147,9 @@ object SessionStage {
   *
   * Staleness/eviction contract: [[SessionStage]]. */
 final class ParquetStage(name: String,
-                         derive: (SparkSession, String) => DataFrame,
-                         metricName: String = "") {
+                         derive: (SparkSession, String) => DataFrame) {
 
-  private val inner = new SessionStage[(DataFrame, () => Unit)](
-    metricName =
-      if (metricName.nonEmpty) metricName else name.replace('-', '_'),
+  private val inner = new SessionStage[(DataFrame, () => Unit)](name,
     build = (s, d) => {
       // best-effort janitor pass (once per JVM, local tmpdir only):
       // sweep dead siblings' namespaces before adding our own
@@ -151,8 +170,7 @@ final class ParquetStage(name: String,
   /** How many times the derivation actually executed (spec hook). */
   def buildCount: Int = inner.buildCount
 
-  /** Drop cached entries AND their parquet dirs (test isolation;
-    * ScaleProbe's per-rep cold start). */
+  /** Drop cached entries AND their parquet dirs (test isolation). */
   def reset(): Unit = inner.reset()
 }
 
@@ -183,9 +201,8 @@ object ParquetStage {
   // itself contain dashes — parse from the right)
   private val OwnerDir = """^(.*)-p(\d+)-s(\d+)$""".r
 
-  /** Janitor for dead stage namespaces (r18 verdict #5 / advisor
-    * note): a KILLED or restarted driver leaves its
-    * `graft-stage/<app>-p<pid>-s<n>` dir behind forever — live
+  /** Janitor for dead stage namespaces: a KILLED or restarted driver
+    * leaves its `graft-stage/<app>-p<pid>-s<n>` dir behind forever — live
     * processes overwrite in place and delete on `reset()`, but
     * nothing swept a dead sibling's, so repeated runs on one scratch
     * root accrete one owner dir per dead process. Lists the

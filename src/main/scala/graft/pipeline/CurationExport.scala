@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * score attached — the lineage columns an audit needs.
   *
   * Stage shapes (each individually proven by its query twin):
-  *   1. near-dup clusters from [[graft.queries.NearDupStage]] (the
+  *   1. near-dup clusters from [[graft.queries.Stages.nearDupLabels]] (the
   *      shared LSH → connected-components label table);
   *   2. keep = cluster representatives only (q67: broadcast drop-set
   *      anti-join — the corpus scan never shuffles);
@@ -97,7 +97,7 @@ object CurationExport {
                     probe: Option[ProbeStage],
                     evalSet: Option[DataFrame],
                     heuristic: Boolean): Stages = {
-    val labels = graft.queries.NearDupStage.labels(spark, sfDir)
+    val labels = graft.queries.Stages.nearDupLabels.get(spark, sfDir)
     val drop = labels.filter(col("id") =!= col("label"))
       .select(col("id").as("doc_id"))
     val clusters = labels.select(col("id").as("doc_id"), col("label").as("cluster_id"))
@@ -226,10 +226,9 @@ object CurationExport {
       .select(col("doc_id"), col("lang"), col("text"), col("unit_id"),
         col("quality"), col("probe_score"), col("n_pii"), col("split"))
 
-    // §6 output sizing (r20, r19 verdict #8): the write was bounded by
-    // a caller-set maxRecordsPerFile only — a ROW bound, blind to how
-    // many bytes a row costs, so file sizes drifted with the corpus.
-    // Target BYTES per file instead: rows-per-file derives from the
+    // §6 output sizing: a caller-set maxRecordsPerFile alone is a ROW
+    // bound, blind to how many bytes a row costs, so file sizes drift
+    // with the corpus. Target BYTES per file instead: rows-per-file derives from the
     // target divided by the input corpus's measured parquet
     // bytes/row (footer metadata + file lengths — no data pass), and
     // a REBALANCE-by-split hint lets AQE coalesce/split the write-side

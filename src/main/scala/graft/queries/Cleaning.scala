@@ -54,7 +54,7 @@ import graft.ops.TextOps
   * hash shuffles with map-side partial combine that scale linearly
   * with paragraph/shingle count and tolerate arbitrary key skew.
   */
-object Cleaning {
+object Cleaning extends graft.QueryPack {
 
   import TextVector.Sql
 
@@ -95,8 +95,7 @@ object Cleaning {
     * skew-split, with the 8-byte polyhash leading the join key so
     * sort-merge compares longs before string bytes. Both the winner
     * aggregate and the join-back's occurrence side read ONE persisted
-    * copy of the exploded shingle frame (round-10 verdict: without
-    * the cache, Spark has no DAG-level CSE across the two consumers
+    * copy of the exploded shingle frame (without the cache, Spark has no DAG-level CSE across the two consumers
     * and the scan → tokenize → explode chain ran twice — the priced
     * constant of the skew rewrite). The cache is deliberately NOT
     * repartitioned by the content key — that would concentrate a hot

@@ -25,14 +25,14 @@ import graft.Tables
   * label-propagation operator (O(edges) work per round,
   * O(log diameter) rounds) that survives 100 TB.
   *
-  * NOTE: the q63/q65/q67 builders all read [[NearDupStage.labels]] —
+  * NOTE: the q63/q65/q67 builders all read [[Stages.nearDupLabels]] —
   * the shingle→minhash→LSH→verify→connected-components chain
   * EXECUTES eagerly exactly once per (session, corpus dir) and the
   * three queries assemble over the shared materialized label table
   * (ClusterSpec proves single execution). The loop's own join shapes
   * are plan-audited separately via ConnectedComponents.roundStep.
   */
-object Clusters {
+object Clusters extends graft.QueryPack {
 
   /** Sample size per stratum (q64). */
   private val SampleK = 20
@@ -57,7 +57,7 @@ object Clusters {
     // post-join aggregation over one row per clustered doc.
     "q63_dedup_clusters" -> { (s, d) =>
       import s.implicits._
-      val labels = NearDupStage.labels(s, d)
+      val labels = Stages.nearDupLabels.get(s, d)
         .select($"id".as("doc_id"), $"label".as("cluster_id"))
       labels
         .withColumn("cluster_size",
@@ -107,7 +107,7 @@ object Clusters {
     // exact micro-unit char sums included.
     "q67_dedup_keep" -> { (s, d) =>
       import s.implicits._
-      val drop = NearDupStage.labels(s, d)
+      val drop = Stages.nearDupLabels.get(s, d)
         .filter($"id" =!= $"label")
         .select($"id".as("doc_id"))
       Tables.documents(s, d)
@@ -131,7 +131,7 @@ object Clusters {
     // map-side combines to O(sources) rows.
     "q128_source_redundancy" -> { (s, d) =>
       import s.implicits._
-      val drop = NearDupStage.labels(s, d)
+      val drop = Stages.nearDupLabels.get(s, d)
         .filter($"id" =!= $"label")
         .select($"id".as("doc_id"), lit(1L).as("isdup"))
       Tables.documents(s, d)
@@ -158,7 +158,7 @@ object Clusters {
     // broadcast at scale.
     "q65_leakage_split" -> { (s, d) =>
       import s.implicits._
-      val labels = NearDupStage.labels(s, d)
+      val labels = Stages.nearDupLabels.get(s, d)
         .select($"id".as("doc_id"), $"label".as("cluster_id"))
       val h = pmod($"unit_id", lit(HashMod)) * lit(PermMult) % lit(HashMod)
       Tables.documents(s, d).select($"doc_id")
@@ -185,7 +185,7 @@ object Clusters {
     // sizes) rollup — nothing corpus-sized moves.
     "q180_dup_spectrum" -> { (s, d) =>
       import s.implicits._
-      NearDupStage.labels(s, d)
+      Stages.nearDupLabels.get(s, d)
         .groupBy($"label").agg(count(lit(1)).as("cluster_size"))
         .groupBy($"cluster_size")
         .agg(count(lit(1)).as("n_clusters"))

@@ -31,7 +31,7 @@ import graft.ops.TextOps
   * minima are stated with SQL window functions and pinned to the
   * O(m) deque kernel by WinnowSpec.
   */
-object Corpus {
+object Corpus extends graft.QueryPack {
 
   import TextVector.Sql
 
@@ -637,7 +637,7 @@ object Corpus {
     // not just round 1, are hash-checked cross-engine.
     "q92_bpe_vocab" -> { (s, d) =>
       import s.implicits._
-      val merges = BpeStage.merges(s, d)
+      val merges = Stages.bpeMerges.get(s, d)
       merges.zipWithIndex
         .map { case (m, i) => ((i + 1).toLong, m.a, m.b, m.n) }
         .toDF("rn", "a", "b", "n")
@@ -663,7 +663,7 @@ object Corpus {
     "q105_bpe_fertility" -> { (s, d) =>
       import s.implicits._
       val docs = Tables.documents(s, d)
-      val merges = BpeStage.merges(s, d)
+      val merges = Stages.bpeMerges.get(s, d)
       // r20 (guide §2.3 aggregate-before-shuffle / §1.2 per-task work):
       // BPE encoding is per-word independent (encodePieces maps each
       // word through BpeApply and flattens), so the corpus piece count
@@ -1197,13 +1197,12 @@ object Corpus {
     // back BY KEY (token-width rows, no broadcast assumption on the
     // vocabulary); the O(sources) totals and the 1-row (N, V) frame
     // broadcast (intendedBnlj). Everything is the q151/q153 shape —
-    // with the count pass served from the SourceTermStage parquet
-    // memo (r19: one build per (session, dir) shared with q179,
-    // disclosed in trained_stages; the r18 per-call cache scoping
-    // stays for the spec-hook/export paths that take arbitrary
-    // frames).
+    // with the count pass served from the `Stages.sourceTermCounts`
+    // parquet memo (one build per (session, dir) shared with q179;
+    // the per-call cache scoping stays for the spec-hook/export
+    // paths that take arbitrary frames).
     "q177_loo_novelty" -> { (s, d) =>
-      looNoveltyFromCounts(SourceTermStage.counts(s, d))
+      looNoveltyFromCounts(Stages.sourceTermCounts.get(s, d))
     },
 
     // Burrows' Delta stylometric fingerprint per source (Burrows
@@ -1235,16 +1234,16 @@ object Corpus {
     // TakeOrdered top-F off the O(types) rollup; the O(sources × F)
     // spine LEFT-joins the count table BY KEY; everything after runs
     // on O(sources × F) rows. Count pass served from the shared
-    // SourceTermStage memo (the q177 note).
+    // `Stages.sourceTermCounts` memo (the q177 note).
     "q179_stylometry" -> { (s, d) =>
-      stylometryFromCounts(SourceTermStage.counts(s, d))
+      stylometryFromCounts(Stages.sourceTermCounts.get(s, d))
     }
   )
 
   /** The q177 chain over any (source, text) frame (spec hook:
     * planted two-source corpus with hand-computed smoothed LOO
     * probabilities — CorpusStatSpec). The count-table persist is
-    * SCOPED (r17 advisor note): the O(sources)-row result
+    * SCOPED: the O(sources)-row result
     * materializes eagerly (localCheckpoint — final table, nothing
     * joins it, so the q147 stats concern does not apply) and the
     * cache releases in finally — a long-lived session invoking this
@@ -1440,8 +1439,8 @@ object Corpus {
     * running sum is PrefixSum.exclusive's two-phase scan, NOT a
     * single `Window.partitionBy(source)` — a production corpus is
     * dominated by one provider, whose billions of rows would
-    * otherwise prefix-sum serially in one task (round-13 verdict's
-    * named scale soft spot; see PrefixSum's scaladoc for the shape).
+    * otherwise prefix-sum serially in one task (see PrefixSum's
+    * scaladoc for the shape).
     * Same integers: the oracle SQL stays the plain-window semantic
     * definition. */
   private[graft] def tokenPacking(docs: DataFrame,
@@ -2104,7 +2103,7 @@ object Corpus {
     val h2 = bi.join(nbi, Seq("lang"))
       .select($"lang", plogp($"c", $"n_bigrams").as("t"))
       .groupBy($"lang").agg(sum($"t").as("h2_micro"))
-    // nbi/h2 LEFT-joined (round-15 advisor note): a language whose
+    // nbi/h2 LEFT-joined: a language whose
     // documents are all single-token has unigram evidence but zero
     // bigrams — it must still report its H1 row, with n_bigrams 0 and
     // null h2/cond (undefined over an empty distribution), not vanish.
@@ -3386,30 +3385,4 @@ object Corpus {
        |         ${Oracles.fround(Oracles.favg("surp"), XentDecimals)} AS xent
        |       FROM s GROUP BY doc_id)""".stripMargin
   }
-}
-
-/** The trained BPE merge table shared by q92 and q105 — ONE training
-  * run per (session, corpus dir), the [[NearDupStage]] device applied
-  * to tokenizer induction: both queries train the identical table
-  * (same corpus, rounds, minFreq), and the table is a few dozen
-  * driver-side tuples, so re-running the 6-round distributed loop
-  * per consumer is pure waste (measured ~1.2 s each at sf0.1).
-  * Staleness/immutability contract identical to NearDupStage's:
-  * corpus snapshots are addressed by path. */
-object BpeStage {
-
-  private val stage =
-    new graft.ops.SessionStage[Seq[graft.pipeline.BpeTrainer.Merge]]((s, d) =>
-      graft.pipeline.BpeTrainer.train(
-        s, graft.Tables.documents(s, d), "text", Corpus.BpeRounds, minFreq = 1L),
-      metricName = "bpe_merges")
-
-  def merges(s: org.apache.spark.sql.SparkSession,
-             d: String): Seq[graft.pipeline.BpeTrainer.Merge] = stage.get(s, d)
-
-  /** How many times training actually executed (spec hook). */
-  def buildCount: Int = stage.buildCount
-
-  /** Drop cached tables (test isolation). */
-  private[graft] def reset(): Unit = stage.reset()
 }

@@ -28,7 +28,7 @@ import graft.Tables
   * gate certifies the ITERATION dynamics cross-engine (the
   * q92/q98 unrolled-loop device).
   */
-object Graph {
+object Graph extends graft.QueryPack {
 
   // citation derivation: dst_i = ((d·A_i + B_i) mod P) mod d — the
   // mod-P scramble is load-bearing: any POLYNOMIAL in d is ≡ its
@@ -62,11 +62,11 @@ object Graph {
       // ranking executes eagerly during construction (the q63/q92/
       // q98 precedent for driver-looped stages); the returned plan
       // is the final rank projection. Edges come from the shared
-      // CitationStage memo (one materialization, two consumers —
-      // also the shape PageRank.run's doc asks callers to provide:
+      // `Stages.citationEdges` memo (one materialization, two
+      // consumers — also the shape PageRank.run's doc asks callers to provide:
       // each power round reads the checkpoint instead of re-running
       // the derivation scan).
-      graft.ops.PageRank.run(CitationStage.edges(s, d))
+      graft.ops.PageRank.run(Stages.citationEdges.get(s, d))
         .select($"node", ($"rm".cast("double") / lit(1e6)).as("rank"))
         .orderBy($"node")
     },
@@ -90,7 +90,7 @@ object Graph {
     // everything is equi-joins on node ids — no window, no
     // cartesian; output is bounded top-K.
     "q170_triangles" -> { (s, d) =>
-      triangleCounts(CitationStage.edges(s, d))
+      triangleCounts(Stages.citationEdges.get(s, d))
     }
   )
 

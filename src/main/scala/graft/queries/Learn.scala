@@ -31,7 +31,7 @@ import graft.Tables
   * rate table back over the corpus, one narrow filter — nothing
   * shuffles document text.
   */
-object Learn {
+object Learn extends graft.QueryPack {
 
   import graft.pipeline.ProbeTrainer
 
@@ -262,7 +262,7 @@ object Learn {
       // precedent for driver-looped stages) — ONCE per (session,
       // corpus) via the shared stage; scoring is the returned lazy
       // plan
-      val wm = ProbeStage.trained(s, d)
+      val wm = Stages.probeWeights.get(s, d)
       ProbeTrainer.score(Tables.embeddings(s, d), wm).orderBy($"vec_id")
     },
 
@@ -281,7 +281,7 @@ object Learn {
       // times (plans/r19/q99_domain_mixture_before.txt). Persisted
       // (the q102 token-width-frame device, SparkEntry cache
       // contract), the corpus scans once. 0.77 s → 0.43 s clean.
-      // Footprint caveat (r19 advisor): unlike the O(sources)/O(types)
+      // Footprint caveat: unlike the O(sources)/O(types)
       // sufficient-statistic persists elsewhere, this one is O(docs)
       // — 4 narrow columns per document, NOT per token, but it still
       // scales with the corpus. At production scale drop the persist
@@ -359,10 +359,10 @@ object Learn {
     // identical operands. ECE is one further fold the consumer does
     // over the 10 rows. Scale shape: the scoring kernel pass (probe
     // weights are broadcast literals, memoized driver state —
-    // trainedStageQueries) plus ONE map-side-combined aggregate into
+    // `Stages.probeWeights`) plus ONE map-side-combined aggregate into
     // ≤ CalibBins groups; nothing else moves.
     "q113_probe_calibration" -> { (s, d) =>
-      val wm = ProbeStage.trained(s, d)
+      val wm = Stages.probeWeights.get(s, d)
       calibrationBins(ProbeTrainer.score(Tables.embeddings(s, d), wm))
     },
 
@@ -395,7 +395,7 @@ object Learn {
     // nothing in the loop is O(corpus) driver state. Cost: PcIters
     // passes over an (n × 64) table.
     "q129_top_pc" -> { (s, d) =>
-      pcFrame(s, pcStage.get(s, d))
+      pcFrame(s, Stages.pcFit.get(s, d))
     },
 
     // Johnson–Lindenstrauss projection-distortion audit (Johnson &
@@ -433,7 +433,7 @@ object Learn {
     // coordinate the transform deletes), and the residual norm —
     // the before/after geometry a retrieval team reads to see how
     // much of each vector the common direction owned. The fit comes
-    // from the SAME memoized pcStage as q129 (one training pass,
+    // from the SAME memoized `Stages.pcFit` as q129 (one training pass,
     // two readers — the trained-stage convention).
     //
     // Determinism: no cross-row float sums at all — every fold is
@@ -447,7 +447,7 @@ object Learn {
     // whitened-corpus write is this select with the arithmetic kept
     // and the rounding dropped.
     "q130_whiten" -> { (s, d) =>
-      whitenWith(Tables.embeddings(s, d), pcStage.get(s, d))
+      whitenWith(Tables.embeddings(s, d), Stages.pcFit.get(s, d))
     },
 
     // Classifier-threshold sweep — the curve a curation team reads
@@ -469,7 +469,7 @@ object Learn {
     // everywhere (counts and token sums — no float aggregation).
     "q132_threshold_sweep" -> { (s, d) =>
       thresholdSweep(
-        ProbeTrainer.score(Tables.embeddings(s, d), ProbeStage.trained(s, d)),
+        ProbeTrainer.score(Tables.embeddings(s, d), Stages.probeWeights.get(s, d)),
         Tables.documents(s, d))
     },
 
@@ -498,7 +498,7 @@ object Learn {
     // O(corpus) shuffles but the K-fanned id-width rows.
     "q174_label_noise" -> { (s, d) =>
       labelNoise(ProbeTrainer.probs(
-        Tables.embeddings(s, d), ProbeStage.trained(s, d)))
+        Tables.embeddings(s, d), Stages.probeWeights.get(s, d)))
     },
 
     // Stratified annotation-batch sampler: k docs PER DOMAIN by the
@@ -702,7 +702,7 @@ object Learn {
     * derived from int64 micro sums), the micro-rounded top-PC
     * iterate, and the Rayleigh variance estimate. Shared by q129
     * (the diagnostic table) and q130 (the applied whitening) via
-    * [[pcStage]] — the fit is the trained artifact, the queries are
+    * [[Stages.pcFit]] — the fit is the trained artifact, the queries are
     * its two readers. */
   private[graft] final case class PcFit(
       n: Long, mu: Array[Double], vm: Array[Long], lambdaMicro: Long)
@@ -751,17 +751,6 @@ object Learn {
     x.unpersist()
     PcFit(n, mu, vm, lambdaMicro)
   }
-
-  /** One fit per (session, corpus dir) — q129 and q130 read the
-    * same trained iterate, mirroring how a production pipeline fits
-    * the whitening stats once and both the diagnostic report and
-    * the transform consume them (disclosed in
-    * `SparkEntry.trainedStageQueries`). */
-  private val pcStage = new graft.ops.SessionStage[PcFit]((s, d) =>
-    pcFit(Tables.embeddings(s, d)), metricName = "pc_fit")
-
-  private[graft] def pcStageBuilds: Int = pcStage.buildCount
-  private[graft] def pcStageReset(): Unit = pcStage.reset()
 
   /** The q129 output frame from a fit. */
   private def pcFrame(spark: SparkSession, fit: PcFit): DataFrame = {
@@ -1511,25 +1500,4 @@ object Learn {
          |  FROM documents)
          |WHERE rn <= $SampleK ORDER BY lang, rn""".stripMargin
   )
-}
-
-/** q98's trained probe weights, ONE training run per (session,
-  * corpus dir) — the [[NearDupStage]]/[[BpeStage]] memo device: a
-  * production pipeline trains the head once and scores with it; the
-  * weight matrix is K·(D+1) driver-side longs. Staleness contract
-  * identical to NearDupStage's (corpus snapshots addressed by
-  * path). */
-object ProbeStage {
-
-  private val stage = new graft.ops.SessionStage[Array[Array[Long]]]((s, d) =>
-    graft.pipeline.ProbeTrainer.train(graft.Tables.embeddings(s, d))._1,
-    metricName = "probe_weights")
-
-  def trained(s: SparkSession, d: String): Array[Array[Long]] = stage.get(s, d)
-
-  /** How many times training actually executed (spec hook). */
-  def buildCount: Int = stage.buildCount
-
-  /** Drop cached weights (test isolation). */
-  private[graft] def reset(): Unit = stage.reset()
 }

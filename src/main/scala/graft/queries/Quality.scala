@@ -21,7 +21,7 @@ import graft.queries.TextVector.{Sql => TSql}
   * TextVector.Sql conventions — int64 counts, exact-rounded double
   * division, shared polynomial-hash constants).
   */
-object Quality {
+object Quality extends graft.QueryPack {
 
   /** Gopher-style repetition thresholds (public heuristics; the
     * exact cut points are corpus-tuned parameters, not magic). */
@@ -490,7 +490,7 @@ object Quality {
     * CorpusStatSpec).
     *
     * Deviation from textstat-style Flesch, stated here rather than
-    * only in the parity test (round-14 advisor): the word count W is
+    * only in the parity test: the word count W is
     * the engine's whitespace token count, so punctuation/symbol
     * tokens ("--", "&") count as words and floor to 1 syllable,
     * where standard implementations count only alphabetic words.

@@ -21,7 +21,7 @@ import graft.ops.Determinism._
   * graft.ops.Determinism (micro-unit int64 double sums, fixed-order
   * row arithmetic, total ORDER BY).
   */
-object Relational {
+object Relational extends graft.QueryPack {
 
   private def ts(s: String) = lit(java.sql.Timestamp.valueOf(s + " 00:00:00"))
 
@@ -149,19 +149,8 @@ object Relational {
         .orderBy($"o_custkey", $"rn")
     },
 
-    // Window: running sum (sequential in-order adds — bit-exact
-    // across engines without the decimal route).
-    "q10_running_revenue" -> { (s, d) =>
-      import s.implicits._
-      val w = Window.partitionBy($"o_custkey")
-        .orderBy($"o_orderdate", $"o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.orders(s, d)
-        .filter($"o_custkey" <= 100)
-        .select($"o_custkey", $"o_orderkey",
-          sum($"o_totalprice").over(w).as("running_total"))
-        .orderBy($"o_custkey", $"o_orderkey")
-    },
+    // Window: running sum.
+    "q10_running_revenue" -> { (s, d) => runningRevenue(Tables.orders(s, d)) },
 
     // Rollup (grouping sets; keys coalesced so neither engine's
     // NULL-ordering default matters).
@@ -372,6 +361,26 @@ object Relational {
     }
   )
 
+  /** The q10 chain over any orders frame (spec hook: planted prices
+    * whose double running sum rounds). A window sum of raw doubles
+    * depends on the order of the adds: Spark adds in sequence, DuckDB
+    * combines blocks of rows, so on a long partition the two engines
+    * round differently. The sum therefore runs in int64 micro-units
+    * (the Determinism convention) and converts back once per row. */
+  private[graft] def runningRevenue(orders: DataFrame): DataFrame = {
+    val spark = orders.sparkSession
+    import spark.implicits._
+    val w = Window.partitionBy($"o_custkey")
+      .orderBy($"o_orderdate", $"o_orderkey")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    orders
+      .filter($"o_custkey" <= 100)
+      .select($"o_custkey", $"o_orderkey",
+        (sum(floor($"o_totalprice" * lit(1e6) + lit(0.5))).over(w)
+          .cast("double") / lit(1e6)).as("running_total"))
+      .orderBy($"o_custkey", $"o_orderkey")
+  }
+
   /** The q164 chain over any (l_extendedprice) frame (spec hook:
     * planted prices with hand-replayed digit counts and χ² —
     * RelationalSpec). Benford's law is about leading SIGNIFICANT
@@ -381,8 +390,7 @@ object Relational {
     * or negative cents — a truncated export, a sign-flipped refund
     * feed) are therefore COUNTED AND REPORTED as an explicit
     * digit-0 bucket with null expected/χ² (the row IS the audit
-    * signal) rather than silently dropped or — the round-15 advisor
-    * finding — left to poison the χ² table with log10(∞) garbage.
+    * signal) rather than silently dropped or left to poison the χ² table with log10(∞) garbage.
     * The Benford expectation itself is computed over in-domain rows
     * only. */
   private[graft] def benfordDigits(prices: DataFrame): DataFrame =
@@ -547,8 +555,10 @@ object Relational {
 
     "q10_running_revenue" ->
       """SELECT o_custkey, o_orderkey,
-        |  sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |                          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_total
+        |  cast(sum(cast(floor(o_totalprice*1000000.0+0.5) AS BIGINT))
+        |         OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+        |       AS DOUBLE)/1000000.0 AS running_total
         |FROM orders WHERE o_custkey <= 100
         |ORDER BY o_custkey, o_orderkey""".stripMargin,
 

@@ -16,7 +16,7 @@ import graft.ops.TextOps
   * twin with identical IEEE arithmetic (see graft.ops.Determinism
   * and TextVector.Sql).
   */
-object Search {
+object Search extends graft.QueryPack {
 
   /** BM25 parameters (Robertson/Sparck Jones defaults). */
   private val K1 = 1.2

@@ -42,7 +42,7 @@ import graft.ops.Determinism.{roundFix, Oracles}
   *    (shuffle-free probe, auditable contents) instead of a
   *    driver-held byte array.
   */
-object Sketch {
+object Sketch extends graft.QueryPack {
 
   private val P = 1000000007L
   /** Stage multipliers: Mult mod P (the house Knuth constant reduced
@@ -60,7 +60,7 @@ object Sketch {
     * power of two — scaling by 2^31 silently compresses the top 53%
     * of the CDF into never-reached territory (the q172 differential
     * caught exactly that). Range, moments, bucket uniformity and the
-    * PoisT scaling are PINNED in MixRangeSpec (r17 verdict #1) so
+    * PoisT scaling are PINNED in MixRangeSpec so
     * the next range drift fails a test instead of shipping. */
   private[graft] def mix(k: Column): Column = {
     val s1 = pmod(k.cast("long"), lit(P)) * lit(C1) % lit(P)
@@ -874,8 +874,7 @@ object Sketch {
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ts = ss.groupBy($"source").agg(count(lit(1)).as("types"))
-    // cardinality guard (J1's in-plan raise_error device, r17 verdict
-    // ask): a 1-row source count that THROWS above the bound, crossed
+    // cardinality guard (J1's in-plan raise_error device): a 1-row source count that THROWS above the bound, crossed
     // into the pair join's left input — the quadratic join cannot
     // stream a row before the guard row materializes, so document-
     // keyed misuse dies with a diagnosis instead of an OOM hours in.

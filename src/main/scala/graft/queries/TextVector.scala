@@ -20,7 +20,7 @@ import graft.ops.Determinism._
   * (fixed left-to-right folds, double-only arithmetic; see
   * graft.ops.Determinism).
   */
-object TextVector {
+object TextVector extends graft.QueryPack {
 
   /** DuckDB-SQL twins of the TextOps/VectorOps kernels. */
   object Sql {
@@ -274,8 +274,7 @@ object TextVector {
     * members per cluster, the pairwise stage does n·√n/2 cosines
     * TOTAL and per-cluster work stays constant as the corpus grows;
     * a FIXED cluster count would make per-cluster pairwise O(n²) —
-    * the degenerate-geometry class the round-10 verdict flagged on
-    * q90. One count() per build: index-lifecycle driver state, like
+    * the degenerate-geometry class q90 also had to leave. One count() per build: index-lifecycle driver state, like
     * ivfPq's. */
   /** The dynamic-geometry trained coarse quantizer shared by
     * q104/q108 (nlist = ivfCellsFor(n), sample scaled at
@@ -283,7 +282,7 @@ object TextVector {
     * oracle twin is IvfOracleCtesDyn's kk/samp/c-chain). One
     * count() per build: index-lifecycle driver state, ivfPq's
     * argument. */
-  private def trainedCentsDyn(emb: DataFrame): Array[Array[Double]] = {
+  private[graft] def trainedCentsDyn(emb: DataFrame): Array[Array[Double]] = {
     val n = emb.count()
     val ivfK = ivfCellsFor(n)
     val sampleN =
@@ -291,21 +290,6 @@ object TextVector {
     graft.ops.Kmeans.train(ivfSampleSized(emb, sampleN),
       math.min(ivfK, sampleN), IvfIters)
   }
-
-  // ONE dynamic-geometry training run per (session, corpus dir) for
-  // the q104/q108 query builders — graft.ops.SessionStage (a
-  // production index trains its quantizer once and every consumer
-  // reads it; the codebook is bounded driver state). The spec hooks
-  // (semDedup/embedOutliers over arbitrary frames) stay un-memoized.
-  private val centsStage =
-    new graft.ops.SessionStage[Array[Array[Double]]]((s, d) =>
-      trainedCentsDyn(Tables.embeddings(s, d)), metricName = "ivf_quantizer")
-  private def trainedCentsFor(s: SparkSession, d: String): Array[Array[Double]] =
-    centsStage.get(s, d)
-  /** Spec hooks for the shared-quantizer memo (TrainedStageSpec pins
-    * the one-build contract SparkEntry.trainedStageQueries declares). */
-  private[graft] def centsStageBuildCount: Int = centsStage.buildCount
-  private[graft] def centsStageReset(): Unit = centsStage.reset()
 
   /** Shared assign + own-centroid affinity stage (q108 AND q115 —
     * ONE definition of the IvfCell assignment, centroid lookup, and
@@ -541,7 +525,7 @@ object TextVector {
   // T5 instruction prefix (run.py:84-92 selects one per --type).
   private val EmbedPrompt = "Represent the document for retrieval:"
 
-  // q24: hard per-bucket cap (round-10 verdict carryover). A
+  // q24: hard per-bucket cap. A
   // degenerate corpus — 10⁶ byte-identical docs — lands its whole
   // population in ONE band bucket per band; uncapped all-pairs
   // expansion emits m(m-1)/2 ≈ 5·10¹¹ candidate pairs from that one
@@ -968,7 +952,7 @@ object TextVector {
     // (AQE broadcasts the pair side) — the corpus never self-joins.
     "q147_editdist_verify" -> { (s, d) =>
       import s.implicits._
-      val p = NearDupStage.pairs(s, d)
+      val p = Stages.nearDupPairs.get(s, d)
       // participant-id broadcast semi-prune (the q67 shape): the
       // text scan never shuffles, and only PAIRED documents reach
       // the O(len²) verify
@@ -1020,7 +1004,7 @@ object TextVector {
     // the pair side); the corpus never self-joins.
     "q157_containment" -> { (s, d) =>
       import s.implicits._
-      val p = NearDupStage.pairs(s, d)
+      val p = Stages.nearDupPairs.get(s, d)
       // q147's participant prune, one step earlier: the shingle
       // recompute itself runs only over PAIRED documents (the
       // corpus-wide ShingleHashes pass was the chain's whole cost)
@@ -1682,7 +1666,7 @@ object TextVector {
     // 0.9+ a real embedding model would warrant (OverflowTokens'
     // testdata argument).
     "q104_semdedup" -> { (s, d) =>
-      semDedup(Tables.embeddings(s, d), SemTau, Some(trainedCentsFor(s, d))) },
+      semDedup(Tables.embeddings(s, d), SemTau, Some(Stages.ivfQuantizer.get(s, d))) },
 
     // Semantic outlier detection — SemDeDup's companion filter (the
     // same paper prunes "semantically redundant" AND flags
@@ -1699,7 +1683,7 @@ object TextVector {
     // vectors beyond the rank's (cell, cos, id) rows.
     "q108_embed_outliers" -> { (s, d) =>
       embedOutliers(Tables.embeddings(s, d), OutlierK,
-        Some(trainedCentsFor(s, d))) },
+        Some(Stages.ivfQuantizer.get(s, d))) },
 
     // Corpus cartography (the "what is IN my corpus" map a curation
     // team reads first — the Nomic-Atlas/embedding-atlas style
@@ -1710,8 +1694,7 @@ object TextVector {
     // diffuse regions (q108's outliers tell you WHICH vectors);
     // share × cells is the same balance telemetry AnnIndex.stats
     // publishes for serving. Reuses the SHARED √n-cell quantizer
-    // memo (q104/q108's SessionStage — one training per corpus,
-    // trainedStageQueries) and q108's NaN→−2 sentinel. Scale shape:
+    // memo (`Stages.ivfQuantizer` — one training per corpus) and q108's NaN→−2 sentinel. Scale shape:
     // ONE kernel pass (assign + own-centroid cosine), two
     // map-side-combined aggregates over (cell[, label]) id-width
     // rows — ≤ nlist·classes intermediate rows FOREVER; the dominant
@@ -1722,7 +1705,7 @@ object TextVector {
       import s.implicits._
       corpusMap(Tables.embeddings(s, d)
         .select($"vec_id", $"label", $"embedding"),
-        Some(trainedCentsFor(s, d)))
+        Some(Stages.ivfQuantizer.get(s, d)))
     },
 
     // Late-interaction (multi-vector) retrieval — ColBERT's MaxSim
@@ -1828,8 +1811,8 @@ object TextVector {
           micro($"n_hit", $"n_cand").as("precision_micro"))
     },
 
-    // PQ with TRAINED codebooks (q78's upgrade, the round-6 verdict's
-    // "codebook a production index trains"): per sub-space, the
+    // PQ with TRAINED codebooks (q78's upgrade to the codebook a
+    // production index trains): per sub-space, the
     // seeded sample's sub-vectors train a k=PqK codebook by
     // deterministic L2 Lloyd rounds (Kmeans.trainL2 — the sub-space
     // L2 distance IS the quantization error PQ minimizes), then

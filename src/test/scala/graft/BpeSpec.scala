@@ -127,13 +127,16 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("q92 and q105 share one trained merge table per (session, corpus)") {
-    graft.queries.BpeStage.reset()
-    val a = SparkEntry.queries("q92_bpe_vocab")(spark, "/root/testdata/sf0.001").collect()
-    val b = SparkEntry.queries("q105_bpe_fertility")(spark, "/root/testdata/sf0.001").collect()
-    assert(a.nonEmpty && b.nonEmpty)
-    assert(graft.queries.BpeStage.buildCount == 1,
-      s"expected ONE training run for both consumers, got ${graft.queries.BpeStage.buildCount}")
-    graft.queries.BpeStage.reset() // test isolation
+    val stage = graft.queries.Stages.bpeMerges
+    stage.reset()
+    for (q <- Seq("q92_bpe_vocab", "q105_bpe_fertility")) {
+      val (rows, read) = graft.ops.SessionStage.readsIn(
+        SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect())
+      assert(rows.nonEmpty && read.contains("bpe_merges"), s"$q read $read")
+    }
+    assert(stage.buildCount == 1,
+      s"expected ONE training run for both consumers, got ${stage.buildCount}")
+    stage.reset() // test isolation
   }
 
   test("q105 fertility report: totals reconcile with an independent word count") {

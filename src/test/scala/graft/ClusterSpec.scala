@@ -3,6 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
+import graft.queries.Stages
+
 /** ConnectedComponents (graft.ops) — correctness on known graphs,
   * including shapes the q63 oracle gate cannot exercise (long
   * chains needing many propagation rounds, the maxIter guard).
@@ -14,6 +16,11 @@ class ClusterSpec extends AnyFunSuite {
   // the planted near-dup families and price spread the last two
   // tests rely on live in the gate-scale dir, not the smoke dir
   private val sf01 = "/root/testdata/sf0.01"
+
+  private def resetNearDup(): Unit = {
+    Stages.nearDupLabels.reset()
+    Stages.nearDupPairs.reset()
+  }
 
   private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
     graft.ops.ConnectedComponents.run(edges.toDF("a", "b"), "a", "b")
@@ -122,19 +129,20 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("q63/q65/q67 share one NearDupStage build: the LSH+CC chain executes once") {
-    graft.queries.NearDupStage.reset()
-    SparkEntry.queries("q63_dedup_clusters")(spark, sf01).foreach(_ => ())
-    SparkEntry.queries("q65_leakage_split")(spark, sf01).foreach(_ => ())
-    SparkEntry.queries("q67_dedup_keep")(spark, sf01).foreach(_ => ())
-    assert(graft.queries.NearDupStage.buildCount == 1,
-      s"expected one shared chain build, got ${graft.queries.NearDupStage.buildCount}")
+    resetNearDup()
+    for (q <- Seq("q63_dedup_clusters", "q65_leakage_split", "q67_dedup_keep")) {
+      val read = stagesRead(q, sf01)
+      assert(read.contains("near_dup_labels"), s"$q read $read")
+    }
+    assert(Stages.nearDupLabels.buildCount == 1,
+      s"expected one shared chain build, got ${Stages.nearDupLabels.buildCount}")
     // and the shared labels are exactly q63's labeling
-    val fromStage = graft.queries.NearDupStage.labels(spark, sf01)
+    val fromStage = Stages.nearDupLabels.get(spark, sf01)
       .as[(Long, Long)].collect().toMap
     val fromQ63 = SparkEntry.queries("q63_dedup_clusters")(spark, sf01)
       .select($"doc_id", $"cluster_id").as[(Long, Long)].collect().toMap
     assert(fromStage == fromQ63)
-    assert(graft.queries.NearDupStage.buildCount == 1, "re-reads must not rebuild")
+    assert(Stages.nearDupLabels.buildCount == 1, "re-reads must not rebuild")
   }
 
   test("gate-corpus band buckets sit far below the cap, so the uncapped q24 oracle is valid") {
@@ -319,7 +327,7 @@ class ClusterSpec extends AnyFunSuite {
   }
 
   test("q180 spectrum is exactly q63's label table rolled up by cluster size") {
-    graft.queries.NearDupStage.reset()
+    resetNearDup()
     try {
       val labels = SparkEntry.queries("q63_dedup_clusters")(spark, sf01)
         .select($"cluster_id").as[Long].collect()
@@ -333,7 +341,7 @@ class ClusterSpec extends AnyFunSuite {
       assert(got.nonEmpty && got.forall(_._1 >= 2L),
         s"every near-dup cluster has >= 2 members: $got")
     } finally {
-      graft.queries.NearDupStage.reset()
+      resetNearDup()
       spark.catalog.clearCache()
     }
   }

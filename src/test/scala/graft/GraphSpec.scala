@@ -152,44 +152,50 @@ class GraphSpec extends AnyFunSuite {
 
   test("q101 and q170 share ONE citation-edge materialization per (session, corpus)") {
     import spark.implicits._
-    // The shared-stage contract (round-15 verdict #2): two graph
-    // analytics, one edge derivation. Both queries must answer from
-    // the same CitationStage build — a second build means a builder
+    // The shared-stage contract: two graph analytics, one edge
+    // derivation. Both queries must answer from the same
+    // Stages.citationEdges build — a second build means a builder
     // regressed to deriving privately.
-    graft.queries.CitationStage.reset()
+    val stage = graft.queries.Stages.citationEdges
+    stage.reset()
     try {
-      val ranks = graft.SparkEntry.queries("q101_pagerank")(spark, sf)
-        .as[(Long, Double)].collect()
-      val tris = graft.SparkEntry.queries("q170_triangles")(spark, sf)
-        .as[(Long, Long)].collect()
+      val (ranks, readR) = graft.ops.SessionStage.readsIn(
+        graft.SparkEntry.queries("q101_pagerank")(spark, sf)
+          .as[(Long, Double)].collect())
+      val (tris, readT) = graft.ops.SessionStage.readsIn(
+        graft.SparkEntry.queries("q170_triangles")(spark, sf)
+          .as[(Long, Long)].collect())
       spark.catalog.clearCache()
       assert(ranks.nonEmpty && tris.nonEmpty)
-      assert(graft.queries.CitationStage.buildCount == 1,
-        s"citation edges derived ${graft.queries.CitationStage.buildCount} " +
+      assert(Seq(readR, readT).forall(_.contains("citation_edges")),
+        s"q101 read $readR, q170 read $readT")
+      assert(stage.buildCount == 1,
+        s"citation edges derived ${stage.buildCount} " +
           "times for two consumers — the shared stage is not shared")
-    } finally graft.queries.CitationStage.reset()
+    } finally stage.reset()
   }
 
   test("CitationStage memo is a stats-bearing parquet scan (round-17: no localCheckpoint)") {
     // q101/q170 JOIN against this frame — a checkpointed-RDD memo
     // carries no size statistics and blocks the consumers' adaptive
-    // broadcast exactly when the graph grows (the hazard the r16 10×
-    // probe measured on the pair memo). Pin both halves: the memo's
+    // broadcast exactly when the graph grows (the hazard a 10× probe
+    // measured on the pair memo). Pin both halves: the memo's
     // physical form is a file scan, and the optimizer sees real
     // (finite, nonzero) size stats for it.
-    graft.queries.CitationStage.reset()
+    val stage = graft.queries.Stages.citationEdges
+    stage.reset()
     try {
-      val edges = graft.queries.CitationStage.edges(spark, sf)
+      val edges = stage.get(spark, sf)
       val scans = edges.queryExecution.executedPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }
       assert(scans.nonEmpty &&
-        scans.exists(_.metadata.get("Location").exists(_.contains("citation-edges"))),
-        s"expected a parquet file scan over the citation-edges stage, got:\n" +
+        scans.exists(_.metadata.get("Location").exists(_.contains("citation_edges"))),
+        s"expected a parquet file scan over the citation_edges stage, got:\n" +
           edges.queryExecution.executedPlan.toString)
       val size = edges.queryExecution.optimizedPlan.stats.sizeInBytes
       assert(size > 0 && size < BigInt(Long.MaxValue),
         s"edge memo should carry real size statistics, got $size")
-    } finally graft.queries.CitationStage.reset()
+    } finally stage.reset()
   }
 }

@@ -6,6 +6,11 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   lazy val spark: SparkSession = GraftSession.local(4)
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs query `q` over `dir`; returns the stages its builder read. */
+  def stagesRead(q: String, dir: String = sf): Set[String] =
+    graft.ops.SessionStage.readsIn(
+      SparkEntry.queries(q)(spark, dir).foreach(_ => ()))._2
 }
 
 class RelationalSpec extends AnyFunSuite {
@@ -104,6 +109,19 @@ class RelationalSpec extends AnyFunSuite {
         s"$dir: seed eccentricity $ecc > 3 — q76's depth cap would " +
           "silently truncate min distances on this dataset")
     }
+  }
+
+  test("q10 running revenue: the running totals of 0.1, 0.2, 0.3 are exactly 0.1, 0.3, 0.6") {
+    import spark.implicits._
+    // a raw double window sum gives 0.30000000000000004 for the second
+    // row, and its rounding depends on the order of the adds
+    val orders = Seq((1L, 1L, "1995-01-01", 0.1), (1L, 2L, "1995-01-02", 0.2),
+      (1L, 3L, "1995-01-03", 0.3))
+      .toDF("o_custkey", "o_orderkey", "d", "o_totalprice")
+      .withColumn("o_orderdate", to_date($"d"))
+    val out = graft.queries.Relational.runningRevenue(orders)
+      .select($"running_total").as[Double].collect().toSeq
+    assert(out == Seq(0.1, 0.3, 0.6), s"q10 running totals: $out")
   }
 
   test("q164 Benford: planted prices yield exact digit counts and the replayed expected/chi-square integers") {

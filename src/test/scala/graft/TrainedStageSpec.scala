@@ -2,97 +2,108 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SparkEntry.trainedStageQueries — the bench's memoized-training
-  * disclosure must describe reality: every declared query exists,
-  * and each declared stage builds ONCE however many of its declared
-  * consumers run (ClusterSpec and BpeSpec pin the near-dup and BPE
-  * stages; this covers the remaining two and the map itself).
+import graft.ops.{ParquetStage, SessionStage}
+import graft.queries.Stages
+
+/** The trained-stage memos of [[graft.queries.Stages]]: each builds
+  * ONCE however many of its consumers run, and every consumer records
+  * the stage it read, memo hits included, which is how Bench derives
+  * `trained_stages` (ClusterSpec, BpeSpec and GraphSpec pin the
+  * near-dup labels, BPE and citation stages; this covers the rest).
   */
 class TrainedStageSpec extends AnyFunSuite {
   import TestSpark._
 
-  test("every declared trained-stage query is a real catalog query") {
-    val declared = SparkEntry.trainedStageQueries.values.flatten.toSet
-    val unknown = declared -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty,
-      s"trainedStageQueries names unknown queries: $unknown")
+  /** Runs each consumer, asserting it records `stage`. */
+  private def consume(stage: String, qs: String*): Unit = qs.foreach { q =>
+    val read = stagesRead(q)
+    assert(read.contains(stage), s"$q read $read, not $stage")
   }
 
   test("probe weights train once for its four consumers (q98, q113, q132, q174)") {
-    graft.queries.ProbeStage.reset()
-    SparkEntry.queries("q98_linear_probe")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q113_probe_calibration")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q132_threshold_sweep")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q174_label_noise")(spark, sf).foreach(_ => ())
-    assert(graft.queries.ProbeStage.buildCount == 1,
-      s"probe trained ${graft.queries.ProbeStage.buildCount} times")
+    Stages.probeWeights.reset()
+    consume("probe_weights", "q98_linear_probe", "q113_probe_calibration",
+      "q132_threshold_sweep", "q174_label_noise")
+    assert(Stages.probeWeights.buildCount == 1,
+      s"probe trained ${Stages.probeWeights.buildCount} times")
     spark.catalog.clearCache()
   }
 
   test("the verified pair set builds once for q147, q157, and the label stage") {
-    graft.queries.NearDupStage.reset()
-    SparkEntry.queries("q147_editdist_verify")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q157_containment")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q63_dedup_clusters")(spark, sf).foreach(_ => ())
-    assert(graft.queries.NearDupStage.pairBuildCount == 1,
-      s"pair chain ran ${graft.queries.NearDupStage.pairBuildCount} times")
+    Stages.nearDupPairs.reset()
+    Stages.nearDupLabels.reset()
+    consume("near_dup_pairs", "q147_editdist_verify", "q157_containment")
+    consume("near_dup_labels", "q63_dedup_clusters")
+    assert(Stages.nearDupPairs.buildCount == 1,
+      s"pair chain ran ${Stages.nearDupPairs.buildCount} times")
+    // q24 derives the pairs itself and q01 is relational: neither
+    // builder reads a stage, so neither may be reported as trained
+    for (q <- Seq("q01_pricing_summary", "q24_near_dup")) {
+      val read = SessionStage.readsIn(SparkEntry.queries(q)(spark, sf))._2
+      assert(read.isEmpty, s"$q read $read")
+    }
     spark.catalog.clearCache()
   }
 
   test("ParquetStage materializes at a deterministic scratch path and reset deletes it") {
-    // The round-16 advisor note: the pair memo used to write one
-    // leaked driver-local temp dir per build. Pin the replacement's
-    // contract — deterministic path per (stage, data dir), dir exists
-    // while cached, dir GONE after reset.
-    graft.queries.NearDupStage.reset()
-    val path = graft.ops.ParquetStage.stagePath(spark, "neardup-pairs", sf)
+    // deterministic path per (stage, data dir), dir exists while
+    // cached, dir GONE after reset — and after resetAll, which also
+    // zeroes every stage's build count
+    val path = ParquetStage.stagePath(spark, "near_dup_pairs", sf)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    graft.queries.NearDupStage.pairs(spark, sf).foreach(_ => ())
-    assert(fs.exists(path), s"pair memo should materialize at $path")
-    graft.queries.NearDupStage.reset()
-    assert(!fs.exists(path),
-      s"reset must delete the memo dir, $path still exists")
+    val resets = Seq[(String, () => Unit)](
+      "reset" -> (() => Stages.nearDupPairs.reset()),
+      "resetAll" -> (() => SessionStage.resetAll()))
+    for ((how, reset) <- resets) {
+      Stages.nearDupPairs.reset()
+      Stages.nearDupPairs.get(spark, sf).foreach(_ => ())
+      Stages.pcFit.get(spark, sf)
+      assert(fs.exists(path), s"pair memo should materialize at $path")
+      reset()
+      assert(!fs.exists(path),
+        s"$how must delete the memo dir, $path still exists")
+    }
+    assert(Stages.nearDupPairs.buildCount == 0 && Stages.pcFit.buildCount == 0,
+      s"resetAll left build counts ${Stages.nearDupPairs.buildCount}, " +
+        s"${Stages.pcFit.buildCount}")
     spark.catalog.clearCache()
   }
 
   test("stage scratch paths are isolated per session (no cross-session overwrite)") {
-    // The round-17 advisor note: the path was deterministic per
-    // (name, dir) only, while the memo cache is keyed per (session,
-    // dir) — two live sessions (or two driver processes sharing the
-    // default tmpdir) resolved to ONE directory and overwrote /
-    // deleted each other's parquet mid-scan. Pin the fix: a sibling
-    // session of the SAME context gets a different path, and the
-    // path carries the applicationId so separate processes cannot
-    // collide on a shared scratch root either.
+    // The memo cache is keyed per (session, dir), so the path must be
+    // too: two live sessions (or two driver processes sharing the
+    // default tmpdir) resolving to ONE directory overwrite / delete
+    // each other's parquet mid-scan. A sibling session of the SAME
+    // context gets a different path, and the path carries the
+    // applicationId so separate processes cannot collide on a shared
+    // scratch root either.
     val sibling = spark.newSession()
-    val a = graft.ops.ParquetStage.stagePath(spark, "neardup-pairs", sf)
-    val b = graft.ops.ParquetStage.stagePath(sibling, "neardup-pairs", sf)
+    val a = ParquetStage.stagePath(spark, "near_dup_pairs", sf)
+    val b = ParquetStage.stagePath(sibling, "near_dup_pairs", sf)
     assert(a != b, s"sibling sessions must not share a stage dir: $a")
     assert(a.toString.contains(spark.sparkContext.applicationId),
       s"stage path must carry the applicationId: $a")
     // still deterministic for ONE session: rebuilds overwrite in place
-    assert(a == graft.ops.ParquetStage.stagePath(spark, "neardup-pairs", sf))
+    assert(a == ParquetStage.stagePath(spark, "near_dup_pairs", sf))
   }
 
   test("the PC fit builds once for its two consumers (q129, q130)") {
-    graft.queries.Learn.pcStageReset()
-    SparkEntry.queries("q129_top_pc")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q130_whiten")(spark, sf).foreach(_ => ())
-    assert(graft.queries.Learn.pcStageBuilds == 1,
-      s"PC fit ran ${graft.queries.Learn.pcStageBuilds} times")
+    Stages.pcFit.reset()
+    consume("pc_fit", "q129_top_pc", "q130_whiten")
+    assert(Stages.pcFit.buildCount == 1,
+      s"PC fit ran ${Stages.pcFit.buildCount} times")
     spark.catalog.clearCache()
   }
 
   test("the source-term count table builds once for q177 and q179") {
-    // r19 (r18 verdict #2): the per-call cache scoping that fixed the
-    // audit-export memory leak doubled both queries; the recovery is
-    // this parquet memo — one tokenize+combine pass however many of
-    // the two consumers run, disclosed in trained_stages.
-    graft.queries.SourceTermStage.reset()
-    SparkEntry.queries("q177_loo_novelty")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q179_stylometry")(spark, sf).foreach(_ => ())
-    assert(graft.queries.SourceTermStage.buildCount == 1,
-      s"count pass ran ${graft.queries.SourceTermStage.buildCount} times")
+    // scoping the count table's cache per call stopped a long-lived
+    // session from pinning one dataset per audit export but made each
+    // invocation pay the full tokenize + combine; this parquet memo
+    // is one pass however many of the two consumers run
+    Stages.sourceTermCounts.reset()
+    consume("source_term_counts", "q177_loo_novelty", "q179_stylometry")
+    assert(Stages.sourceTermCounts.buildCount == 1,
+      s"count pass ran ${Stages.sourceTermCounts.buildCount} times")
     // and the memoed path still serves the oracle-gated rows: both
     // queries stay non-empty and source-sorted off the parquet scan
     val rows = SparkEntry.queries("q177_loo_novelty")(spark, sf)
@@ -103,35 +114,32 @@ class TrainedStageSpec extends AnyFunSuite {
   }
 
   test("stage builds record wall seconds under their trainedStageQueries key") {
-    // r19 verdict #3: the memoized builds run in Bench's UNTIMED
-    // warmup, so their cost appeared in no timed number. SessionStage
-    // now records cumulative build seconds per metric name and Bench
-    // emits them as trained_stage_build_secs — pin that (a) a build
-    // records a positive time under the SAME key the disclosure map
-    // uses, (b) a memo HIT records nothing new, (c) reset clears.
-    graft.ops.SessionStage.resetBuildSecs()
-    graft.queries.Learn.pcStageReset()
-    SparkEntry.queries("q129_top_pc")(spark, sf).foreach(_ => ())
-    val t1 = graft.ops.SessionStage.buildSecs
-    assert(t1.contains("pc_fit") && t1("pc_fit") > 0.0,
-      s"pc_fit build time not recorded: $t1")
-    assert(SparkEntry.trainedStageQueries.contains("pc_fit"),
-      "build-time key must match the disclosure map's stage key")
+    // The builds run in Bench's UNTIMED warmup, so their cost shows
+    // in no timed number; SessionStage records cumulative build
+    // seconds per stage name and Bench emits them as
+    // trained_stage_build_secs. Pin that (a) a build records a
+    // positive time under the name its readers record, (b) a memo
+    // HIT records nothing new, (c) reset clears.
+    SessionStage.resetBuildSecs()
+    Stages.pcFit.reset()
+    val read = stagesRead("q129_top_pc")
+    val t1 = SessionStage.buildSecs
+    assert(t1.keySet == read && t1.get(Stages.pcFit.name).exists(_ > 0.0),
+      s"pc_fit build time not recorded under the name q129 read ($read): $t1")
     SparkEntry.queries("q130_whiten")(spark, sf).foreach(_ => ())
-    assert(graft.ops.SessionStage.buildSecs("pc_fit") == t1("pc_fit"),
+    assert(SessionStage.buildSecs("pc_fit") == t1("pc_fit"),
       "a memo hit must not add build time")
-    graft.ops.SessionStage.resetBuildSecs()
-    assert(graft.ops.SessionStage.buildSecs.isEmpty)
+    SessionStage.resetBuildSecs()
+    assert(SessionStage.buildSecs.isEmpty)
     spark.catalog.clearCache()
   }
 
   test("the shared quantizer trains once for its three consumers (q104, q108, q115)") {
-    graft.queries.TextVector.centsStageReset()
-    SparkEntry.queries("q104_semdedup")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q108_embed_outliers")(spark, sf).foreach(_ => ())
-    SparkEntry.queries("q115_corpus_map")(spark, sf).foreach(_ => ())
-    assert(graft.queries.TextVector.centsStageBuildCount == 1,
-      s"quantizer trained ${graft.queries.TextVector.centsStageBuildCount} times")
+    Stages.ivfQuantizer.reset()
+    consume("ivf_quantizer", "q104_semdedup", "q108_embed_outliers",
+      "q115_corpus_map")
+    assert(Stages.ivfQuantizer.buildCount == 1,
+      s"quantizer trained ${Stages.ivfQuantizer.buildCount} times")
     spark.catalog.clearCache()
   }
 }

@@ -9,7 +9,9 @@ committed precisely so this analysis stops needing a judge re-run):
 
 Prints queries present in both (sorted by ratio, worst first),
 flagging those slower than `ratio` (default 1.5×), plus added/removed
-queries and the totals. Machine noise note: same-box runs vary ±30%
+queries and the totals. A query in one artifact's `trained_stages` and
+not the other's is marked: on that side its timed number excludes a
+memo built in the untimed warmup, so its ratio is not code movement. Machine noise note: same-box runs vary ±30%
 per query (BENCH history); treat < 1.5× as noise unless systematic.
 """
 import sys, json
@@ -79,6 +81,14 @@ def main():
     # 2x the threshold stay counted regardless of overlap — at that
     # size "one fast pass" is no longer evidence of mere slot noise.
     hard = 2 * thr
+    # trained-stage disclosure: which side (if only one) timed the
+    # query as the consumer of a warmup-built memo. An artifact older
+    # than the field cannot say, so nothing is marked against it.
+    ts_old, ts_new = old.get("trained_stages"), new.get("trained_stages")
+    memo_only = {}
+    if ts_old is not None and ts_new is not None:
+        for q in set(ts_old) ^ set(ts_new):
+            memo_only[q] = "new" if q in ts_new else "old"
     flagged = 0
     print(f"{'query':40s} {'old_s':>8s} {'new_s':>8s} {'ratio':>7s}")
     for q in both:
@@ -99,6 +109,9 @@ def main():
             flagged += 1
         elif flag:
             flagged += 1
+        if q in memo_only:
+            flag += ("  [trained stage in %s only — its warmup-built memo "
+                     "is not in that side's time]" % memo_only[q])
         print(f"{q:40s} {qo[q]:8.2f} {qn[q]:8.2f} {r:7.2f}{flag}")
     if normalized:
         print("methodology: compared 'first' readings for "
@@ -110,6 +123,10 @@ def main():
         print("added:   " + ", ".join(added))
     if removed:
         print("removed: " + ", ".join(removed))
+    for side in ("old", "new"):
+        qs = sorted(q for q, s in memo_only.items() if s == side)
+        if qs:
+            print(f"trained stage in {side} only: " + ", ".join(qs))
     to, tn = old.get("value"), new.get("value")
     # steal_pct/load fields are absent from older (tail-truncated)
     # BENCH_r*.json artifacts — the files this tool exists to compare
