@@ -31,7 +31,7 @@ object ExplainPageRank {
     // in for the computed initMicro/baseMicro — both are literals in
     // the plan either way
     val next = graft.ops.PageRank.roundBody(
-      ew, ranks, defaultRm = 900L, baseMicro = 100L, damping = 0.85)
+      ew, Some(ranks), defaultRm = 900L, baseMicro = 100L, damping = 0.85)
     println("==== pagerank_round_after ====")
     next.explain("formatted")
     spark.stop()

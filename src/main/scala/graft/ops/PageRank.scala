@@ -44,20 +44,21 @@ object PageRank {
 
   /** ONE power-iteration round body over the loop-invariant
     * (src, dst, outdeg) frame: contribute, micro-quantize, aggregate
-    * inflow, apply the damped update. `ranks == null` means the
-    * uniform init state (every source holds `defaultRm`). Extracted
+    * inflow, apply the damped update. `ranks = None` is the uniform
+    * init state (every source holds `defaultRm`). Extracted
     * so [[graft.ExplainPageRank]] explains the SAME expressions the
     * loop executes: the round plan it prints cannot drift from the
     * operator. */
-  private[graft] def roundBody(ew: DataFrame, ranks: DataFrame,
+  private[graft] def roundBody(ew: DataFrame, ranks: Option[DataFrame],
       defaultRm: Long, baseMicro: Long, damping: Double): DataFrame = {
     val spark = ew.sparkSession
     import spark.implicits._
-    val rm = if (ranks == null) lit(defaultRm)
-      else coalesce($"rm", lit(defaultRm))
-    val joined = if (ranks == null) ew
-      else ew.join(ranks.withColumnRenamed("node", "src"),
-        Seq("src"), "left")
+    val (joined, rm) = ranks match {
+      case None => (ew, lit(defaultRm))
+      case Some(r) =>
+        (ew.join(r.withColumnRenamed("node", "src"), Seq("src"), "left"),
+          coalesce($"rm", lit(defaultRm)))
+    }
     val contrib = joined
       .select($"dst", floor(rm.cast("double") / lit(1e6) /
         $"outdeg".cast("double") * lit(1e6) + lit(0.5))
@@ -78,30 +79,21 @@ object PageRank {
     val nodes = e.select($"src".as("node"))
       .union(e.select($"dst".as("node")))
       .distinct().localCheckpoint()
-    // Two loop-shape choices remove per-round shuffles outright
-    // (the round-19 plan diff is committed as
-    // plans/r19/q101_pagerank_round_{before,after}.txt; the current
-    // round's plan prints with graft.ExplainPageRank):
-    //  (1) The (src, dst, outdeg) frame is LOOP-INVARIANT, but the
-    //      old loop re-derived the lazy edge list and re-joined
-    //      out-degrees EVERY round — `rounds` extra edge derivations
-    //      and out-degree joins. It materializes ONCE now.
-    //  (2) The old round ended with nodes LEFT JOIN inflow to keep
-    //      zero-inflow nodes in the rank state — a full O(nodes)
-    //      sort-merge join + exchange per round. But a zero-inflow
-    //      node's rank is the CONSTANT baseMicro (initMicro before
-    //      round 1): dangling targets receive nothing and contribute
-    //      floor(default/1e6/outdeg·1e6+0.5) like any other source.
-    //      So the loop state is now ONLY the in-edge-receiving nodes
-    //      (inflow's key set — static across rounds), sources
-    //      missing from it coalesce to the round's constant default,
-    //      and the full node spine joins back ONCE after the loop.
-    //      Per round: one join + ONE exchange (the inflow
-    //      aggregation), no O(nodes) join. Exact equivalence: the
-    //      per-edge integer arithmetic is unchanged — GraphSpec's
-    //      conservation/planted-geometry cases and the q101 oracle
-    //      (which replays the dense-state rounds CTE-for-round) pin
-    //      it at both gate SFs.
+    // Loop shape, per round one join and ONE exchange (the inflow
+    // aggregation), no O(nodes) join:
+    //  (1) the (src, dst, outdeg) frame is loop-invariant and
+    //      materializes once, before the loop;
+    //  (2) the rank state holds only the nodes that receive in-edges
+    //      (inflow's key set, static across rounds). A zero-inflow
+    //      node's rank is the round's CONSTANT default (initMicro
+    //      before round 1, baseMicro after), so sources missing from
+    //      the state coalesce to it, and the full node spine joins
+    //      back once after the loop.
+    // The per-edge integer arithmetic is the dense-state form's:
+    // GraphSpec's conservation/planted-geometry cases and the q101
+    // oracle (which replays the dense-state rounds CTE-for-round) pin
+    // it at both gate SFs. The round's plan prints with
+    // graft.ExplainPageRank.
     val ew = e
       .join(e.groupBy($"src").agg(count(lit(1)).as("outdeg")), Seq("src"))
       .select($"src", $"dst", $"outdeg")
@@ -114,34 +106,33 @@ object PageRank {
     // sparse rank state: nodes WITH in-edges only; everyone else
     // holds the round's constant default (initMicro at the start,
     // baseMicro after any update round)
-    var ranks: DataFrame = null
-    var backing: DataFrame = null
+    var ranks: Option[DataFrame] = None
     var defaultRm = initMicro
     for (_ <- 1 to rounds) {
       val next = roundBody(ew, ranks, defaultRm, baseMicro, damping)
         .localCheckpoint()
-      if (backing != null) ConnectedComponents.releaseCheckpoint(backing)
-      backing = next
-      ranks = next
+      ranks.foreach(ConnectedComponents.releaseCheckpoint)
+      ranks = Some(next)
       defaultRm = baseMicro
     }
     // rejoin the full node spine ONCE: zero-inflow nodes report the
     // constant default their absence encoded all along (rounds == 0:
     // every node still sits at the dense init state)
-    val out =
-      if (ranks == null)
+    val out = ranks match {
+      case None =>
         nodes.select($"node", lit(initMicro).as("rm")).localCheckpoint()
-      else nodes
-        .join(ranks, Seq("node"), "left")
+      case Some(r) => nodes
+        .join(r, Seq("node"), "left")
         .select($"node", coalesce($"rm", lit(defaultRm)).as("rm"))
         .localCheckpoint()
+    }
     // the returned frame is itself a checkpoint (LogicalRDD) — the
     // static node/edge tables' and the last round's blocks can
     // release now (the ConnectedComponents exit discipline;
     // clearCache() would NOT free these, they are not catalog cache)
     ConnectedComponents.releaseCheckpoint(nodes)
     ConnectedComponents.releaseCheckpoint(ew)
-    if (ranks != null) ConnectedComponents.releaseCheckpoint(ranks)
+    ranks.foreach(ConnectedComponents.releaseCheckpoint)
     out
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.pipeline.AnnIndex
 
@@ -64,18 +63,9 @@ object AnnScreenStream {
     * `outDir/batch=<id>/`. */
   def runOnce(spark: SparkSession, inDir: String, indexDir: String,
               outDir: String, checkpointDir: String, schema: StructType,
-              tau: Double): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deliver(spark, batch, batchId, indexDir, outDir, tau)
-      }
-      .start()
-    q.awaitTermination()
-  }
+              tau: Double): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema)(
+      deliver(spark, _, _, indexDir, outDir, tau))
 
   /** One delivery of one micro-batch — factored out of foreachBatch
     * so the at-least-once contract is directly testable: calling

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Continuous corpus-statistics maintenance — the streaming twin of
@@ -29,17 +28,10 @@ object CorpusStatsStream {
     * need not exist (the first batch creates it). Safe to call
     * repeatedly as files land. */
   def runOnce(spark: SparkSession, inDir: String, storeDir: String,
-              checkpointDir: String, schema: StructType): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              checkpointDir: String, schema: StructType): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema) {
+      (batch, batchId) =>
         graft.pipeline.CorpusStatsMaintenance
           .absorb(spark, batch, storeDir, s"b$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Continuous curation screen — the streaming twin of
@@ -15,8 +14,8 @@ import org.apache.spark.sql.types.StructType
   * queue — a gate that discards invisibly is how corpora rot), and
   * surviving docs land under `goodDir/batch=<id>` — BOTH copies
   * PII-SCRUBBED (q124's masks, per-doc `n_pii` lineage). The reject
-  * queue is itself a long-lived downstream persistence (round-14
-  * advisor), so it gets the same scrub as the good store: the audit
+  * queue is itself a long-lived downstream persistence, so it gets
+  * the same scrub as the good store: the audit
   * signal survives in the flags and `n_pii`, the raw bytes do not
   * outlive the screen anywhere. A production feed gates junk and
   * strips PII before anything downstream persists raw bytes; the
@@ -43,18 +42,9 @@ object CurationScreenStream {
     * as files land. */
   def runOnce(spark: SparkSession, inDir: String, goodDir: String,
               rejectDir: String, checkpointDir: String,
-              schema: StructType): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deliver(batch, batchId, goodDir, rejectDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+              schema: StructType): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema)(
+      deliver(_, _, goodDir, rejectDir))
 
   /** One delivery of one micro-batch — factored out of foreachBatch
     * so the at-least-once contract is directly testable: calling

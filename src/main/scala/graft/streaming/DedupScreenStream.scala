@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.pipeline.DedupIndex
 
@@ -32,7 +31,7 @@ import graft.pipeline.DedupIndex
   * q23/q24 formulation, where intra-batch dedup is its own pass);
   * across batches the absorb closes the loop.
   *
-  * Cluster-maintenance reachability (round-8 fix): the main index
+  * Cluster-maintenance reachability: the main index
   * absorbs only UNIQUE docs, but Jaccard similarity is not
   * transitive — a later doc X may near-dup an earlier batch's
   * screened-OUT doc Y without near-dupping Y's own match Z, and a
@@ -69,18 +68,9 @@ object DedupScreenStream {
     * ([[graft.pipeline.ClusterMaintenance]] — init it first). */
   def runOnce(spark: SparkSession, inDir: String, indexDir: String,
               outDir: String, checkpointDir: String,
-              schema: StructType, labelDir: Option[String] = None): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        deliver(spark, batch, batchId, indexDir, outDir, labelDir)
-      }
-      .start()
-    q.awaitTermination()
-  }
+              schema: StructType, labelDir: Option[String] = None): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema)(
+      deliver(spark, _, _, indexDir, outDir, labelDir))
 
   /** One delivery of one micro-batch: screen (own run excluded),
     * write verdicts to the idempotent `batch=<id>` sink, absorb the

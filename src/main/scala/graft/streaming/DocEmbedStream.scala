@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 import graft.ops.{TextOps, WeightedAvgVec}
 
@@ -23,13 +22,9 @@ object DocEmbedStream {
     * append exactly once. Safe to call repeatedly as files land. */
   def runOnce(spark: SparkSession, inDir: String, outDir: String,
               checkpointDir: String, schema: StructType,
-              maxTokens: Int, dim: Int): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+              maxTokens: Int, dim: Int): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema) {
+      (batch, batchId) =>
         val pooled = batch
           .select(col("doc_id").as("id"), TextOps.tokens(col("text")).as("toks"))
           // outer: a zero-token doc still reaches the sink (the
@@ -41,11 +36,6 @@ object DocEmbedStream {
           .withColumn("w", coalesce(length(col("chunk")), lit(0)).cast("double"))
           .groupBy(col("id"))
           .agg(WeightedAvgVec.asUdaf(col("emb"), col("w")).as("embedding"))
-        // foreachBatch is at-least-once; the batch-id dir + overwrite
-        // makes the write idempotent (exactly-once downstream)
-        pooled.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
+        FileIngest.batchSink(outDir)(pooled, batchId)
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** Stream-stream join (M4 extension): click attribution — each view
@@ -48,20 +47,11 @@ object EventJoin {
   def runOnce(spark: SparkSession, inDir: String, outDir: String,
               checkpointDir: String, schema: StructType,
               delay: String = "2 hours", maxLag: String = "2 hours"): Unit = {
-    val events = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val events = FileIngest.source(spark, inDir, schema)
     val joined = viewClicks(
       events.filter(col("event_type") === "view"),
       events.filter(col("event_type") === "click"),
       delay, maxLag)
-    val q = joined.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    FileIngest.drain(joined, checkpointDir)(FileIngest.batchSink(outDir))
   }
 }

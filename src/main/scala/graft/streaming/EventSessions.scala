@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types.StructType
 import java.sql.Timestamp
 
@@ -81,24 +81,13 @@ object EventSessions {
               checkpointDir: String, schema: StructType,
               gapMs: Long = 3600000L, delay: String = "1 hour"): Unit = {
     import spark.implicits._
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val sessions = FileIngest.source(spark, inDir, schema)
       .withWatermark("ts", delay)
       .select($"user_id", $"ts").as[EventIn]
-    val sessions = stream
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(
         updateKey(gapMs))
-    val q = sessions.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      // idempotent per-batchId sink — see EventWindows.runOnce
-      .foreachBatch { (batch: Dataset[Session], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    FileIngest.drain(sessions, checkpointDir)(FileIngest.batchSink(outDir))
   }
 
   /** Batch twin for differential testing: same session semantics

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
 /** M4 — the honest Structured-Streaming version of the reference's
@@ -37,19 +36,10 @@ object EventWindows {
   def dedupStream(spark: SparkSession, inDir: String, outDir: String,
                   checkpointDir: String, schema: StructType,
                   delay: String = "1 hour"): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
+    val stream = FileIngest.source(spark, inDir, schema)
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("event_id")
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
+    FileIngest.drain(stream, checkpointDir)(FileIngest.batchSink(outDir))
   }
 
   /** Stream-static enrichment join: each micro-batch broadcast-joins
@@ -73,27 +63,11 @@ object EventWindows {
     * `inDir` (Trigger.AvailableNow ≙ one `run.py` invocation;
     * re-invoking with the same checkpoint resumes — L3). Append
     * output mode: only watermark-closed windows are emitted, each
-    * exactly once across runs. maxFilesPerTrigger=1 keeps per-batch
-    * state bounded no matter how many files accumulated. */
+    * exactly once across runs. */
   def runOnce(spark: SparkSession, inDir: String, outDir: String,
               checkpointDir: String, schema: StructType,
-              windowDur: String = "1 day", delay: String = "1 hour"): Unit = {
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(inDir)
-    val agg = windowedCounts(stream, windowDur, delay)
-    val q = agg.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      // batchId-keyed subdir + overwrite = idempotent sink: foreachBatch
-      // is at-least-once (a crash between sink commit and checkpoint
-      // commit replays the batch), so a plain append would duplicate
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
+              windowDur: String = "1 day", delay: String = "1 hour"): Unit =
+    FileIngest.drain(
+      windowedCounts(FileIngest.source(spark, inDir, schema), windowDur, delay),
+      checkpointDir)(FileIngest.batchSink(outDir))
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** Continuous release-governance maintenance — the streaming twin of
@@ -27,34 +26,20 @@ object GovernanceStream {
     * (nationkey, segment, band, sensitive) are new in `inDir`
     * (Trigger.AvailableNow); safe to call repeatedly as files land. */
   def runQiOnce(spark: SparkSession, inDir: String, storeDir: String,
-                checkpointDir: String, schema: StructType): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                checkpointDir: String, schema: StructType): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema) {
+      (batch, batchId) =>
         graft.pipeline.GovernanceMaintenance
           .absorbQi(spark, batch, storeDir, s"b$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** Same pass over raw document parquet (doc_id, source, text) for
     * the bootstrap partials. */
   def runBootOnce(spark: SparkSession, inDir: String, storeDir: String,
-                  checkpointDir: String, schema: StructType): Unit = {
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir)
-    val q = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                  checkpointDir: String, schema: StructType): Unit =
+    FileIngest.runOnce(spark, inDir, checkpointDir, schema) {
+      (batch, batchId) =>
         graft.pipeline.GovernanceMaintenance
           .absorbBoot(spark, batch, storeDir, s"b$batchId")
-      }
-      .start()
-    q.awaitTermination()
-  }
+    }
 }

@@ -14,8 +14,8 @@ import graft.sources.JsonlIngest
   * construction): typed good rows land under `goodDir/run=b<id>`,
   * torn lines verbatim under `quarantineDir/run=b<id>`, both keyed
   * by the micro-batch id so an at-least-once re-execution replaces
-  * its own partitions ([[FileIngest]]'s delivery discipline, via
-  * [[FileIngest.runOnceText]] — a schema-pinned streaming reader
+  * its own partitions ([[FileIngest]]'s delivery discipline, over
+  * [[FileIngest.textSource]] — a schema-pinned streaming reader
   * would swallow exactly the torn bytes the quarantine exists to
   * keep).
   *
@@ -34,12 +34,13 @@ object JsonlIngestStream {
               quarantineDir: String, checkpointDir: String,
               schema: StructType, csv: Boolean = false,
               header: Boolean = true): Unit =
-    FileIngest.runOnceText(spark, inDir, checkpointDir) { (batch, batchId) =>
-      val (good, bad) =
-        if (csv) JsonlIngest.csvChannel(batch, schema, header)
-        else JsonlIngest.jsonChannel(batch, schema)
-      JsonlIngest.writeQuarantine(bad, quarantineDir, s"b$batchId")
-      good.write.mode("overwrite").parquet(s"$goodDir/run=b$batchId")
+    FileIngest.drain(FileIngest.textSource(spark, inDir), checkpointDir) {
+      (batch, batchId) =>
+        val (good, bad) =
+          if (csv) JsonlIngest.csvChannel(batch, schema, header)
+          else JsonlIngest.jsonChannel(batch, schema)
+        JsonlIngest.writeQuarantine(bad, quarantineDir, s"b$batchId")
+        good.write.mode("overwrite").parquet(s"$goodDir/run=b$batchId")
     }
 
   /** Typed good rows across every absorbed micro-batch, tagged with

@@ -24,19 +24,28 @@ class PlanAuditSpec extends AnyFunSuite {
   // The window DISCOVERY must descend like the bounded() checks do: a
   // WindowExec planned inside a persisted frame hangs off the
   // InMemoryRelation's cachedPlan (InMemoryTableScanExec is a LEAF),
-  // so a plain plan.collect never sees it — and the catalog now
-  // persists many derived frames. AQE wrappers hide subtrees the same
-  // way. (r19 advisor note.)
+  // so a plain plan.collect never sees it — and the catalog persists
+  // many derived frames. AQE wrappers hide subtrees the same way. A
+  // persisted frame scanned twice is descended once: each scan holds
+  // its own InMemoryRelation copy, but the copies share one
+  // CachedRDDBuilder, so that is the identity deduped on.
   private def collectWindows(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.window.WindowExec] = p.collect {
-    case w: org.apache.spark.sql.execution.window.WindowExec => Seq(w)
-    case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-      collectWindows(im.relation.cachedPlan)
-    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-      collectWindows(a.executedPlan)
-    case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-      collectWindows(q.plan)
-  }.flatten
+      : Seq[org.apache.spark.sql.execution.window.WindowExec] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])
+    def go(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.window.WindowExec] = p.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec => Seq(w)
+      case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+          if seen.add(im.relation.cacheBuilder) =>
+        go(im.relation.cachedPlan)
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        go(a.executedPlan)
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+        go(q.plan)
+    }.flatten
+    go(p)
+  }
 
   // q25 broadcasts a 3-row query-vector set against the scan with an
   // always-true condition — an intentional BroadcastNestedLoopJoin

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.streaming.EventWindows
+import graft.streaming.{EventWindows, FileIngest}
 import java.nio.file.Files
 
 /** M4 — Structured Streaming analog of the reference's micro-batch
@@ -127,8 +127,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static enrichment join: per-batch broadcast dim, emitted windows match the batch twin") {
     import spark.implicits._
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.Trigger
     val events = Tables.events(spark, sf)
       .select("event_id", "ts", "user_id", "event_type")
     val schema = events.schema
@@ -140,19 +138,11 @@ class StreamingSpec extends AnyFunSuite {
     val dim = spark.read.parquet(dimDir)
 
     val inDir = tmp("enr-in"); val outDir = tmp("enr-out"); val ck = tmp("enr-ck")
-    def runOnce(): Unit = {
-      val stream = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(inDir)
-      val agg = EventWindows.enrichedCounts(stream, dim, "user_id",
-        "segment", "1 day", "1 hour")
-      val q = agg.writeStream.outputMode("append")
-        .option("checkpointLocation", ck).trigger(Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          b.write.mode("overwrite").parquet(s"$outDir/batch=$id")
-        }
-        .start()
-      q.awaitTermination()
-    }
+    def runOnce(): Unit =
+      FileIngest.drain(
+        EventWindows.enrichedCounts(FileIngest.source(spark, inDir, schema),
+          dim, "user_id", "segment", "1 day", "1 hour"),
+        ck)(FileIngest.batchSink(outDir))
     val cut = "2024-01-20 00:00:00"
     events.filter(col("ts") < lit(cut)).coalesce(1).write.mode("append").parquet(inDir)
     runOnce()
@@ -732,5 +722,28 @@ class StreamingSpec extends AnyFunSuite {
     CorpusStatsStream.runOnce(spark, in, store, ck, schema)
     CorpusStatsMaintenance.absorb(spark, f1, store, "b0")
     assert(served == batch, "replay changed the served statistics")
+  }
+
+  test("only the streaming runner starts a query: no other src/main file calls readStream or writeStream") {
+    import scala.jdk.CollectionConverters._
+    // read from the project root, where the suite runs
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    val runner = root.resolve("graft/streaming/FileIngest.scala")
+    assert(Files.isRegularFile(runner), s"no $runner under ${root.toAbsolutePath}")
+    val walk = Files.walk(root)
+    val sources = try walk.iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val call = """\.\s*(readStream|writeStream)\b""".r
+    def calls(p: java.nio.file.Path): Seq[String] =
+      Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined =>
+          s"$p:${i + 1}: ${line.trim}"
+      }
+    // the runner still holds the calls, so the pattern cannot go stale
+    assert(calls(runner).nonEmpty, s"$runner no longer matches $call")
+    val elsewhere = sources.filter(_ != runner).flatMap(calls)
+    assert(elsewhere.isEmpty,
+      s"streaming queries must start through FileIngest:\n${elsewhere.mkString("\n")}")
   }
 }
