@@ -5,10 +5,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-run delivery acknowledgement for stores whose ONE logical
-  * delivery spans SEVERAL parquet sub-store writes — the
-  * generalization of the round-17 governance fix (the r16 advisor's
-  * crash window): two (or four, or five) parquet writes are not
-  * atomic together, so a crash between them leaves `run=<id>`
+  * delivery spans SEVERAL parquet sub-store writes (and, through
+  * [[CountStore]], for every count-store delivery): two (or four, or
+  * five) parquet writes are not atomic together, so a crash between
+  * them leaves `run=<id>`
   * present in some sub-stores and absent from others. Served
   * statistics that JOIN across sub-stores (q172's CI against its own
   * point estimate; q154's H2 − H1 across term and bigram counts;
@@ -16,8 +16,9 @@ import org.apache.spark.sql.functions._
   * over inconsistent corpora — and a compaction before the retry
   * folds the inconsistency into `run=base` permanently.
   *
-  * Protocol (one marker file per run at the STORE ROOT, beside the
-  * sub-store dirs):
+  * Protocol (one marker file per run in the `root` a store names —
+  * the store root, beside the sub-store dirs, unless two groups
+  * share that root):
   *   - the absorb/append path writes ALL sub-stores, then [[mark]]s
   *     — the commit point;
   *   - every read path filters partitioned reads through

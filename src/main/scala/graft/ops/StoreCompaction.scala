@@ -124,12 +124,12 @@ object StoreCompaction {
       .filter(_.getName.startsWith(prefix + "="))
 
   /** Whether `path` holds ANY committed parquet data file — the
-    * empty-store probe shared by the delta stores' read entry points
-    * (MixtureMaintenance, DriftMonitor). Two empty shapes, neither a
-    * crash: no dir at all, and a dir whose first write is still in
-    * flight (only `_temporary` exists — spark.read would fail schema
-    * inference), so the probe walks for a committed `.parquet` file,
-    * not fs.exists. */
+    * empty-store probe shared by JsonlIngest's quarantine, the
+    * screened-good stores and the hybrid store's codebooks. Two empty
+    * shapes, neither a crash: no dir at all, and a dir whose first
+    * write is still in flight (only `_temporary` exists — spark.read
+    * would fail schema inference), so the probe walks for a committed
+    * `.parquet` file, not fs.exists. */
   private[graft] def hasParquetData(spark: SparkSession, path: String): Boolean = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -145,7 +145,7 @@ object StoreCompaction {
   /** How many `<prefix>=` partitions a store currently holds, after
     * healing any interrupted fold — the compaction-contract spec
     * hook shared by every run-partitioned store (DedupIndex,
-    * MixtureMaintenance). */
+    * CountStore). */
   private[graft] def runCount(spark: SparkSession, path: String,
                               prefix: String): Int = {
     heal(spark, path, prefix)

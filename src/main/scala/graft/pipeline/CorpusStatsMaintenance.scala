@@ -11,8 +11,7 @@ import org.apache.spark.sql.functions._
   * four are pure functions of ONE sufficient statistic, the (lang,
   * term) count table, and counts are additive across disjoint
   * deliveries. So the store keeps per-run term counts ([[absorb]]
-  * tokenizes only the arriving batch), folds them with the
-  * [[graft.ops.StoreCompaction]] crash-recoverable protocol, and
+  * tokenizes only the arriving batch) in a [[graft.ops.CountStore]], and
   * serves the statistics through the SAME `FromCounts` derivations
   * the gated queries run — served ≡ batch is structural, not
   * aspirational (the [[MixtureMaintenance]]/[[HybridRetrieval]]
@@ -28,8 +27,8 @@ import org.apache.spark.sql.functions._
   * collocations — raw (unfloored) counts are load-bearing for both
   * (q125's ≥5 noise floor must apply to the MERGED counts, and the
   * table's per-lang sum IS the bigram mass both normalizers need —
-  * [[graft.queries.Corpus.bigramCounts]]'s doc). A FOURTH (round
-  * 16): the (source, term) count table, which carries the whole
+  * [[graft.queries.Corpus.bigramCounts]]'s doc). A FOURTH: the
+  * (source, term) count table, which carries the whole
   * source-mixture family — q153's KL drift, q151's DoReMi weights
   * and q177's LOO novelty all serve off it through their
   * `FromCounts` derivations, so the mixture owner re-reads
@@ -37,17 +36,12 @@ import org.apache.spark.sql.functions._
   * delivery. All four statistics come off the one tokenize of the
   * arriving batch.
   *
-  * Store layout: `dir/termcounts/run=<id>/` parquet (lang, w, c),
-  * `dir/lenhist/run=<id>/` parquet (source, len, c),
-  * `dir/bicounts/run=<id>/` parquet (lang, w1, w2, c), and
-  * `dir/srccounts/run=<id>/` parquet (source, w, csw). [[absorb]] is
-  * idempotent under re-delivery (dynamic partition overwrite keyed
-  * on the run id — the house at-least-once convention); a token-less
+  * Store layout: four [[graft.ops.CountStore]] tables under `dir`,
+  * written and acknowledged together by each delivery —
+  * `termcounts` (lang, w, c), `lenhist` (source, len, c), `bicounts`
+  * (lang, w1, w2, c) and `srccounts` (source, w, csw). A token-less
   * batch still histograms its zero-length docs (length 0 is length
-  * evidence even when no term arrives). [[compact]] folds every run
-  * into one partition, SUMMING duplicate rows — the fold is the only
-  * place rows merge, reads always aggregate, so an uncompacted store
-  * serves the same integers as a compacted one.
+  * evidence even when no term arrives).
   *
   * Scale shape: absorb is O(batch); the store holds O(langs·vocab) +
   * O(sources·distinct-lengths) + O(langs·bigram-types) rows
@@ -58,199 +52,114 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStatsMaintenance {
 
-  private def store(dir: String) = s"$dir/termcounts"
-  private def lstore(dir: String) = s"$dir/lenhist"
-  private def bstore(dir: String) = s"$dir/bicounts"
-  private def sstore(dir: String) = s"$dir/srccounts"
+  import graft.ops.CountStore
 
-  // all four statistics derive from ONE tokenize of the batch — the
-  // shared (source, lang, toks) frame persists for the four writes
-  // and unpersists before absorb/build returns
-  private def counts(tk: DataFrame): DataFrame =
-    graft.queries.Corpus.unigramCountsFromToks(tk)
-
-  private def bicounts(tk: DataFrame): DataFrame =
-    graft.queries.Corpus.bigramCountsFromToks(tk)
-
-  private def srccounts(tk: DataFrame): DataFrame =
-    graft.queries.Corpus.sourceTermCountsFromToks(tk)
+  private val Terms =
+    CountStore.Table("termcounts", "lang STRING, w STRING, c BIGINT", "lang", "w")
+  private val Lens =
+    CountStore.Table("lenhist", "source STRING, len BIGINT, c BIGINT", "source", "len")
+  private val Bigrams = CountStore.Table("bicounts",
+    "lang STRING, w1 STRING, w2 STRING, c BIGINT", "lang", "w1", "w2")
+  private val Sources =
+    CountStore.Table("srccounts", "source STRING, w STRING, csw BIGINT", "source", "w")
+  private[graft] val Store = new CountStore("", Terms, Lens, Bigrams, Sources)
 
   private def lenhist(tk: DataFrame): DataFrame =
     tk.select(col("source"), size(col("toks")).cast("long").as("len"))
       .groupBy(col("source"), col("len")).agg(count(lit(1)).as("c"))
 
-  private def withTokenized[T](docs: DataFrame)(f: DataFrame => T): T = {
+  // all four statistics derive from ONE tokenize of the batch — the
+  // shared (source, lang, toks) frame persists for the four writes
+  // and unpersists before absorb/build returns
+  private def withTokenized[T](docs: DataFrame)(f: Seq[DataFrame] => T): T = {
     val tk = graft.queries.Corpus.tokenized(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try f(tk) finally tk.unpersist()
+    try f(Seq(graft.queries.Corpus.unigramCountsFromToks(tk), lenhist(tk),
+      graft.queries.Corpus.bigramCountsFromToks(tk),
+      graft.queries.Corpus.sourceTermCountsFromToks(tk)))
+    finally tk.unpersist()
   }
 
-  /** Full rebuild from a corpus snapshot → `run=base` (both
+  /** Full rebuild from a corpus snapshot → `run=base` (all four
     * statistics). */
   def build(spark: SparkSession, docs: DataFrame, dir: String): Unit =
-    withTokenized(docs) { tk =>
-      // fresh store: stale markers must not approve reused run ids
-      graft.ops.DeliveryMarker.clearAll(spark, dir)
-      counts(tk).withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(store(dir))
-      lenhist(tk).withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(lstore(dir))
-      bicounts(tk).withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(bstore(dir))
-      srccounts(tk).withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(sstore(dir))
-    }
+    withTokenized(docs)(Store.rebuild(spark, dir, _: _*))
 
   /** Absorb one delivery under `run=<runId>` — O(batch), idempotent
-    * under re-delivery (the partition overwrites itself, all four
-    * statistics keyed on the same run id so a replay can never land
-    * one table without the others). The delivery spans FOUR parquet
-    * writes, which are not atomic together: it is acknowledged by
-    * the shared [[graft.ops.DeliveryMarker]] written only after the
-    * fourth lands, and every read/compact path ignores unmarked runs
-    * — a crash inside this method can never skew a cross-sub-store
-    * statistic (q154's H2 − H1 reads term AND bigram counts; q125
-    * likewise) or be folded into run=base before the retry. */
+    * under re-delivery. The four statistics land under the same run
+    * id and are acknowledged together, so a crash inside this method
+    * can never skew a cross-table statistic (q154's H2 − H1 reads
+    * term AND bigram counts; q125 likewise) or be folded into
+    * run=base before the retry. */
   def absorb(spark: SparkSession, docs: DataFrame, dir: String,
-             runId: String): Unit = withTokenized(docs) { tk =>
-    graft.ops.StoreCompaction.heal(spark, store(dir), "run")
-    counts(tk).withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store(dir))
-    graft.ops.StoreCompaction.heal(spark, lstore(dir), "run")
-    lenhist(tk).withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(lstore(dir))
-    graft.ops.StoreCompaction.heal(spark, bstore(dir), "run")
-    bicounts(tk).withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(bstore(dir))
-    graft.ops.StoreCompaction.heal(spark, sstore(dir), "run")
-    srccounts(tk).withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(sstore(dir))
-    // commit point: all four statistics are durable — acknowledge
-    graft.ops.DeliveryMarker.mark(spark, dir, runId)
-  }
+             runId: String): Unit =
+    withTokenized(docs)(Store.absorb(spark, dir, runId, _: _*))
 
-  /** Fold every run into one summed partition per statistic
-    * (crash-recoverable — the StoreCompaction marker protocol; run
-    * at a quiescent point, the store family's documented
-    * contract). */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    def ok(df: DataFrame) = graft.ops.DeliveryMarker.approvedOnly(df, ap)
-    graft.ops.StoreCompaction.fold(spark, store(dir), "run", "base",
-      ok(spark.read.parquet(store(dir)))
-        .groupBy(col("lang"), col("w")).agg(sum(col("c")).as("c")))
-    graft.ops.StoreCompaction.fold(spark, lstore(dir), "run", "base",
-      ok(spark.read.parquet(lstore(dir)))
-        .groupBy(col("source"), col("len")).agg(sum(col("c")).as("c")))
-    graft.ops.StoreCompaction.fold(spark, bstore(dir), "run", "base",
-      ok(spark.read.parquet(bstore(dir)))
-        .groupBy(col("lang"), col("w1"), col("w2"))
-        .agg(sum(col("c")).as("c")))
-    graft.ops.StoreCompaction.fold(spark, sstore(dir), "run", "base",
-      ok(spark.read.parquet(sstore(dir)))
-        .groupBy(col("source"), col("w")).agg(sum(col("csw")).as("csw")))
-    // markers clear only after the LAST fold: a crash between folds
-    // leaves the unfolded sub-stores' approved partitions readable
-    // through the same filter
-    graft.ops.DeliveryMarker.clear(spark, dir, ap)
-  }
+  /** Fold every acknowledged run into one summed partition per
+    * statistic (crash-recoverable; run at a quiescent point, the
+    * store family's documented contract). */
+  def compact(spark: SparkSession, dir: String): Unit = Store.fold(spark, dir)
 
-  /** The summed (lang, w, c) view of whatever runs are on disk —
-    * heal-on-read, aggregation always applied so compaction is
-    * invisible to consumers. */
-  private def merged(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, store(dir), "run")
-    graft.ops.DeliveryMarker.approvedOnly(spark.read.parquet(store(dir)),
-        graft.ops.DeliveryMarker.approved(spark, dir))
-      .groupBy(col("lang"), col("w")).agg(sum(col("c")).as("c"))
-  }
+  private def terms(spark: SparkSession, dir: String) = Store.read(spark, dir)(Terms)
 
-  /** The summed (source, len, c) histogram view — same heal/aggregate
-    * contract. */
-  private def mergedLens(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, lstore(dir), "run")
-    graft.ops.DeliveryMarker.approvedOnly(spark.read.parquet(lstore(dir)),
-        graft.ops.DeliveryMarker.approved(spark, dir))
-      .groupBy(col("source"), col("len")).agg(sum(col("c")).as("c"))
-  }
+  private def sources(spark: SparkSession, dir: String) = Store.read(spark, dir)(Sources)
 
   /** q140's table from the store — same derivation as the query. */
   def lexicalDiversity(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.lexicalDiversityFromCounts(merged(spark, dir))
+    graft.queries.Corpus.lexicalDiversityFromCounts(terms(spark, dir))
 
   /** q152's table from the store. */
   def goodTuring(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.goodTuringFromCounts(merged(spark, dir))
+    graft.queries.Corpus.goodTuringFromCounts(terms(spark, dir))
 
   /** q139's table from the store. */
   def zipfSlope(spark: SparkSession, dir: String): DataFrame =
     graft.queries.Corpus.zipfSlopeFromCounts(
-      merged(spark, dir).withColumnRenamed("c", "freq"))
+      terms(spark, dir).withColumnRenamed("c", "freq"))
 
   /** q162's table from the store. */
   def chaoRichness(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.chaoRichnessFromCounts(merged(spark, dir))
-
-  /** The summed (lang, w1, w2, c) bigram view — same heal/aggregate
-    * contract. */
-  private def mergedBi(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, bstore(dir), "run")
-    graft.ops.DeliveryMarker.approvedOnly(spark.read.parquet(bstore(dir)),
-        graft.ops.DeliveryMarker.approved(spark, dir))
-      .groupBy(col("lang"), col("w1"), col("w2")).agg(sum(col("c")).as("c"))
-  }
+    graft.queries.Corpus.chaoRichnessFromCounts(terms(spark, dir))
 
   /** q159's length-drift table from the store — the per-delivery
     * drift alarm, served without touching the corpus. */
   def lengthDrift(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.lengthDriftFromHist(mergedLens(spark, dir))
+    graft.queries.Corpus.lengthDriftFromHist(Store.read(spark, dir)(Lens))
 
   /** q154's entropy-rate table from the store — H₁/H₂/conditional
     * per language off the merged count tables, no corpus re-scan. */
-  def entropyRate(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.entropyRateFromCounts(
-      merged(spark, dir), mergedBi(spark, dir))
+  def entropyRate(spark: SparkSession, dir: String): DataFrame = {
+    val counts = Store.read(spark, dir)
+    graft.queries.Corpus.entropyRateFromCounts(counts(Terms), counts(Bigrams))
+  }
 
   /** q125's PMI collocation table from the store — the ≥5 noise
     * floor applies to the MERGED bigram counts (the reason the store
     * keeps raw counts), so a pair crossing the floor across
     * deliveries surfaces exactly as the batch chain would rank it. */
-  def pmiBigrams(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.pmiFromCounts(
-      merged(spark, dir), mergedBi(spark, dir))
-
-  /** The summed (source, w, csw) view — same heal/aggregate
-    * contract; the FOURTH additive statistic (round 16), carrying
-    * the source-mixture family. */
-  private def mergedSrc(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, sstore(dir), "run")
-    graft.ops.DeliveryMarker.approvedOnly(spark.read.parquet(sstore(dir)),
-        graft.ops.DeliveryMarker.approved(spark, dir))
-      .groupBy(col("source"), col("w")).agg(sum(col("csw")).as("csw"))
+  def pmiBigrams(spark: SparkSession, dir: String): DataFrame = {
+    val counts = Store.read(spark, dir)
+    graft.queries.Corpus.pmiFromCounts(counts(Terms), counts(Bigrams))
   }
 
   /** q153's source-KL drift table from the store. */
   def sourceKl(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.sourceKlFromCounts(mergedSrc(spark, dir))
+    graft.queries.Corpus.sourceKlFromCounts(sources(spark, dir))
 
   /** q151's DoReMi weight table from the store — the mixture owner
     * re-reads the recommended weights after every delivery. */
   def doremiWeights(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Learn.doremiWeightsFromCounts(mergedSrc(spark, dir))
+    graft.queries.Learn.doremiWeightsFromCounts(sources(spark, dir))
 
   /** q177's LOO novelty table from the store — data valuation per
     * delivery (which provider still adds unpredictable text). */
   def looNovelty(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.looNoveltyFromCounts(mergedSrc(spark, dir))
+    graft.queries.Corpus.looNoveltyFromCounts(sources(spark, dir))
 
   /** q179's Burrows-Delta stylometry table from the store — the
     * provenance-forensics read after every delivery (a provider
     * whose function-word profile jumps mid-stream changed its
     * upstream generator). Fifth consumer of the source-term store. */
   def stylometry(spark: SparkSession, dir: String): DataFrame =
-    graft.queries.Corpus.stylometryFromCounts(mergedSrc(spark, dir))
+    graft.queries.Corpus.stylometryFromCounts(sources(spark, dir))
 }

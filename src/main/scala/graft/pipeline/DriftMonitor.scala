@@ -20,23 +20,28 @@ import org.apache.spark.sql.functions._
   *
   * Lifecycle: [[absorb]] per batch (idempotent — re-running a runId
   * REPLACES that run, so at-least-once delivery is safe);
-  * [[rebase]] freezes the current totals as the new reference via
-  * the crash-recoverable [[graft.ops.StoreCompaction]] protocol
-  * (the "we retrained — this is the new normal" operation);
-  * [[report]] heals interrupted folds first and is pure for a fixed
+  * [[rebase]] freezes the current totals as the new reference (the
+  * "we retrained — this is the new normal" operation; a crash leaves
+  * the old reference or the new one); [[report]] is pure for a fixed
   * store state; [[compact]] folds count runs at a quiescent point.
   * A store with no reference yet reports EMPTY — monitoring begins
   * at the first rebase (ClusterMaintenance's empty-init discipline:
   * an unasked question, not a crash).
   *
-  * Store layout: `dir/bucket_counts/run=<id>` (lang, b, n) delta
-  * rows; `dir/reference/run=base` the frozen reference totals, same
-  * shape.
+  * Store layout: two [[graft.ops.CountStore]] groups of one table
+  * each — `dir/bucket_counts` (lang, b, n) delta rows, and
+  * `dir/reference` the frozen reference totals, same shape.
   */
 object DriftMonitor {
 
-  private def countsPath(dir: String) = s"$dir/bucket_counts"
-  private def refPath(dir: String)    = s"$dir/reference"
+  import graft.ops.CountStore
+
+  private val Buckets =
+    CountStore.Table("bucket_counts", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
+  private val Reference =
+    CountStore.Table("reference", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
+  private[graft] val Counts = new CountStore("", Buckets)
+  private[graft] val Ref = new CountStore("reference", Reference)
 
   /** Absorb one ingest batch: one scan of the BATCH aggregates its
     * (lang, bucket) token counts through the SHARED q116 count
@@ -50,45 +55,15 @@ object DriftMonitor {
     * (b ∈ [0, B)) and carry zero mass; they only widen the lang
     * union [[report]] covers. */
   def absorb(spark: SparkSession, docs: DataFrame, dir: String,
-             runId: String): Unit = {
-    graft.ops.StoreCompaction.heal(spark, countsPath(dir), "run")
-    graft.queries.Corpus.bucketCounts(docs, "n")
+             runId: String): Unit =
+    Counts.absorb(spark, dir, runId, graft.queries.Corpus.bucketCounts(docs, "n")
       .unionByName(docs.select(col("lang")).distinct()
-        .select(col("lang"), lit(-1L).as("b"), lit(0L).as("n")))
-      .write.mode("overwrite").parquet(s"${countsPath(dir)}/run=$runId")
-  }
+        .select(col("lang"), lit(-1L).as("b"), lit(0L).as("n"))))
 
-  /** Fold a store's (lang, b) counts across runs; empty-store →
-    * empty frame (probe semantics: StoreCompaction.hasParquetData). */
-  private def foldedCounts(spark: SparkSession, path: String,
-                           as: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, path, "run")
-    if (!graft.ops.StoreCompaction.hasParquetData(spark, path))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          s"lang STRING, b BIGINT, $as BIGINT"))
-    else spark.read.parquet(path)
-      .groupBy(col("lang"), col("b")).agg(sum(col("n")).as(as))
-  }
-
-  /** Freeze the CURRENT folded totals as the new reference. Runs the
-    * crash-recoverable fold protocol over the reference store
-    * (force = the new snapshot differs from whatever run=base holds,
-    * AnnIndex's tombstone-fold argument); the first rebase of a
-    * fresh deployment writes the partition directly — there is no
-    * prior reference to protect. Quiescent-point contract as every
-    * fold: no in-flight absorb. */
-  def rebase(spark: SparkSession, dir: String): Unit = {
-    val cur = foldedCounts(spark, countsPath(dir), "n")
-    val p = new org.apache.hadoop.fs.Path(refPath(dir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p))
-      cur.write.mode("overwrite").parquet(s"${refPath(dir)}/run=base")
-    else
-      graft.ops.StoreCompaction.fold(spark, refPath(dir), "run", "base",
-        cur, force = true)
-  }
+  /** Freeze the CURRENT folded totals as the new reference.
+    * Quiescent-point contract as every fold: no in-flight absorb. */
+  def rebase(spark: SparkSession, dir: String): Unit =
+    Ref.rebuild(spark, dir, Counts.read(spark, dir)(Buckets))
 
   /** Per-lang drift report (lang, n_old, n_new, jsd_nano): the
     * reference distribution vs the current folded counts, through
@@ -97,35 +72,21 @@ object DriftMonitor {
     * folds, not q116's corpus scans, so a monitoring endpoint polled
     * in a long-lived session carries no cache obligation). Old =
     * reference, new = current; roster rows widen the lang union so
-    * token-less langs still report. No reference yet → empty report
-    * — and that early return does exactly ONE heal + probe of the
-    * reference store, nothing on the counts store. */
+    * token-less langs still report. No reference yet → empty report. */
   def report(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, refPath(dir), "run")
-    if (!graft.ops.StoreCompaction.hasParquetData(spark, refPath(dir)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "lang STRING, n_old BIGINT, n_new BIGINT, jsd_nano BIGINT"))
-    else {
-      // healed and probed non-empty above — read directly
-      val ref = spark.read.parquet(refPath(dir))
-        .groupBy(col("lang"), col("b")).agg(sum(col("n")).as("co"))
-      val cur = foldedCounts(spark, countsPath(dir), "cn")
-      graft.queries.Corpus.jsdFromCounts(ref, cur,
-        ref.select(col("lang")).union(cur.select(col("lang"))).distinct(),
-        persistGrid = false)
-    }
+    val ref = Ref.read(spark, dir)(Reference).withColumnRenamed("n", "co")
+    val cur = Counts.read(spark, dir)(Buckets).withColumnRenamed("n", "cn")
+    // no reference yet: monitoring has not started, no lang reports
+    val langs = if (Ref.runCount(spark, dir) == 0) ref.select(col("lang"))
+      else ref.select(col("lang")).union(cur.select(col("lang"))).distinct()
+    graft.queries.Corpus.jsdFromCounts(ref, cur, langs, persistGrid = false)
   }
 
   /** Fold all count-run deltas into one `run=base`
     * (crash-recoverable; quiescent-point contract). */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.ops.StoreCompaction.fold(spark, countsPath(dir), "run", "base",
-      spark.read.parquet(countsPath(dir)).drop("run")
-        .groupBy(col("lang"), col("b")).agg(sum(col("n")).as("n")))
+  def compact(spark: SparkSession, dir: String): Unit = Counts.fold(spark, dir)
 
   /** How many `run=` partitions the count store holds (spec hook). */
   private[graft] def runCount(spark: SparkSession, dir: String): Int =
-    graft.ops.StoreCompaction.runCount(spark, countsPath(dir), "run")
+    Counts.runCount(spark, dir)
 }

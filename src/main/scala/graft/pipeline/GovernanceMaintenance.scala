@@ -1,10 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental release-governance maintenance — the
-  * [[CorpusStatsMaintenance]] doctrine applied to the round-16
+  * [[CorpusStatsMaintenance]] doctrine applied to the
   * governance/uncertainty pair:
   *
   *  - **q171 k-anonymity / l-diversity**: the audit's whole input is
@@ -20,15 +19,15 @@ import org.apache.spark.sql.functions._
   *    delivery without ever resampling the corpus (the incremental
   *    posture Chamandy et al.'s streaming formulation was built for).
   *
-  * Store layout (one root, three keyed sub-stores, all `run=<id>`
-  * partitioned): `dir/qicounts` (nationkey, segment, band, sensitive,
-  * n), `dir/bootreps` (source, b, s, wsum), `dir/bootpoint` (source,
-  * n_docs, lsum). Absorbs are idempotent under re-delivery (dynamic
-  * partition overwrite keyed on the run id — the house at-least-once
-  * convention); compaction folds runs with the crash-recoverable
-  * [[graft.ops.StoreCompaction]] protocol; reads always aggregate,
-  * so an uncompacted store serves the same integers as a compacted
-  * one. Serving goes through the SAME `FromCounts` derivations the
+  * Store layout: one root, two [[graft.ops.CountStore]] groups —
+  * `dir/qicounts` (nationkey, segment, band, sensitive, n) alone,
+  * and the bootstrap pair `dir/bootreps` (source, b, s, wsum) +
+  * `dir/bootpoint` (source, n_docs, lsum), which one delivery writes
+  * and acknowledges together so a crash between the two writes can
+  * never skew the CI against its own point estimate. The QI group
+  * keeps its acks inside `qicounts`, apart from the pair's at the
+  * root: a QI delivery `bX` never approves a half-landed bootstrap
+  * `bX`. Serving goes through the SAME `FromCounts` derivations the
   * gated queries run — served ≡ batch is structural
   * (GovernanceMaintenanceSpec proves it over the union).
   *
@@ -37,152 +36,70 @@ import org.apache.spark.sql.functions._
   */
 object GovernanceMaintenance {
 
-  private def qiStore(dir: String)  = s"$dir/qicounts"
-  private def repStore(dir: String) = s"$dir/bootreps"
-  private def ptStore(dir: String)  = s"$dir/bootpoint"
+  import graft.ops.CountStore
 
-  // ---- q172 delivery markers --------------------------------------
-  // A bootstrap delivery spans TWO sub-stores (bootreps + bootpoint),
-  // and two parquet writes are not atomic together: a crash between
-  // them leaves run=<id> present in one store but absent from the
-  // other, and a compaction before the retry would fold that
-  // half-landed state into run=base permanently (the round-16
-  // advisor's window). absorbBoot acknowledges a delivery through
-  // the shared [[graft.ops.DeliveryMarker]] protocol (marker written
-  // only AFTER both writes; unmarked runs invisible to reads and
-  // dropped by compaction; markers cleared after the last fold) —
-  // protocol semantics documented once there.
-
-  import graft.ops.DeliveryMarker
-
-  /** Run ids whose delivery committed BOTH sub-stores. */
-  private[graft] def approvedBootRuns(spark: SparkSession,
-                                      dir: String): Set[String] =
-    DeliveryMarker.approved(spark, dir)
+  private val QiCounts = CountStore.Table("qicounts",
+    "nationkey BIGINT, segment STRING, band BIGINT, sensitive DOUBLE, n BIGINT",
+    "nationkey", "segment", "band", "sensitive")
+  private[graft] val Qi = new CountStore("qicounts", QiCounts)
+  private val Reps =
+    CountStore.Table("bootreps", "source STRING, b INT, s BIGINT, wsum BIGINT", "source", "b")
+  private val Points =
+    CountStore.Table("bootpoint", "source STRING, n_docs BIGINT, lsum BIGINT", "source")
+  private[graft] val Boot = new CountStore("", Reps, Points)
 
   // ---- q171: k-anonymity / l-diversity --------------------------
 
   /** Full rebuild from a records snapshot → `run=base`. `rows` is
     * the q171 input shape (nationkey, segment, band, sensitive). */
   def buildQi(spark: SparkSession, rows: DataFrame, dir: String): Unit =
-    graft.queries.Cleaning.qiCounts(rows)
-      .withColumn("run", lit("base"))
-      .write.partitionBy("run").mode("overwrite").parquet(qiStore(dir))
+    Qi.rebuild(spark, dir, graft.queries.Cleaning.qiCounts(rows))
 
   /** Absorb one delivery under `run=<runId>` — O(batch), idempotent
     * under re-delivery. */
   def absorbQi(spark: SparkSession, rows: DataFrame, dir: String,
-               runId: String): Unit = {
-    graft.ops.StoreCompaction.heal(spark, qiStore(dir), "run")
-    graft.queries.Cleaning.qiCounts(rows)
-      .withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(qiStore(dir))
-  }
+               runId: String): Unit =
+    Qi.absorb(spark, dir, runId, graft.queries.Cleaning.qiCounts(rows))
 
   /** Fold every run into one summed partition (crash-recoverable;
     * run at a quiescent point — the store family's contract). */
-  def compactQi(spark: SparkSession, dir: String): Unit =
-    graft.ops.StoreCompaction.fold(spark, qiStore(dir), "run", "base",
-      spark.read.parquet(qiStore(dir))
-        .groupBy(col("nationkey"), col("segment"), col("band"),
-          col("sensitive"))
-        .agg(sum(col("n")).as("n")))
+  def compactQi(spark: SparkSession, dir: String): Unit = Qi.fold(spark, dir)
 
-  /** The q171 release audit from the store — heal-on-read,
-    * aggregation always applied so compaction is invisible. */
-  def kAnonymity(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, qiStore(dir), "run")
-    graft.queries.Cleaning.kAnonymityFromCounts(
-      spark.read.parquet(qiStore(dir))
-        .groupBy(col("nationkey"), col("segment"), col("band"),
-          col("sensitive"))
-        .agg(sum(col("n")).as("n")))
-  }
+  /** The q171 release audit from the store. */
+  def kAnonymity(spark: SparkSession, dir: String): DataFrame =
+    graft.queries.Cleaning.kAnonymityFromCounts(Qi.read(spark, dir)(QiCounts))
 
   // ---- q172: Poisson-bootstrap CI --------------------------------
 
+  private def withPartials[T](docs: DataFrame)(f: Seq[DataFrame] => T): T = {
+    val in = graft.queries.Sketch.bootInput(docs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try f(Seq(graft.queries.Sketch.bootRepPartials(in),
+      graft.queries.Sketch.bootPointPartials(in)))
+    finally in.unpersist()
+  }
+
   /** Full rebuild from a documents snapshot → `run=base`. `docs` is
     * a raw (doc_id, source, text) document frame. */
-  def buildBoot(spark: SparkSession, docs: DataFrame, dir: String): Unit = {
-    // fresh store: stale markers from a previous deployment must not
-    // approve future runs that happen to reuse an id
-    DeliveryMarker.clearAll(spark, dir)
-    val in = graft.queries.Sketch.bootInput(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.queries.Sketch.bootRepPartials(in)
-        .withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(repStore(dir))
-      graft.queries.Sketch.bootPointPartials(in)
-        .withColumn("run", lit("base"))
-        .write.partitionBy("run").mode("overwrite").parquet(ptStore(dir))
-    } finally in.unpersist()
-  }
+  def buildBoot(spark: SparkSession, docs: DataFrame, dir: String): Unit =
+    withPartials(docs)(Boot.rebuild(spark, dir, _: _*))
 
   /** Absorb one document delivery under `run=<runId>` — O(batch·B)
-    * map work, O(sources·B) rows written, idempotent. Both
-    * sub-stores write under the SAME run id, and the delivery is
-    * acknowledged by the [[DeliveryMarker]] created only
-    * AFTER both writes land — until then the read/compact paths
-    * ignore the run, so a crash between the two writes can never be
-    * served or folded (see the marker note above). */
+    * map work, O(sources·B) rows written, idempotent; both
+    * sub-stores land before the delivery is acknowledged. */
   def absorbBoot(spark: SparkSession, docs: DataFrame, dir: String,
-                 runId: String): Unit = {
-    graft.ops.StoreCompaction.heal(spark, repStore(dir), "run")
-    graft.ops.StoreCompaction.heal(spark, ptStore(dir), "run")
-    val in = graft.queries.Sketch.bootInput(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.queries.Sketch.bootRepPartials(in)
-        .withColumn("run", lit(runId))
-        .write.partitionBy("run").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(repStore(dir))
-      graft.queries.Sketch.bootPointPartials(in)
-        .withColumn("run", lit(runId))
-        .write.partitionBy("run").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic").parquet(ptStore(dir))
-      // commit point: both halves are durable — acknowledge
-      DeliveryMarker.mark(spark, dir, runId)
-    } finally in.unpersist()
-  }
+                 runId: String): Unit =
+    withPartials(docs)(Boot.absorb(spark, dir, runId, _: _*))
 
-  /** Fold both bootstrap sub-stores (each crash-recoverable). Only
-    * marker-approved runs fold; a half-landed (unacknowledged) run's
-    * partitions are DROPPED, not merged — its delivery will be
-    * retried whole under the at-least-once contract. Markers for the
-    * folded runs delete after BOTH folds complete (a crash between
-    * the folds leaves the second store's approved partitions
-    * readable through the same filter, so serving stays consistent
-    * across the window). */
-  def compactBoot(spark: SparkSession, dir: String): Unit = {
-    val approved = approvedBootRuns(spark, dir)
-    graft.ops.StoreCompaction.fold(spark, repStore(dir), "run", "base",
-      DeliveryMarker.approvedOnly(spark.read.parquet(repStore(dir)), approved)
-        .groupBy(col("source"), col("b"))
-        .agg(sum(col("s")).as("s"), sum(col("wsum")).as("wsum")))
-    graft.ops.StoreCompaction.fold(spark, ptStore(dir), "run", "base",
-      DeliveryMarker.approvedOnly(spark.read.parquet(ptStore(dir)), approved)
-        .groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("lsum")).as("lsum")))
-    DeliveryMarker.clear(spark, dir, approved)
-  }
+  /** Fold both bootstrap sub-stores; a half-landed (unacknowledged)
+    * run is dropped, not merged — its delivery will be retried whole
+    * under the at-least-once contract. */
+  def compactBoot(spark: SparkSession, dir: String): Unit = Boot.fold(spark, dir)
 
-  /** The q172 CI table from the store — heal-on-read, aggregation
-    * always applied so compaction is invisible. */
+  /** The q172 CI table from the store — both sub-stores read under
+    * one snapshot of the acks. */
   def bootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, repStore(dir), "run")
-    graft.ops.StoreCompaction.heal(spark, ptStore(dir), "run")
-    // serve only marker-acknowledged deliveries: a crash between the
-    // two absorb writes must never skew the CI against its own point
-    // estimate (run filters hit the partition column — pruned reads)
-    val approved = approvedBootRuns(spark, dir)
-    graft.queries.Sketch.bootstrapCiFromCounts(
-      DeliveryMarker.approvedOnly(spark.read.parquet(repStore(dir)), approved)
-        .groupBy(col("source"), col("b"))
-        .agg(sum(col("s")).as("s"), sum(col("wsum")).as("wsum")),
-      DeliveryMarker.approvedOnly(spark.read.parquet(ptStore(dir)), approved)
-        .groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("lsum")).as("lsum")))
+    val counts = Boot.read(spark, dir)
+    graft.queries.Sketch.bootstrapCiFromCounts(counts(Reps), counts(Points))
   }
 }

@@ -26,54 +26,38 @@ import graft.ops.TextOps
   * rounded rate; content-hash compare), so re-cutting the same
   * snapshot reproduces the same corpus bit-for-bit.
   *
-  * Store layout: `dir/domain_counts/run=<id>` parquet rows
-  * (lang, n_docs, n_tokens) — one aggregated delta per absorbed
-  * batch. Re-running a runId REPLACES that run (at-least-once
-  * delivery stays idempotent); [[compact]] folds all runs to
-  * `run=base` via the crash-recoverable [[graft.ops.StoreCompaction]]
-  * protocol, and every read entry point heals an interrupted fold
-  * first.
+  * Store layout: one [[graft.ops.CountStore]] table,
+  * `dir/domain_counts` (lang, n_docs, n_tokens) — one aggregated
+  * delta per absorbed batch.
   */
 object MixtureMaintenance {
 
-  private def countsPath(dir: String) = s"$dir/domain_counts"
+  import graft.ops.CountStore
+
+  private val Counts = CountStore.Table("domain_counts",
+    "lang STRING, n_docs BIGINT, n_tokens BIGINT", "lang")
+  private[graft] val Store = new CountStore("", Counts)
 
   /** Absorb one ingest batch: one scan of the BATCH aggregates its
     * per-domain (n_docs, n_tokens) and lands it under
     * `run=<runId>`. Nothing O(corpus). */
   def absorb(spark: SparkSession, docs: DataFrame, dir: String,
-             runId: String): Unit = {
-    graft.ops.StoreCompaction.heal(spark, countsPath(dir), "run")
-    docs
+             runId: String): Unit =
+    Store.absorb(spark, dir, runId, docs
       .select(col("lang"), TextOps.tokenCount(col("text")).cast("long").as("n_tok"))
       .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      .write.mode("overwrite").parquet(s"${countsPath(dir)}/run=$runId")
-  }
+      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens")))
 
   /** Fold per-domain counts across every absorbed run and apply the
     * tempered-rate formula — IDENTICAL to q99's
     * ([[graft.queries.Learn.temperedRates]]), so maintained rates
     * and the from-scratch query can never drift. Returns
-    * (lang, n_docs, n_tokens, rate_micro). */
-  def currentRates(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, countsPath(dir), "run")
-    // a store with no absorbed runs yet (fresh deployment, or a
-    // screening job racing the first ingest) has EVERY domain unseen:
-    // an empty rate table, so decide's unseen-domain default keeps
-    // everything — the ClusterMaintenance empty-init discipline, not
-    // a crash (probe semantics: StoreCompaction.hasParquetData).
-    val folded =
-      if (!graft.ops.StoreCompaction.hasParquetData(spark, countsPath(dir)))
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType.fromDDL(
-            "lang STRING, n_docs BIGINT, n_tokens BIGINT"))
-      else spark.read.parquet(countsPath(dir))
-        .groupBy(col("lang"))
-        .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
-    graft.queries.Learn.temperedRates(folded)
-  }
+    * (lang, n_docs, n_tokens, rate_micro). A store with no absorbed
+    * runs yet (fresh deployment, or a screening job racing the first
+    * ingest) has EVERY domain unseen: an empty rate table, so
+    * decide's unseen-domain default keeps everything. */
+  def currentRates(spark: SparkSession, dir: String): DataFrame =
+    graft.queries.Learn.temperedRates(Store.read(spark, dir)(Counts))
 
   /** Keep/drop verdicts for any (doc_id, lang, text) frame under
     * the CURRENT rates: (doc_id, lang, keep). The rate table is
@@ -102,17 +86,10 @@ object MixtureMaintenance {
 
   /** Fold all `run=` deltas into one `run=base` (crash-recoverable;
     * run at a quiescent point — [[DedupIndex.compact]]'s contract). */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val path = countsPath(dir)
-    graft.ops.StoreCompaction.fold(spark, path, "run", "base",
-      spark.read.parquet(path).drop("run")
-        .groupBy(col("lang"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("n_tokens")).as("n_tokens")))
-  }
+  def compact(spark: SparkSession, dir: String): Unit = Store.fold(spark, dir)
 
   /** How many `run=` partitions the store currently holds (spec
     * hook for the compaction contract). */
   private[graft] def runCount(spark: SparkSession, dir: String): Int =
-    graft.ops.StoreCompaction.runCount(spark, countsPath(dir), "run")
+    Store.runCount(spark, dir)
 }

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Incremental numeric-feed forensics — the [[CorpusStatsMaintenance]]
   * doctrine applied to q164's Benford audit. The audit's whole input
@@ -12,51 +11,34 @@ import org.apache.spark.sql.functions._
   * scan answers yesterday's question) — while the gated q164 chain
   * stays the from-scratch truth the store is specced against.
   *
-  * Store layout: `dir/digitcounts/run=<id>/` parquet (digit, n_obs).
-  * [[absorb]] is idempotent under re-delivery (dynamic partition
-  * overwrite keyed on the run id — the house at-least-once
-  * convention); [[compact]] folds runs with the crash-recoverable
-  * [[graft.ops.StoreCompaction]] marker protocol; reads always
-  * aggregate, so an uncompacted store serves the same integers as a
-  * compacted one. Serving goes through the SAME
+  * Store layout: one [[graft.ops.CountStore]] table,
+  * `dir/digitcounts` (digit, n_obs). Serving goes through the SAME
   * `Relational.benfordFromCounts` derivation the gated query runs —
-  * served ≡ batch is structural. The store is ≤ 9 rows per run
+  * served ≡ batch is structural. The store is ≤ 10 rows per run
   * regardless of feed size.
   */
 object NumericAuditMaintenance {
 
-  private def store(dir: String) = s"$dir/digitcounts"
+  import graft.ops.CountStore
+
+  private val Digits = CountStore.Table("digitcounts", "digit BIGINT, n_obs BIGINT", "digit")
+  private[graft] val Store = new CountStore("", Digits)
 
   /** Full rebuild from a snapshot → `run=base`. */
   def build(spark: SparkSession, prices: DataFrame, dir: String): Unit =
-    graft.queries.Relational.digitCounts(prices)
-      .withColumn("run", lit("base"))
-      .write.partitionBy("run").mode("overwrite").parquet(store(dir))
+    Store.rebuild(spark, dir, graft.queries.Relational.digitCounts(prices))
 
   /** Absorb one delivery under `run=<runId>` — O(batch), idempotent
     * under re-delivery. */
   def absorb(spark: SparkSession, prices: DataFrame, dir: String,
-             runId: String): Unit = {
-    graft.ops.StoreCompaction.heal(spark, store(dir), "run")
-    graft.queries.Relational.digitCounts(prices)
-      .withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(store(dir))
-  }
+             runId: String): Unit =
+    Store.absorb(spark, dir, runId, graft.queries.Relational.digitCounts(prices))
 
   /** Fold every run into one summed partition (crash-recoverable;
     * run at a quiescent point — the store family's contract). */
-  def compact(spark: SparkSession, dir: String): Unit =
-    graft.ops.StoreCompaction.fold(spark, store(dir), "run", "base",
-      spark.read.parquet(store(dir))
-        .groupBy(col("digit")).agg(sum(col("n_obs")).as("n_obs")))
+  def compact(spark: SparkSession, dir: String): Unit = Store.fold(spark, dir)
 
-  /** The q164 table from the store — heal-on-read, aggregation
-    * always applied so compaction is invisible to consumers. */
-  def benford(spark: SparkSession, dir: String): DataFrame = {
-    graft.ops.StoreCompaction.heal(spark, store(dir), "run")
-    graft.queries.Relational.benfordFromCounts(
-      spark.read.parquet(store(dir))
-        .groupBy(col("digit")).agg(sum(col("n_obs")).as("n_obs")))
-  }
+  /** The q164 table from the store. */
+  def benford(spark: SparkSession, dir: String): DataFrame =
+    graft.queries.Relational.benfordFromCounts(Store.read(spark, dir)(Digits))
 }

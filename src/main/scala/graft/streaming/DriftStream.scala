@@ -10,7 +10,7 @@ import graft.pipeline.DriftMonitor
   * delta into the persisted [[DriftMonitor]] store — the streaming
   * twin of [[DriftMonitor.absorb]], with [[MixtureStream]]'s
   * delivery discipline: the delta lands keyed `run=b<batchId>`
-  * (whole-run overwrite), so an at-least-once re-delivery replaces
+  * (dynamic partition overwrite), so an at-least-once re-delivery replaces
   * its own rows instead of double-counting. A drift report cut at
   * any point compares the reference against every batch committed
   * so far; `rebase` remains a quiescent-point operator, not part of

@@ -10,7 +10,7 @@ import graft.pipeline.MixtureMaintenance
   * [[MixtureMaintenance]] store — the streaming twin of
   * [[MixtureMaintenance.absorb]], with [[DedupScreenStream]]'s
   * delivery discipline: the delta lands keyed `run=b<batchId>`
-  * (whole-run overwrite), so an at-least-once re-delivery replaces
+  * (dynamic partition overwrite), so an at-least-once re-delivery replaces
   * its own rows instead of double-counting the batch. A training
   * snapshot cut at any point reads rates that reflect every batch
   * committed so far.

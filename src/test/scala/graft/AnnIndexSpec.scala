@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.AnnIndex
-import java.nio.file.Files
 
 /** AnnIndex (graft.pipeline) — the persisted IVF-PQ lifecycle:
   * build once, serve probes from stored codes, absorb ingest batches
@@ -13,8 +12,8 @@ class AnnIndexSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString + "/ann"
+  private def storeDir(name: String): String =
+    tmp(name) + "/ann"
 
   private def corpus = Tables.embeddings(spark, sf)
     .select($"vec_id", transform($"embedding", v => v.cast("double")).as("vec"))
@@ -27,7 +26,7 @@ class AnnIndexSpec extends AnyFunSuite {
     ProbedCellFilter.findFirstIn(plan).nonEmpty
 
   test("build + search: every query finds itself first, results come from probed cells only") {
-    val dir = tmp("ann-build")
+    val dir = storeDir("ann-build")
     AnnIndex.build(spark, corpus, dir)
 
     val queries = corpus.filter($"vec_id" < 3)
@@ -46,7 +45,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // spill-to-2 needs >= 2 cells; one vector trains one centroid,
     // which build pads by duplication — a valid tiny deployment
     // (first document of a fresh product) must index, not crash
-    val dir = tmp("ann-one")
+    val dir = storeDir("ann-one")
     val one = corpus.filter($"vec_id" === 7L)
     AnnIndex.build(spark, one, dir)
     val q = one.select($"vec_id".as("query_id"), $"vec".as("qvec"))
@@ -59,7 +58,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // PqK=64 with 20 vectors: trainL2 requires samples >= k, so the
     // codebook must clamp to the sample size instead of crashing —
     // a valid small deployment (fresh product, few embeddings)
-    val dir = tmp("ann-small")
+    val dir = storeDir("ann-small")
     val small = corpus.filter($"vec_id" < 20)
     AnnIndex.build(spark, small, dir)
     val queries = small.filter($"vec_id" < 2)
@@ -72,7 +71,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("search never rescans raw vectors and plans the rank onto TopKPerKey") {
-    val dir = tmp("ann-plan")
+    val dir = storeDir("ann-plan")
     AnnIndex.build(spark, corpus, dir)
     // query vectors arrive as literals (a real probe ships its own
     // vector); the CANDIDATE side must come from codes/ only
@@ -105,7 +104,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // the persisted index agrees: a build over the sf corpus stores
     // cellsFor(n) coarse centroids, and search derives the count from
     // the codebook table rather than a constant
-    val dir = tmp("ann-k")
+    val dir = storeDir("ann-k")
     AnnIndex.build(spark, corpus, dir)
     val stored = spark.read.parquet(s"$dir/codebooks")
       .filter($"part" === "ivf").count()
@@ -114,7 +113,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("a 100-query batch takes the cells-as-join path and still never rescans raw vectors") {
-    val dir = tmp("ann-batch")
+    val dir = storeDir("ann-batch")
     AnnIndex.build(spark, corpus, dir)
     // query vectors as literals (a real probe ships its own vector);
     // 100 queries × nprobe 10 probe most of the 22 inverted lists, so
@@ -143,7 +142,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("searchRefined reranks the ADC shortlist by true distance via a bounded id-join") {
-    val dir = tmp("ann-refine")
+    val dir = storeDir("ann-refine")
     AnnIndex.build(spark, corpus, dir)
     val queries = corpus.filter($"vec_id" === 7)
       .select($"vec_id".as("query_id"), $"vec".as("qvec"))
@@ -173,7 +172,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("streaming ingest: new vector files index incrementally and become searchable") {
-    val base = Files.createTempDirectory("graft-ann-stream").toString
+    val base = tmp("ann-stream")
     val dir = s"$base/ann"; val inDir = s"$base/in"; val ck = s"$base/ck"
     AnnIndex.build(spark, corpus, dir)
     val before = spark.read.parquet(s"$dir/codes").count()
@@ -198,7 +197,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("append encodes only the batch, is idempotent, and appended vectors become findable") {
-    val dir = tmp("ann-append")
+    val dir = storeDir("ann-append")
     AnnIndex.build(spark, corpus, dir)
     val before = spark.read.parquet(s"$dir/codes").count()
 
@@ -251,7 +250,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // rows, policy nprobe (2·ceil(√nlist), a shrinking probed
     // fraction), fine-grained ranking codebook, constant-depth exact
     // refine. The floor matches AnnRecallSpec's 0.85 at this scale.
-    val dir = tmp("ann-recall")
+    val dir = storeDir("ann-recall")
     AnnIndex.build(spark, corpus, dir)
     val vecs = corpus.as[(Long, Seq[Double])].collect()
       .map { case (id, v) => id -> v.toArray }.toMap
@@ -283,7 +282,7 @@ class AnnIndexSpec extends AnyFunSuite {
     // the mega-cell (the drift cost is probe-time candidate volume,
     // which is exactly what the balance stat meters) — the floor
     // check guards the day that defense stops being enough.
-    val dir = tmp("ann-drift")
+    val dir = storeDir("ann-drift")
     AnnIndex.build(spark, corpus, dir)
     val s0 = AnnIndex.cellStats(spark, dir)
     assert(!AnnIndex.needsRebuild(s0),
@@ -344,7 +343,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("screenSemantic: exact copy flags as duplicate, novel vector passes, self-match excluded") {
-    val dir = tmp("ann-screen")
+    val dir = storeDir("ann-screen")
     val base = corpus.filter($"vec_id" < 100)
     AnnIndex.build(spark, base, dir)
     // batch: 9001 = vector 7 at DOUBLE the magnitude (cosine 1 →
@@ -384,7 +383,7 @@ class AnnIndexSpec extends AnyFunSuite {
 
   test("streaming semantic screen: cross-batch dedup against survivors, re-delivery idempotent") {
     import graft.streaming.AnnScreenStream
-    val root = Files.createTempDirectory("graft-ann-screen-stream").toString
+    val root = tmp("ann-screen-stream")
     val dir = s"$root/ann"; val inDir = s"$root/in"
     val outDir = s"$root/verdicts"; val ck = s"$root/ck"
     val base = corpus.filter($"vec_id" < 100)
@@ -453,7 +452,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("delete tombstones: unfindable before and after compact, idempotent, physically folded") {
-    val dir = tmp("ann-delete")
+    val dir = storeDir("ann-delete")
     AnnIndex.build(spark, corpus, dir)
     val total = spark.read.parquet(s"$dir/codes").count()
     val q7 = corpus.filter($"vec_id" === 7)

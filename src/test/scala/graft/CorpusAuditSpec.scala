@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.CorpusAudit
-import java.nio.file.Files
 
 /** CorpusAudit (graft.pipeline) — the materialized governance report
   * must be exactly the gated queries' answers, with a manifest that
@@ -16,7 +15,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("audit pack: every table lands, manifest certifies disk counts, tables ≡ live queries, re-run idempotent") {
-    val out = Files.createTempDirectory("graft-audit").toString + "/report"
+    val out = tmp("audit") + "/report"
     val manifest = CorpusAudit.run(spark, sf, out)
       .as[(String, String, Long, String)].collect().toSeq
     assert(manifest.map(_._1) == CorpusAudit.Tables.keys.toSeq.sorted,
@@ -59,7 +58,7 @@ class CorpusAuditSpec extends AnyFunSuite {
   }
 
   test("crash windows: uncertified or mixed-run tables refuse; subset re-runs keep the rest certified") {
-    val out = Files.createTempDirectory("graft-audit-crash").toString + "/report"
+    val out = tmp("audit-crash") + "/report"
     val twoTables = Some(Set("gini_lengths", "zipf_slope"))
     CorpusAudit.run(spark, sf, out, only = twoTables)
 

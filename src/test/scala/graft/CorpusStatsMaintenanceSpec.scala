@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.CorpusStatsMaintenance
-import java.nio.file.Files
 
 /** CorpusStatsMaintenance — the incremental term-count + length-
   * histogram store must serve the gated lexical statistics EXACTLY
@@ -16,7 +15,15 @@ class CorpusStatsMaintenanceSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("incremental store serves q139/q140/q152/q159/q162 exactly, re-delivery idempotent, compaction invisible, token-less length evidence") {
-    val dir = Files.createTempDirectory("graft-cstats").toString + "/store"
+    val dir = tmp("cstats") + "/store"
+    // a never-written store serves empty tables, not PATH_NOT_FOUND
+    val empty = Seq(CorpusStatsMaintenance.lexicalDiversity _, CorpusStatsMaintenance.goodTuring _,
+      CorpusStatsMaintenance.zipfSlope _, CorpusStatsMaintenance.chaoRichness _,
+      CorpusStatsMaintenance.lengthDrift _, CorpusStatsMaintenance.entropyRate _,
+      CorpusStatsMaintenance.pmiBigrams _, CorpusStatsMaintenance.sourceKl _,
+      CorpusStatsMaintenance.doremiWeights _, CorpusStatsMaintenance.looNovelty _,
+      CorpusStatsMaintenance.stylometry _).map(_(spark, dir).collect().length)
+    assert(empty.forall(_ == 0), s"a fresh store served rows: $empty")
     val docs = Tables.documents(spark, sf)
       .select($"doc_id", $"source", $"lang", $"text")
     val part0 = docs.filter(pmod($"doc_id", lit(3L)) === 0L)
@@ -138,7 +145,7 @@ class CorpusStatsMaintenanceSpec extends AnyFunSuite {
     // writes, and q154/q125 JOIN across two of the sub-stores — a
     // crash between the writes must never skew them or be folded
     // into run=base before the retry
-    val dir = Files.createTempDirectory("graft-cstats").toString + "/store"
+    val dir = tmp("cstats") + "/store"
     val docs = Tables.documents(spark, sf)
       .select($"doc_id", $"source", $"lang", $"text")
     val part0 = docs.filter(pmod($"doc_id", lit(2L)) === 0L)

@@ -15,7 +15,7 @@ class CurationExportSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("export reconciles with its funnel report, is leakage-safe, and re-runs idempotently") {
-    val outDir = Files.createTempDirectory("graft-export").toString + "/corpus"
+    val outDir = tmp("export") + "/corpus"
     CurationExport.run(spark, sf, outDir)
 
     // the q100-style funnel over the same corpus: per-domain kept
@@ -84,7 +84,7 @@ class CurationExportSpec extends AnyFunSuite {
     // produced few, (b) no file wildly exceeds the target (slack for
     // footer + row-group minimums), (c) the exported rows are
     // byte-identical either way.
-    val root = Files.createTempDirectory("graft-export-size").toString
+    val root = tmp("export-size")
     val outBig = s"$root/big"; val outSmall = s"$root/small"
     CurationExport.run(spark, sf, outBig)
     CurationExport.run(spark, sf, outSmall, targetFileBytes = Some(8L * 1024))
@@ -105,7 +105,7 @@ class CurationExportSpec extends AnyFunSuite {
   }
 
   test("mixtureDir plumbs maintained rates into the export") {
-    val root = Files.createTempDirectory("graft-export-mix").toString
+    val root = tmp("export-mix")
     // an EMPTY maintained store: every domain is unseen, so decide's
     // keep-all default applies — the export must keep every quality
     // survivor (n_kept == n_quality), unlike the self-contained path
@@ -142,7 +142,7 @@ class CurationExportSpec extends AnyFunSuite {
 
   test("probe-score stage: classifier routes docs, funnel reconciles, lineage rides, re-run idempotent") {
     import graft.pipeline.{CurationExport, ProbeTrainer}
-    val root = Files.createTempDirectory("graft-export-probe").toString
+    val root = tmp("export-probe")
     val probeDir = s"$root/head"; val outDir = s"$root/corpus"
     // train q98's head on the corpus embeddings, persist, and verify
     // the store round-trips the weights exactly (micro-units on disk)
@@ -195,7 +195,7 @@ class CurationExportSpec extends AnyFunSuite {
 
   test("decontamination stage: eval-contaminated docs drop visibly, funnel reconciles, None is pass-through") {
     import graft.pipeline.CurationExport
-    val root = Files.createTempDirectory("graft-export-decon").toString
+    val root = tmp("export-decon")
     // derive an eval set KNOWN to contaminate: q121's own derivation
     // (spans lifted from the three longest docs) — those donors (and
     // any doc sharing the span) must vanish from the artifact
@@ -224,7 +224,7 @@ class CurationExportSpec extends AnyFunSuite {
   }
 
   test("heuristic gate: rule-violating docs drop visibly, funnel reconciles, off is pass-through") {
-    val root = Files.createTempDirectory("graft-export-heur").toString
+    val root = tmp("export-heur")
     val outG = s"$root/gated"
     CurationExport.run(spark, sf, outG, heuristic = true)
     val funnel = CurationExport.funnel(spark, sf, heuristic = true)
@@ -251,7 +251,7 @@ class CurationExportSpec extends AnyFunSuite {
   }
 
   test("PII scrub: planted PII is masked and counted on disk, counts unchanged, off rides null") {
-    val root = Files.createTempDirectory("graft-export-pii").toString
+    val root = tmp("export-pii")
     // a corpus WITH PII (the testdata ships none): q124's planting
     // pattern — emails on doc_id%4==1, phones on %4==2
     val dirty = s"$root/dirty"
@@ -301,7 +301,7 @@ class CurationExportSpec extends AnyFunSuite {
   }
 
   test("heuristic gate and PII scrub compose in one run") {
-    val root = Files.createTempDirectory("graft-export-both").toString
+    val root = tmp("export-both")
     val dirty = s"$root/dirty"
     Tables.documents(spark, sf)
       .withColumn("text",
@@ -352,7 +352,7 @@ class CurationExportSpec extends AnyFunSuite {
     // drop set, across the foreachBatch boundary; (3) the export's
     // scrub over a pre-screened store is a byte no-op (double-scrub
     // idempotence), so leaving scrubPii on by habit costs nothing.
-    val root = Files.createTempDirectory("graft-export-cont").toString
+    val root = tmp("export-cont")
     val schema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id LONG, lang STRING, text STRING")
 
@@ -432,7 +432,7 @@ class CurationExportSpec extends AnyFunSuite {
   }
 
   test("jsonl export round-trips the parquet artifact exactly (one document per line)") {
-    val root = Files.createTempDirectory("graft-export-jsonl").toString
+    val root = tmp("export-jsonl")
     val pq = s"$root/pq"; val jl = s"$root/jl"
     val rep1 = CurationExport.run(spark, sf, pq).collect()
     val rep2 = CurationExport.run(spark, sf, jl, format = "jsonl").collect()

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.DedupIndex
-import java.nio.file.Files
 
 /** Incremental dedup screening (graft.pipeline.DedupIndex): build a
   * corpus index once, then screen a synthetic ingest batch with
@@ -13,11 +12,11 @@ class DedupIndexSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString + "/idx"
+  private def storeDir(name: String): String =
+    tmp(name) + "/idx"
 
   test("screen classifies planted exact / near / unique docs against the index") {
-    val dir = tmp("dedup-index")
+    val dir = storeDir("dedup-index")
     val corpus = Tables.documents(spark, sf).select($"doc_id", $"text")
     DedupIndex.build(spark, corpus, dir)
 
@@ -58,7 +57,7 @@ class DedupIndexSpec extends AnyFunSuite {
   }
 
   test("screening joins the band index, never the corpus text; index grows incrementally") {
-    val dir = tmp("dedup-incr")
+    val dir = storeDir("dedup-incr")
     val corpus = Tables.documents(spark, sf).select($"doc_id", $"text")
     DedupIndex.build(spark, corpus, dir)
 
@@ -88,7 +87,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // grow linearly with the flood. The capped probe must answer
     // with the bucket's min-id hub, keep the verdict, and keep the
     // cluster bridge.
-    val dir = tmp("dedup-flood")
+    val dir = storeDir("dedup-flood")
     val mega = (0L until 200L).map(i =>
       (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
     val normal = Seq(
@@ -149,7 +148,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // its broadcast hints and runs the same joins as shuffles. The
     // two plans must agree row-for-row — including the over-cap hub
     // edges — on a corpus that exercises BOTH bucket regimes.
-    val dir = tmp("dedup-fallback")
+    val dir = storeDir("dedup-fallback")
     val mega = (0L until 200L).map(i =>
       (i, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
     val normal = Seq(
@@ -191,7 +190,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // by appending and then removing the marker — the run's data is
     // fully on disk but unacknowledged, exactly the state a crash
     // between the last write and the marker leaves.
-    val dir = tmp("dedup-marker")
+    val dir = storeDir("dedup-marker")
     val corpus = (0L until 20L)
       .map(i => (i, s"base document number $i with words $i"))
       .toDF("doc_id", "text")
@@ -231,7 +230,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // verification hook — fp_hi div FpHiMod2 recovers the classic
     // fingerprint — proves the new index agrees with the old key on
     // every document.
-    val dir = tmp("dedup-migrate")
+    val dir = storeDir("dedup-migrate")
     val corpus = (0L until 30L)
       .map(i => (i, s"legacy corpus document $i body words w$i extra w${i % 7}"))
       .toDF("doc_id", "text")
@@ -305,7 +304,7 @@ class DedupIndexSpec extends AnyFunSuite {
           case _ => (i, randText(3 + rnd.nextInt(8)))                 // fresh-ish
         }
       }
-      val dir = tmp(s"dedup-diff$trial")
+      val dir = storeDir(s"dedup-diff$trial")
       DedupIndex.build(spark, corpus.toDF("doc_id", "text"), dir)
       val got = DedupIndex.screen(spark, batch.toDF("doc_id", "text"), dir)
         .collect().map(r => r.getLong(0) ->
@@ -371,7 +370,7 @@ class DedupIndexSpec extends AnyFunSuite {
     // and the "flat latency" receipt would time nothing. The
     // generator is deterministic (hash-driven, no RNG), so these
     // counts are stable across runs and machines.
-    val dir = tmp("probe-fixture")
+    val dir = storeDir("probe-fixture")
     DedupIndex.build(spark,
       ScaleProbe.docsDf(spark, 5000L).select($"doc_id", $"text"), dir)
     val batch = ScaleProbe.fixedScreenBatch(spark)

@@ -105,15 +105,15 @@ class DriftSpec extends AnyFunSuite {
 
   import graft.pipeline.DriftMonitor
 
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-$name").toString + "/drift"
+  private def storeDir(name: String): String =
+    tmp(name) + "/drift"
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long, Long)] =
     try df.as[(String, Long, Long, Long)].collect().toSeq.sorted
     finally spark.catalog.clearCache() // jsdFromCounts persist contract
 
   test("monitor: absorbed deltas + rebase reproduce the from-scratch stage exactly") {
-    val dir = tmp("mon-eq")
+    val dir = storeDir("mon-eq")
     // "ws" is the degenerate membership case: whitespace-only text
     // yields NO tokens, so only the store's roster rows can keep the
     // lang in the report — q116's from-scratch stage derives langs
@@ -140,7 +140,7 @@ class DriftSpec extends AnyFunSuite {
   }
 
   test("monitor: rebase zeroes the report; redelivery and compaction preserve it") {
-    val dir = tmp("mon-lifecycle")
+    val dir = storeDir("mon-lifecycle")
     val a = Seq(("en", "alpha beta gamma alpha")).toDF("lang", "text")
     val b = Seq(("en", "omega sigma theta"), ("de", "eins zwei"))
       .toDF("lang", "text")
@@ -168,7 +168,7 @@ class DriftSpec extends AnyFunSuite {
   }
 
   test("streaming: per-batch deltas fold in incrementally, re-runs are no-ops") {
-    val base = java.nio.file.Files.createTempDirectory("graft-drift-stream").toString
+    val base = tmp("drift-stream")
     val dir = s"$base/drift"; val inDir = s"$base/in"; val ck = s"$base/ck"
     val ref = Seq(("en", "alpha beta gamma alpha"), ("de", "eins zwei"))
       .toDF("lang", "text")
@@ -192,7 +192,7 @@ class DriftSpec extends AnyFunSuite {
   }
 
   test("monitor: no reference yet reports empty — monitoring starts at the first rebase") {
-    val dir = tmp("mon-fresh")
+    val dir = storeDir("mon-fresh")
     DriftMonitor.absorb(spark,
       Seq(("en", "alpha beta")).toDF("lang", "text"), dir, "r1")
     assert(DriftMonitor.report(spark, dir).count() == 0L)

@@ -6,7 +6,6 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.ops.TextOps
 import graft.ops.expressions.HashKernel
 import graft.pipeline.DedupIndex
-import java.nio.file.Files
 
 /** The 128-bit exact-dup fingerprint (TextOps.fingerprintHi/Lo,
   * r18's widening of the single ~2³⁰-range polyhash).
@@ -68,7 +67,7 @@ class Fingerprint128Spec extends AnyFunSuite {
   test("q23 groups the planted pair separately (no false merge, no silent drop)") {
     // q23 reads documents from a dir; build a minimal parquet table
     // with the planted pair plus one true dup pair
-    val dir = Files.createTempDirectory("graft-fp128-q23").toString
+    val dir = tmp("fp128-q23")
     val docs = Seq(
       (1L, textA, textA.length.toLong),
       (2L, textB, textB.length.toLong),
@@ -90,7 +89,7 @@ class Fingerprint128Spec extends AnyFunSuite {
     // simulate an r17-era index: fingerprints table with the single
     // narrow `fp` column — screening must name the migration path
     // (rebuild), not die in analysis resolution
-    val root = Files.createTempDirectory("graft-fp128-old").toString
+    val root = tmp("fp128-old")
     val dir = s"$root/idx"
     DedupIndex.build(spark, Seq((1L, textA)).toDF("doc_id", "text"), dir)
     // stage the downgraded table beside the index, then swap it in
@@ -133,7 +132,7 @@ class Fingerprint128Spec extends AnyFunSuite {
   }
 
   test("DedupIndex.screen does not call the planted collision 'exact'") {
-    val dir = Files.createTempDirectory("graft-fp128-idx").toString + "/idx"
+    val dir = tmp("fp128-idx") + "/idx"
     DedupIndex.build(spark, Seq((1L, textA)).toDF("doc_id", "text"), dir)
     val verdicts = DedupIndex
       .screen(spark, Seq((100L, textB), (101L, textA)).toDF("doc_id", "text"), dir)

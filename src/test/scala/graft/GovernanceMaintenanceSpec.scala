@@ -23,8 +23,11 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
   }
 
   test("incremental QI store serves q171 exactly, re-delivery idempotent, compaction invisible") {
-    val dir = Files.createTempDirectory("graft-gov").toString + "/store"
+    val dir = tmp("gov") + "/store"
     val cust = Tables.customer(spark, sf)
+    // a never-written store serves an empty audit, not PATH_NOT_FOUND
+    assert(GovernanceMaintenance.kAnonymity(spark, dir).collect().isEmpty,
+      "a fresh QI store must serve an empty audit")
     val part0 = cust.filter(pmod($"c_custkey", lit(3L)) === 0L)
     val part1 = cust.filter(pmod($"c_custkey", lit(3L)) === 1L)
     val part2 = cust.filter(pmod($"c_custkey", lit(3L)) === 2L)
@@ -72,7 +75,9 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
   }
 
   test("incremental bootstrap store serves q172 exactly, re-delivery idempotent, compaction invisible") {
-    val dir = Files.createTempDirectory("graft-gov").toString + "/store"
+    val dir = tmp("gov") + "/store"
+    assert(GovernanceMaintenance.bootstrapCi(spark, dir).collect().isEmpty,
+      "a fresh bootstrap store must serve an empty CI table")
     val docs = Tables.documents(spark, sf)
     val part0 = docs.filter(pmod($"doc_id", lit(3L)) === 0L)
     val part1 = docs.filter(pmod($"doc_id", lit(3L)) === 1L)
@@ -121,7 +126,7 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
     // disagreed with their own point estimate, and a compaction
     // before the retry folded the inconsistency into run=base
     // permanently. The per-run commit marker closes all three exits.
-    val dir = Files.createTempDirectory("graft-gov").toString + "/store"
+    val dir = tmp("gov") + "/store"
     val docs = Tables.documents(spark, sf)
     val part0 = docs.filter(pmod($"doc_id", lit(2L)) === 0L)
     val part1 = docs.filter(pmod($"doc_id", lit(2L)) === 1L)
@@ -136,6 +141,13 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
       .option("partitionOverwriteMode", "dynamic").parquet(s"$dir/bootreps")
     assert(GovernanceMaintenance.bootstrapCi(spark, dir).collect().toSeq == base,
       "an unacknowledged half-landed run must be invisible to serving")
+
+    // a QI delivery under the same id acknowledges only its own
+    // group: its ack must not approve the half-landed bootstrap run
+    GovernanceMaintenance.absorbQi(spark,
+      graft.queries.Cleaning.qiInput(Tables.customer(spark, sf)), dir, "bX")
+    assert(GovernanceMaintenance.bootstrapCi(spark, dir).collect().toSeq == base,
+      "a QI ack approved a half-landed bootstrap run of the same id")
 
     // compaction before the retry DROPS the half-landed partitions
     // instead of folding them into base
@@ -153,7 +165,7 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
   }
 
   test("streamed governance absorb ≡ batch (bootstrap store via GovernanceStream)") {
-    val root = Files.createTempDirectory("graft-govstream").toString
+    val root = tmp("govstream")
     val in = s"$root/in"; val store = s"$root/store"; val ck = s"$root/ck"
     val f1 = Seq((1L, "srcA", "alpha beta alpha gamma"),
       (2L, "srcB", "gamma gamma delta"))
@@ -183,7 +195,7 @@ class GovernanceMaintenanceSpec extends AnyFunSuite {
   }
 
   test("streamed governance absorb ≡ batch (QI store via GovernanceStream)") {
-    val root = Files.createTempDirectory("graft-govstream").toString
+    val root = tmp("govstream")
     val in = s"$root/in"; val store = s"$root/store"; val ck = s"$root/ck"
     val f1 = Seq((1L, "A", 0L, 10.0), (2L, "A", 0L, 20.0),
       (3L, "A", 0L, 30.0), (4L, "B", 1L, 5.0))

@@ -38,7 +38,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // build-once/serve-many twin of q111: posting store + AnnIndex
     // replace the in-plan rankers; the fusion and its guarantees
     // must survive the swap
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid").toString + "/idx"
+    val dir = tmp("hybrid") + "/idx"
     graft.pipeline.HybridRetrieval.build(spark, docs, dir)
     val qdf = Seq((0L, "alpha beta")).toDF("query_id", "qtext")
     val served = graft.pipeline.HybridRetrieval.search(spark, qdf, dir)
@@ -65,8 +65,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // healthy store.
     import graft.pipeline.HybridRetrieval
     import org.apache.hadoop.fs.Path
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-heal")
-      .toString + "/idx"
+    val dir = tmp("hybrid-heal") + "/idx"
     HybridRetrieval.build(spark, docs, dir)
     val qdf = Seq((0L, "alpha beta")).toDF("query_id", "qtext")
     val healthy = HybridRetrieval.search(spark, qdf, dir)
@@ -99,7 +98,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
 
   test("append is exactly incremental for the lexical ranker, idempotent, and makes the batch searchable") {
     import graft.pipeline.HybridRetrieval
-    val root = java.nio.file.Files.createTempDirectory("graft-hybrid-inc").toString
+    val root = tmp("hybrid-inc")
     val batchB = Seq(
       (5000L, "alpha beta nova0 nova1"),
       (5001L, "nova2 nova3 nova4 nova5")).toDF("doc_id", "text")
@@ -145,7 +144,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // the AnnIndex spill-2 centroid pad + clamped codebooks must
     // carry through the composed store: a fresh product's first doc
     // must index and be findable, not crash
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-one").toString + "/idx"
+    val dir = tmp("hybrid-one") + "/idx"
     val one = Seq((42L, "alpha beta gamma")).toDF("doc_id", "text")
     graft.pipeline.HybridRetrieval.build(spark, one, dir)
     val got = graft.pipeline.HybridRetrieval.search(spark,
@@ -181,7 +180,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // EVERY delivery token-less: writeLexical's stats aggregate is
     // (n=0, sumdl=null) — serving must coalesce + short-circuit the
     // lexical ranker (empty pool), not NPE on getLong
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-empty").toString + "/idx"
+    val dir = tmp("hybrid-empty") + "/idx"
     val tokenless = Seq((1L, ""), (2L, "   ")).toDF("doc_id", "text")
     HybridRetrieval.build(spark, tokenless, dir)
     val qdf = Seq((0L, "alpha beta")).toDF("query_id", "qtext")
@@ -212,7 +211,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // a REAL store + a token-less query: the query is absent from
     // both pools and is OMITTED (rrfFuse's documented no-results
     // convention) while the well-formed query still serves
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-hybrid-noq").toString + "/idx"
+    val dir2 = tmp("hybrid-noq") + "/idx"
     HybridRetrieval.build(spark, docs, dir2)
     val mixed = Seq((0L, "alpha beta"), (1L, " ")).toDF("query_id", "qtext")
     val byQ = HybridRetrieval.search(spark, mixed, dir2)
@@ -238,7 +237,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // encoded, every later append down the normal path (round-13
     // advisor, silent recall loss). Now append's heal loop encodes
     // every raw run the codes store lacks.
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-heal").toString + "/idx"
+    val dir = tmp("hybrid-heal") + "/idx"
     HybridRetrieval.build(spark, Seq((1L, "")).toDF("doc_id", "text"), dir)
     val b1 = Seq(
       (10L, "alpha beta alpha beta"),
@@ -274,7 +273,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
 
   test("streaming ingest: new document files index incrementally and serve exactly") {
     import graft.pipeline.HybridRetrieval
-    val root = java.nio.file.Files.createTempDirectory("graft-hybrid-s").toString
+    val root = tmp("hybrid-s")
     val dir = s"$root/idx"; val inDir = s"$root/in"; val ck = s"$root/ck"
     HybridRetrieval.build(spark, docs, dir)
     val batch = Seq((6000L, "alpha beta wave0 wave1")).toDF("doc_id", "text")
@@ -296,7 +295,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
   }
 
   test("served lexical scan prunes to the query terms' postings buckets") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-p").toString + "/idx"
+    val dir = tmp("hybrid-p") + "/idx"
     graft.pipeline.HybridRetrieval.build(spark, docs, dir)
     val qdf = Seq((0L, "alpha beta")).toDF("query_id", "qtext")
     val plan = graft.pipeline.HybridRetrieval.lexPlan(spark, qdf, dir)
@@ -310,7 +309,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // scan — unit-normalized vectors make the refine rank the cosine
     // rank, so on the gate corpus the served top-10 should agree
     // almost everywhere; pin a 0.7 overlap floor per query
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-g").toString + "/idx"
+    val dir = tmp("hybrid-g") + "/idx"
     val corpus = Tables.documents(spark, sf)
     graft.pipeline.HybridRetrieval.build(spark, corpus, dir)
     val rq = graft.queries.Search.RrfQueries
@@ -337,7 +336,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // q111 (query_id, doc_id, rrf_nano, rn all equal), which pins
     // the lexical store's BM25 as exactly q111's too and makes any
     // default-mode divergence attributable to the ANN ranker alone
-    val dir = java.nio.file.Files.createTempDirectory("graft-hybrid-x").toString + "/idx"
+    val dir = tmp("hybrid-x") + "/idx"
     val corpus = Tables.documents(spark, sf).select($"doc_id", $"text")
     graft.pipeline.HybridRetrieval.build(spark, corpus, dir)
     val rq = graft.queries.Search.RrfQueries
@@ -386,7 +385,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // planted corpus, depth >= corpus: the candidate generator sees
     // every doc, so the ONLY difference from the brute miner is the
     // store plumbing — exclusion set, ids and ranks must be IDENTICAL
-    val dir = java.nio.file.Files.createTempDirectory("graft-hn-ann").toString + "/idx"
+    val dir = tmp("hn-ann") + "/idx"
     HybridRetrieval.build(spark, docs, dir)
     val qdf = Seq((0L, "alpha beta")).toDF("query_id", "qtext")
     val served = HybridRetrieval.hardNegatives(spark, qdf, dir, depth = 64)
@@ -401,7 +400,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // gate corpus, default depth: the ANN path trades exactness for
     // O(probe) cost — it must keep a healthy share of the brute
     // miner's true top-k per query
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-hn-gate").toString + "/idx"
+    val dir2 = tmp("hn-gate") + "/idx"
     val corpus = Tables.documents(spark, sf).select($"doc_id", $"text")
     HybridRetrieval.build(spark, corpus, dir2)
     val qs = graft.queries.Search.RrfQueries
@@ -550,8 +549,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // Simulate the crash-before-acknowledge window by appending and
     // then removing the marker.
     import graft.pipeline.HybridRetrieval
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-hybrid-marker").toString + "/idx"
+    val root = tmp("hybrid-marker") + "/idx"
     HybridRetrieval.build(spark, docs, root)
     val batchB = Seq((500L, "alpha beta alpha beta alpha beta"))
       .toDF("doc_id", "text")
@@ -609,8 +607,7 @@ class HybridRetrievalSpec extends AnyFunSuite {
     // listing nor a `parquet at` schema-inference stage
     import graft.pipeline.HybridRetrieval
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-hybrid-meta").toString + "/idx"
+    val root = tmp("hybrid-meta") + "/idx"
     HybridRetrieval.build(spark, docs, root)
     HybridRetrieval.append(spark,
       Seq((700L, "alpha gamma delta")).toDF("doc_id", "text"), root, "b1")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.MixtureMaintenance
@@ -17,8 +15,8 @@ class MixtureSpec extends AnyFunSuite {
 
   private val sf2 = "/root/testdata/sf0.01"
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString + "/mix"
+  private def storeDir(name: String): String =
+    tmp(name) + "/mix"
 
   /** q99's per-domain reference rows (lang, n_docs, n_tokens, rate). */
   private def fromScratch(sf: String): Map[String, (Long, Long, Double)] =
@@ -35,7 +33,7 @@ class MixtureSpec extends AnyFunSuite {
       .map(r => r._1 -> (r._2, r._3, r._4)).toMap
 
   test("absorbed deltas reproduce the from-scratch q99 rates exactly") {
-    val dir = tmp("mix-eq")
+    val dir = storeDir("mix-eq")
     val docs = Tables.documents(spark, sf2)
     // three uneven ingest days
     MixtureMaintenance.absorb(spark, docs.filter($"doc_id" < 100), dir, "d1")
@@ -58,7 +56,7 @@ class MixtureSpec extends AnyFunSuite {
   }
 
   test("decide() screens exactly the documents q99 keeps; unseen domains default to keep") {
-    val dir = tmp("mix-decide")
+    val dir = storeDir("mix-decide")
     val docs = Tables.documents(spark, sf2)
     MixtureMaintenance.absorb(spark, docs, dir, "all")
     val kept = MixtureMaintenance.decide(spark, docs, dir)
@@ -80,7 +78,7 @@ class MixtureSpec extends AnyFunSuite {
     // decide's own semantics: an unseen domain defaults to keep; a
     // store with NO runs has every domain unseen — the first-ingest
     // race must yield keep-all, not PATH_NOT_FOUND
-    val dir = tmp("mixture-fresh")
+    val dir = storeDir("mixture-fresh")
     val docs = Seq((1L, "en", "fresh corpus doc"), (2L, "de", "neues dokument"))
       .toDF("doc_id", "lang", "text")
     assert(MixtureMaintenance.currentRates(spark, dir).count() == 0)
@@ -95,7 +93,7 @@ class MixtureSpec extends AnyFunSuite {
     // window — snapshot written, marker committed, old partitions
     // deleted, CRASH before the rename — then the next rates read
     // must heal and still match the from-scratch query
-    val dir = tmp("mix-crash")
+    val dir = storeDir("mix-crash")
     val docs = Tables.documents(spark, sf2)
     MixtureMaintenance.absorb(spark, docs.filter($"doc_id" < 200), dir, "d1")
     MixtureMaintenance.absorb(spark, docs.filter($"doc_id" >= 200), dir, "d2")
@@ -115,7 +113,7 @@ class MixtureSpec extends AnyFunSuite {
   }
 
   test("streaming: per-batch deltas fold in incrementally, re-runs are no-ops") {
-    val base = Files.createTempDirectory("graft-mix-stream").toString
+    val base = tmp("mix-stream")
     val dir = s"$base/mix"; val inDir = s"$base/in"; val ck = s"$base/ck"
     val docs = Tables.documents(spark, sf2)
     val schema = docs.select($"doc_id", $"lang", $"text").schema

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.NumericAuditMaintenance
-import java.nio.file.Files
 
 /** NumericAuditMaintenance — the incremental digit store must serve
   * q164's Benford table EXACTLY (same integers as the batch chain
@@ -15,7 +14,10 @@ class NumericAuditSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("incremental digit store serves q164 exactly, re-delivery idempotent, compaction invisible") {
-    val dir = Files.createTempDirectory("graft-numaudit").toString + "/store"
+    val dir = tmp("numaudit") + "/store"
+    // a never-written store serves an empty table, not PATH_NOT_FOUND
+    assert(NumericAuditMaintenance.benford(spark, dir).collect().isEmpty,
+      "a fresh digit store must serve an empty table")
     val prices = Tables.lineitem(spark, sf)
       .select($"l_orderkey", $"l_extendedprice")
     val part0 = prices.filter(pmod($"l_orderkey", lit(3L)) === 0L)
@@ -42,6 +44,15 @@ class NumericAuditSpec extends AnyFunSuite {
     def runDirs = fs.listStatus(root)
       .count(s => s.isDirectory && s.getPath.getName.startsWith("run="))
     assert(runDirs == 3, s"expected 3 run partitions, got $runDirs")
+    // a crash between a delivery's write and its ack: an all-leading-9
+    // run=bX lands unacknowledged — invisible to serving, and the
+    // fold below must drop it rather than fold it into run=base
+    graft.queries.Relational.digitCounts(
+        (1L to 50L).map(i => (800000L + i, 9.5)).toDF("l_orderkey", "l_extendedprice"))
+      .withColumn("run", lit("bX"))
+      .write.partitionBy("run").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(s"$dir/digitcounts")
+    assert(served == batch, "an unacknowledged run must be invisible to serving")
     NumericAuditMaintenance.compact(spark, dir)
     assert(runDirs == 1, "compaction must fold to one partition")
     assert(served == batch, "compaction changed the served table")

@@ -2,7 +2,6 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
 import graft.pipeline._
 
 /** ONE session through a full operations day (round-17 verdict #5):
@@ -23,7 +22,7 @@ class OperationsDaySpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   test("operations day: ingest → absorb → compact → serve ≡ batch → audit pack certifies vs live queries") {
-    val root = Files.createTempDirectory("graft-opsday").toString
+    val root = tmp("opsday")
 
     // ---- the day's three uneven deliveries, per feed ----
     val docs = Tables.documents(spark, sf)

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.EmbedPipeline
-import java.nio.file.Files
 
 /** E2E pipeline tests on sf0.001 (SURVEY §5.4, VERDICT r2 next#6):
   * EP1 embed job + sharded sink, S4/T6 shard source round-trip, J2
@@ -13,9 +12,6 @@ import java.nio.file.Files
   */
 class PipelineSpec extends AnyFunSuite {
   import TestSpark._
-
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
 
   test("upsert-by-partition: only the updated partitions rewrite; re-running is a no-op") {
     import spark.implicits._

@@ -1,17 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-object TestSpark {
-  lazy val spark: SparkSession = GraftSession.local(4)
-  val sf = "/root/testdata/sf0.001"
-
-  /** Runs query `q` over `dir`; returns the stages its builder read. */
-  def stagesRead(q: String, dir: String = sf): Set[String] =
-    graft.ops.SessionStage.readsIn(
-      SparkEntry.queries(q)(spark, dir).foreach(_ => ()))._2
-}
 
 class RelationalSpec extends AnyFunSuite {
   import TestSpark._

@@ -17,7 +17,7 @@ class ScaleSpec extends AnyFunSuite {
     // bucketing: both sides pre-hashed into the same bucket layout →
     // the sort-merge join needs neither shuffle nor sort.
     // external tables at explicit paths — no warehouse involvement
-    val wh = java.nio.file.Files.createTempDirectory("graft-buckets").toString
+    val wh = tmp("buckets")
     val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the SMJ path
     try {
@@ -88,7 +88,7 @@ class ScaleSpec extends AnyFunSuite {
     // the 100-TB layout practice: land data partitioned by a coarse
     // key (date, lang, source) so selective reads never touch the
     // rest of the corpus
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val dir = tmp("part")
     Tables.documents(spark, sf)
       .write.partitionBy("lang").mode("overwrite").parquet(dir)
     val read = spark.read.parquet(dir).filter($"lang" === "en")
@@ -164,7 +164,7 @@ class ScaleSpec extends AnyFunSuite {
     // probe would otherwise measure nothing), and the salted variant
     // (q82's device) computes exactly the plain join's table, which
     // is what licenses comparing their times.
-    val dir = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val dir = tmp("skew")
     try {
       val n = 50000L
       ScaleProbe.skewFact(spark, n).write.mode("overwrite")

@@ -58,7 +58,7 @@ class ScratchJanitorSpec extends AnyFunSuite {
   test("sweepStale is a no-op on a missing scratch root") {
     val empty = spark.newSession()
     empty.conf.set("spark.graft.scratchDir",
-      java.nio.file.Files.createTempDirectory("graft-janitor-empty").toString
+      tmp("janitor-empty")
         + "/nonexistent")
     assert(graft.ops.ParquetStage.sweepStale(empty) == 0)
   }

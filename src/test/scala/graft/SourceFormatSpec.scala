@@ -12,9 +12,6 @@ class SourceFormatSpec extends AnyFunSuite {
   import TestSpark._
   import spark.implicits._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   test("JSON-lines round-trip: explicit schema, FAILFAST, same rows as parquet") {
     val docs = Tables.documents(spark, sf)
     val dir = tmp("json")

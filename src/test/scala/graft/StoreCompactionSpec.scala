@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.hadoop.fs.Path
 import graft.ops.StoreCompaction
-import java.nio.file.Files
 
 /** StoreCompaction (graft.ops) — the shared crash-recoverable
   * partition fold behind DedupIndex/AnnIndex/ClusterMaintenance
@@ -16,7 +15,7 @@ class StoreCompactionSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def store(name: String): String = {
-    val dir = Files.createTempDirectory(s"graft-$name").toString + "/t"
+    val dir = tmp(name) + "/t"
     Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .write.parquet(s"$dir/run=base")
     Seq((3L, "c")).toDF("id", "v")
@@ -195,7 +194,7 @@ class StoreCompactionSpec extends AnyFunSuite {
   }
 
   test("ClusterMaintenance.init resets a pending compaction; heal cannot resurrect old labels") {
-    val lbl = Files.createTempDirectory("graft-init-reset").toString + "/lbl"
+    val lbl = tmp("init-reset") + "/lbl"
     val fs = new Path(lbl).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // previous deployment's labels, crashed mid-compaction in the
     // committed window: snapshot in tmp, marker present, epochs gone
@@ -217,7 +216,7 @@ class StoreCompactionSpec extends AnyFunSuite {
 
   test("AnnIndex search self-heals an interrupted compaction") {
     import org.apache.spark.sql.functions._
-    val base = Files.createTempDirectory("graft-ann-heal").toString
+    val base = tmp("ann-heal")
     val dir = s"$base/ann"
     val corpus = Tables.embeddings(spark, sf)
       .select($"vec_id", transform($"embedding", v => v.cast("double")).as("vec"))

@@ -13,9 +13,6 @@ import java.nio.file.Files
 class StreamingSpec extends AnyFunSuite {
   import TestSpark._
 
-  private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft-$name").toString
-
   test("checkpointed windowed stream: emitted windows match the batch twin; late rows dropped; no duplicates") {
     val events = Tables.events(spark, sf).select("ts", "event_type")
     val schema = events.schema
@@ -617,7 +614,7 @@ class StreamingSpec extends AnyFunSuite {
   test("curation screen stream: rule-violating docs reject with flags, survivors land scrubbed, re-delivery idempotent") {
     import graft.streaming.CurationScreenStream
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-curscreen").toString
+    val root = tmp("curscreen")
     val in = s"$root/in"; val good = s"$root/good"
     val rej = s"$root/reject"; val ck = s"$root/ck"
     def rep(w: String, n: Int) = Seq.fill(n)(w).mkString(" ")
@@ -685,7 +682,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.CorpusStatsStream
     import graft.pipeline.CorpusStatsMaintenance
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft-cstream").toString
+    val root = tmp("cstream")
     val in = s"$root/in"; val store = s"$root/store"; val ck = s"$root/ck"
     val f1 = Seq((1L, "srcA", "en", "alpha beta alpha"),
       (2L, "srcB", "fr", "gamma gamma"))

@@ -3,7 +3,6 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.ZorderLayout
-import java.nio.file.Files
 
 /** ZorderLayout (graft.pipeline) — the write→skip round trip: a
   * z-ordered layout plus recorded spans must let a selective 2-D box
@@ -15,7 +14,7 @@ class ZorderSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("a 2-D box query prunes files via the recorded spans and matches the full scan") {
-    val dir = Files.createTempDirectory("graft-zorder").toString + "/orders_z"
+    val dir = tmp("zorder") + "/orders_z"
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")
     // q80's buckets: customer bucket × order-day bucket
     val x = pmod($"o_custkey", lit(256L))
