@@ -4,11 +4,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Per-run delivery acknowledgement for stores whose ONE logical
-  * delivery spans SEVERAL parquet sub-store writes (and, through
-  * [[CountStore]], for every count-store delivery): two (or four, or
-  * five) parquet writes are not atomic together, so a crash between
-  * them leaves `run=<id>`
+/** Per-run delivery acknowledgement of every [[RunStore]] delivery
+  * (the five count stores, [[graft.pipeline.DedupIndex]] and
+  * [[graft.pipeline.HybridRetrieval]]). It exists for the stores
+  * whose ONE logical delivery spans SEVERAL parquet sub-store writes:
+  * two (or three, or four) parquet writes are not atomic together,
+  * so a crash between them leaves `run=<id>`
   * present in some sub-stores and absent from others. Served
   * statistics that JOIN across sub-stores (q172's CI against its own
   * point estimate; q154's H2 − H1 across term and bigram counts;

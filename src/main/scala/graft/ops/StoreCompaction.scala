@@ -3,12 +3,14 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-recoverable partition-folding shared by the three
-  * run/epoch-accumulating stores ([[graft.pipeline.DedupIndex]],
-  * [[graft.pipeline.AnnIndex]], [[graft.pipeline.ClusterMaintenance]])
-  * — one implementation so the crash semantics cannot diverge (the
-  * first cut had three hand-rolled variants with three different
-  * failure windows).
+/** Crash-recoverable partition-folding shared by every
+  * run/epoch-accumulating store ([[RunStore]] — the five count
+  * stores, [[graft.pipeline.DedupIndex]] and
+  * [[graft.pipeline.HybridRetrieval]] — plus
+  * [[graft.pipeline.AnnIndex]] and
+  * [[graft.pipeline.ClusterMaintenance]]) — one implementation so the
+  * crash semantics cannot diverge (the first cut had three
+  * hand-rolled variants with three different failure windows).
   *
   * Protocol, for folding every `<prefix>=` dir under `path` into one
   * `<prefix>=<target>`:
@@ -144,8 +146,7 @@ object StoreCompaction {
 
   /** How many `<prefix>=` partitions a store currently holds, after
     * healing any interrupted fold — the compaction-contract spec
-    * hook shared by every run-partitioned store (DedupIndex,
-    * CountStore). */
+    * hook of every [[RunStore]]. */
   private[graft] def runCount(spark: SparkSession, path: String,
                               prefix: String): Int = {
     heal(spark, path, prefix)

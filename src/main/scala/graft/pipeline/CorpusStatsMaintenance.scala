@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * four are pure functions of ONE sufficient statistic, the (lang,
   * term) count table, and counts are additive across disjoint
   * deliveries. So the store keeps per-run term counts ([[absorb]]
-  * tokenizes only the arriving batch) in a [[graft.ops.CountStore]], and
+  * tokenizes only the arriving batch) in a [[graft.ops.RunStore]], and
   * serves the statistics through the SAME `FromCounts` derivations
   * the gated queries run — served ≡ batch is structural, not
   * aspirational (the [[MixtureMaintenance]]/[[HybridRetrieval]]
@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * delivery. All four statistics come off the one tokenize of the
   * arriving batch.
   *
-  * Store layout: four [[graft.ops.CountStore]] tables under `dir`,
+  * Store layout: four [[graft.ops.RunStore]] tables under `dir`,
   * written and acknowledged together by each delivery —
   * `termcounts` (lang, w, c), `lenhist` (source, len, c), `bicounts`
   * (lang, w1, w2, c) and `srccounts` (source, w, csw). A token-less
@@ -52,17 +52,17 @@ import org.apache.spark.sql.functions._
   */
 object CorpusStatsMaintenance {
 
-  import graft.ops.CountStore
+  import graft.ops.RunStore
 
   private val Terms =
-    CountStore.Table("termcounts", "lang STRING, w STRING, c BIGINT", "lang", "w")
+    RunStore.Table("termcounts", "lang STRING, w STRING, c BIGINT", "lang", "w")
   private val Lens =
-    CountStore.Table("lenhist", "source STRING, len BIGINT, c BIGINT", "source", "len")
-  private val Bigrams = CountStore.Table("bicounts",
+    RunStore.Table("lenhist", "source STRING, len BIGINT, c BIGINT", "source", "len")
+  private val Bigrams = RunStore.Table("bicounts",
     "lang STRING, w1 STRING, w2 STRING, c BIGINT", "lang", "w1", "w2")
   private val Sources =
-    CountStore.Table("srccounts", "source STRING, w STRING, csw BIGINT", "source", "w")
-  private[graft] val Store = new CountStore("", Terms, Lens, Bigrams, Sources)
+    RunStore.Table("srccounts", "source STRING, w STRING, csw BIGINT", "source", "w")
+  private[graft] val Store = new RunStore("", Terms, Lens, Bigrams, Sources)
 
   private def lenhist(tk: DataFrame): DataFrame =
     tk.select(col("source"), size(col("toks")).cast("long").as("len"))

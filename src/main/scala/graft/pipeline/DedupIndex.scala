@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import graft.ops.RunStore
 import graft.ops.expressions.{MinHashSig, ShingleHashes}
 
 /** Incremental dedup screening: dedup a NEW batch of documents
@@ -13,7 +13,8 @@ import graft.ops.expressions.{MinHashSig, ShingleHashes}
   * the index grows. (The batch queries q23/q24 are the from-scratch
   * formulation of the same two dedup families.)
   *
-  * Index layout (parquet under `dir`, written by [[build]]):
+  * Index layout: one [[graft.ops.RunStore]] group under `dir`
+  * (acks at `dir`), each table `run=`-partitioned:
   *   - `fingerprints/` (doc_id, fp_hi, fp_lo, fp_len) — exact-dup
   *     lookup on the 128-bit fingerprint + byte length (narrow keys
   *     silently drop docs at corpus scale; see [[withDerived]])
@@ -28,8 +29,8 @@ import graft.ops.expressions.{MinHashSig, ShingleHashes}
   * O(corpus). For steady-state production the three index tables
   * would be bucketed on their join keys (ScaleSpec's bucketBy
   * pattern) so repeated screenings skip even the index-side shuffle.
-  * Measured, not just argued (ScaleProbe's `dedup_screen` mode, r18
-  * verdict #4): screening the same fixed 500-doc batch against a
+  * Measured, not just argued (ScaleProbe's `dedup_screen` mode):
+  * screening the same fixed 500-doc batch against a
   * 30×-larger index costs 1.7× — exponent ≈ 0.16 in index size,
   * fixed-overhead dominated — where a corpus-rescanning screen
   * would track exponent ≈ 1 (README scaling notes, receipt table).
@@ -87,36 +88,24 @@ object DedupIndex {
             lit(0L),
             (acc, v) => (acc * 31 + v) % lit(HashMod)))).as(Seq("band_idx", "band_hash")))
 
-  // Declared schema of each index table [[write]] lands, `run` (the
-  // partition column) last: screening and compaction read through
-  // `spark.read.schema(...)` and never run a schema-inference job.
-  // An old single-`fp` store would read `fp_hi` as NULL under this
-  // declaration, which is why [[requireWideLayout]] still checks each
-  // run directory's own footer before any of these reads.
-  // StoreSchemaSpec pins each declaration against the writer.
-  private[graft] val Schemas: scala.collection.immutable.ListMap[String, StructType] =
-    scala.collection.immutable.ListMap(
-      "fingerprints" -> "doc_id BIGINT, fp_hi BIGINT, fp_lo BIGINT, fp_len INT, run STRING",
-      "shingles" -> "doc_id BIGINT, hs ARRAY<BIGINT>, run STRING",
-      "bands" -> "doc_id BIGINT, band_idx INT, band_hash BIGINT, run STRING"
-    ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
-
-  private val Tables = Schemas.keys.toSeq
-
-  /** Table `t` of the index under its declared schema, restricted to
-    * `run=base` and approved runs, minus `excludeRun`. */
-  private def readRuns(spark: SparkSession, dir: String, t: String,
-                       ap: Set[String], excludeRun: Option[String] = None): DataFrame = {
-    val df = graft.ops.DeliveryMarker.approvedOnly(
-      spark.read.schema(Schemas(t)).parquet(s"$dir/$t"), ap)
-    excludeRun.fold(df)(r => df.filter(col("run") =!= lit(r)))
-  }
+  // The index's three tables, one [[graft.ops.RunStore]] group whose
+  // acks sit at `dir`. Screening and compaction read them under
+  // these declarations and never run a schema-inference job. An old
+  // single-`fp` store would read `fp_hi` as NULL under them, which
+  // is why [[requireWideLayout]] still checks each run directory's
+  // own footer before any of these reads.
+  private val Fingerprints = RunStore.Table.rows("fingerprints",
+    "doc_id BIGINT, fp_hi BIGINT, fp_lo BIGINT, fp_len INT")
+  private val Shingles = RunStore.Table.rows("shingles", "doc_id BIGINT, hs ARRAY<BIGINT>")
+  private val BandRows = RunStore.Table.rows("bands",
+    "doc_id BIGINT, band_idx INT, band_hash BIGINT")
+  private[graft] val Store = new RunStore("", Fingerprints, Shingles, BandRows)
 
   /** Build (or rebuild) the index for a corpus. One scan of the
     * corpus text computes fingerprint + shingle set + minhash
     * signature; bands derive from the signatures. The index is
-    * hive-partitioned on a `run` label: build writes `run=base` and
-    * clears every earlier run; [[append]] adds runs incrementally. */
+    * hive-partitioned on a `run` label: build replaces every run
+    * with `run=base`; [[append]] adds runs incrementally. */
   def build(spark: SparkSession, docs: DataFrame, dir: String): Unit = {
     // a REBUILD must also clear the screened-doc probe store a
     // DedupScreenStream left under this dir (graft.streaming
@@ -126,73 +115,43 @@ object DedupIndex {
     val screened = new org.apache.hadoop.fs.Path(s"$dir/screened")
     val fs = screened.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(screened)) fs.delete(screened, true)
-    write(spark, docs, dir, "base", clearOtherRuns = true)
+    withIndexRows(docs)(Store.rebuild(spark, dir, _: _*))
   }
 
   /** Append one ingest batch's docs to the index under `run=<runId>`
-    * (whole-dir overwrite of that run: re-running the same runId
-    * REPLACES that run instead of duplicating it — which makes
-    * at-least-once delivery, e.g. foreachBatch re-execution,
-    * idempotent). Only the batch is scanned; the existing index is
-    * untouched. */
+    * (re-running the same runId REPLACES that run instead of
+    * duplicating it — which makes at-least-once delivery, e.g.
+    * foreachBatch re-execution, idempotent). Only the batch is
+    * scanned; the existing index is untouched. */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
-             runId: String): Unit =
-    write(spark, docs, dir, runId, clearOtherRuns = false)
-
-  private def write(spark: SparkSession, docs: DataFrame, dir: String,
-                    runId: String, clearOtherRuns: Boolean): Unit = {
-    // complete any interrupted compaction BEFORE landing a run: a
-    // later heal would otherwise restore the pre-compaction snapshot
-    // over this write
-    healAll(spark, dir)
+             runId: String): Unit = {
     // an APPEND onto a pre-widening index would create the mixed-
     // layout store the requireWideLayout doc describes — refuse it at
-    // the write, not just at the read (build clears the store, so the
-    // rebuild path stays open)
-    if (!clearOtherRuns) requireWideLayout(spark, dir)
-    val derived = withDerived(docs).cache()
-    // each run is written as an EXPLICIT `run=<id>` directory rather
-    // than through partitionBy: same hive layout (readers still
-    // discover and prune on `run`), same per-run idempotency as
-    // dynamic partition overwrite — but a ZERO-ROW write still emits
-    // one schema-bearing parquet file, so an empty corpus build or an
-    // all-duplicates batch append leaves a READABLE index (a
-    // partitionBy write of zero rows leaves only _SUCCESS and the
-    // next read dies in schema inference)
-    if (clearOtherRuns)
-      // rebuild: stale markers must not approve reused run ids
-      graft.ops.DeliveryMarker.clearAll(spark, dir)
-    def out(df: DataFrame, path: String): Unit = {
-      if (clearOtherRuns) {
-        val root = new org.apache.hadoop.fs.Path(path)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(root))
-          fs.listStatus(root).map(_.getPath)
-            .filter(p => p.getName.startsWith("run=") && p.getName != s"run=$runId")
-            .foreach(p => fs.delete(p, true))
-      }
-      df.write.mode("overwrite").parquet(s"$path/run=$runId")
-    }
-    try {
-      out(derived.select(col("doc_id"), col("fp_hi"), col("fp_lo"), col("fp_len")),
-        s"$dir/fingerprints")
-      out(derived.select(col("doc_id"), col("hs")), s"$dir/shingles")
-      out(bandsOf(derived), s"$dir/bands")
-      // commit point (r17 DeliveryMarker sweep): one delivery spans
-      // THREE sub-store writes, and screening JOINS across them
-      // (bands nominate, fingerprints/shingles verify) — a
-      // half-landed run must stay invisible until all three land
-      graft.ops.DeliveryMarker.mark(spark, dir, runId)
-    } finally derived.unpersist()
+    // the write, not just at the read (build replaces the store, so
+    // the rebuild path stays open)
+    requireWideLayout(spark, dir)
+    withIndexRows(docs)(Store.absorb(spark, dir, runId, _: _*))
+  }
+
+  /** `land` the batch's fingerprints, shingles and bands (table
+    * order) off one derivation of its text. The derivation is
+    * checkpointed, not cached: an absorb writes each table's root,
+    * and Spark then re-caches every cached plan that reads that root,
+    * so a batch screened against this index (DedupScreenStream's
+    * uniques) would be screened again before each later table. */
+  private def withIndexRows(docs: DataFrame)(land: Seq[DataFrame] => Unit): Unit = {
+    val derived = withDerived(docs).localCheckpoint()
+    land(Seq(derived.select(col("doc_id"), col("fp_hi"), col("fp_lo"), col("fp_len")),
+      derived.select(col("doc_id"), col("hs")), bandsOf(derived)))
   }
 
   /** Fold every `run=` partition of each index table into a single
     * `run=base`, bounding what steady-state screenings list (daily
     * appends otherwise accumulate one partition per batch forever).
-    * Crash-recoverable via [[graft.ops.StoreCompaction]] (snapshot
-    * to a temp dir, commit marker, delete, rename — read entry
-    * points heal an interrupted fold). Run at a QUIESCENT point (no
-    * in-flight deliveries): a re-delivered batch appending its
+    * Crash-recoverable through the [[graft.ops.RunStore]] fold
+    * (unacknowledged runs are dropped, not folded). Run at a
+    * QUIESCENT point (no in-flight deliveries): a re-delivered batch
+    * appending its
     * `run=` after compaction would duplicate that batch's rows
     * alongside the folded copy. */
   def compact(spark: SparkSession, dir: String): Unit = {
@@ -200,22 +159,11 @@ object DedupIndex {
     // arbitrarily-inferred schema into run=base (requireWideLayout's
     // doc) — refuse before touching anything
     requireWideLayout(spark, dir)
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    Tables.foreach { t =>
-      graft.ops.StoreCompaction.fold(spark, s"$dir/$t", "run", "base",
-        readRuns(spark, dir, t, ap).drop("run"))
-    }
-    // markers clear only after the LAST table's fold (the unfolded
-    // tables' approved partitions stay readable through the filter)
-    graft.ops.DeliveryMarker.clear(spark, dir, ap)
+    Store.fold(spark, dir)
   }
 
-  private def healAll(spark: SparkSession, dir: String): Unit =
-    Tables.foreach(t =>
-      graft.ops.StoreCompaction.heal(spark, s"$dir/$t", "run"))
-
-  // Run directories already verified wide (r18 advisor note): the
-  // guard paid one parquet footer/schema read per run= dir on EVERY
+  // Run directories already verified wide: unmemoized, the guard
+  // pays one parquet footer/schema read per run= dir on EVERY
   // screen/append/compact — O(uncompacted runs) on the hot screening
   // path. A run dir's layout cannot change once verified: only this
   // object writes index runs, build() clears the store first,
@@ -227,7 +175,7 @@ object DedupIndex {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] def resetLayoutMemo(): Unit = wideVerified.clear()
 
-  /** Layout guard (r18 widening): an index persisted before the
+  /** Layout guard: an index persisted before the
     * 128-bit key carries a single `fp` column, and its hashes cannot
     * be widened in place (fp_hi/fp_lo derive from the TEXT, which
     * the index does not store) — the only sound migration is a
@@ -265,7 +213,7 @@ object DedupIndex {
   /** How many `run=` partitions a screening currently lists (spec
     * hook for the compaction contract). */
   private[graft] def runCount(spark: SparkSession, dir: String): Int =
-    graft.ops.StoreCompaction.runCount(spark, s"$dir/fingerprints", "run")
+    Store.runCount(spark, dir)
 
   /** Screen a new batch against the index. Returns one row per new
     * document: (doc_id, verdict, match_id, jaccard) with verdict in
@@ -289,18 +237,14 @@ object DedupIndex {
     // small side by definition, so recomputing its kernels per
     // reference costs less than materializing them would at scale
     val derived = withDerived(newDocs)
-    // heal first, then refuse pre-widening layouts BEFORE paying the
-    // eager band-probe work in verifiedAgainst (r18 advisor note:
-    // the guard used to run after the localCheckpoint+count probe
-    // had already executed — a late refusal on old-layout stores and
-    // dead work before it); with the verdict memoized per run dir
-    // this costs footer reads for NEW runs only
-    healAll(spark, dir)
+    // ONE snapshot (one heal, one ack listing) for the fingerprint and
+    // the band joins, so both see the same deliveries; then refuse
+    // pre-widening layouts BEFORE paying the eager band-probe work in
+    // verifiedAgainst (with the verdict memoized per run dir this
+    // costs footer reads for NEW runs only)
+    val snap = Store.read(spark, dir)
     requireWideLayout(spark, dir)
-    // verifiedAgainst heals every table first — built BEFORE the
-    // fingerprints read below so its heal precedes the eager file
-    // listing spark.read.parquet performs at construction time
-    val near = verifiedAgainst(spark, derived, dir, excludeRun)
+    val near = verifiedAgainst(spark, derived, snap, excludeRun)
         // best match: max jaccard, smaller corpus id on ties — via
         // max_by on a packed (jaccard, -id) struct, one aggregation
         .groupBy(col("doc_id"))
@@ -308,8 +252,7 @@ object DedupIndex {
           struct(col("jaccard"), negate(col("corpus_id")))).as("best"))
         .select(col("doc_id"), col("best.corpus_id").as("near_id"),
           col("best.jaccard").as("near_jaccard"))
-    val fps = readRuns(spark, dir, "fingerprints",
-        graft.ops.DeliveryMarker.approved(spark, dir), excludeRun)
+    val fps = snap.rows(Fingerprints, excludeRun)
         .select(col("doc_id").as("corpus_id"),
           col("fp_hi"), col("fp_lo"), col("fp_len"))
 
@@ -334,13 +277,11 @@ object DedupIndex {
     * cluster maintenance must see a batch doc that bridges TWO
     * existing clusters, not just its best match). */
   private[graft] def verifiedAgainst(spark: SparkSession, derived: DataFrame,
-                              dir: String, excludeRun: Option[String],
+                              snap: Store.Snapshot, excludeRun: Option[String],
                               broadcastMaxBands: Long = ProbeBroadcastMaxBands): DataFrame = {
-    healAll(spark, dir) // complete any interrupted compaction first
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    val shs = readRuns(spark, dir, "shingles", ap, excludeRun)
+    val shs = snap.rows(Shingles, excludeRun)
       .select(col("doc_id").as("corpus_id"), col("hs").as("corpus_hs"))
-    val bands = readRuns(spark, dir, "bands", ap, excludeRun)
+    val bands = snap.rows(BandRows, excludeRun)
       .select(col("band_idx"), col("band_hash"), col("doc_id").as("corpus_id"))
     // Hard per-bucket cap on the INDEX side (q24/q29/q34's BucketCap
     // device, serving-probe form): a boilerplate flood puts ~10⁶
@@ -410,7 +351,7 @@ object DedupIndex {
     * maintenance, not the exhaustive pair set. */
   def nearEdgesAgainst(spark: SparkSession, newDocs: DataFrame, dir: String,
                        excludeRun: Option[String] = None): DataFrame =
-    verifiedAgainst(spark, withDerived(newDocs), dir, excludeRun)
+    verifiedAgainst(spark, withDerived(newDocs), Store.read(spark, dir), excludeRun)
       .select(col("doc_id").as("id_a"), col("corpus_id").as("id_b"))
 
   /** Verified near-dup edges WITHIN one document set — the q24 chain

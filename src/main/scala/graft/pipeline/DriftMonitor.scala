@@ -28,20 +28,20 @@ import org.apache.spark.sql.functions._
   * at the first rebase (ClusterMaintenance's empty-init discipline:
   * an unasked question, not a crash).
   *
-  * Store layout: two [[graft.ops.CountStore]] groups of one table
+  * Store layout: two [[graft.ops.RunStore]] groups of one table
   * each — `dir/bucket_counts` (lang, b, n) delta rows, and
   * `dir/reference` the frozen reference totals, same shape.
   */
 object DriftMonitor {
 
-  import graft.ops.CountStore
+  import graft.ops.RunStore
 
   private val Buckets =
-    CountStore.Table("bucket_counts", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
+    RunStore.Table("bucket_counts", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
   private val Reference =
-    CountStore.Table("reference", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
-  private[graft] val Counts = new CountStore("", Buckets)
-  private[graft] val Ref = new CountStore("reference", Reference)
+    RunStore.Table("reference", "lang STRING, b BIGINT, n BIGINT", "lang", "b")
+  private[graft] val Counts = new RunStore("", Buckets)
+  private[graft] val Ref = new RunStore("reference", Reference)
 
   /** Absorb one ingest batch: one scan of the BATCH aggregates its
     * (lang, bucket) token counts through the SHARED q116 count

@@ -19,7 +19,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    delivery without ever resampling the corpus (the incremental
   *    posture Chamandy et al.'s streaming formulation was built for).
   *
-  * Store layout: one root, two [[graft.ops.CountStore]] groups —
+  * Store layout: one root, two [[graft.ops.RunStore]] groups —
   * `dir/qicounts` (nationkey, segment, band, sensitive, n) alone,
   * and the bootstrap pair `dir/bootreps` (source, b, s, wsum) +
   * `dir/bootpoint` (source, n_docs, lsum), which one delivery writes
@@ -36,17 +36,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object GovernanceMaintenance {
 
-  import graft.ops.CountStore
+  import graft.ops.RunStore
 
-  private val QiCounts = CountStore.Table("qicounts",
+  private val QiCounts = RunStore.Table("qicounts",
     "nationkey BIGINT, segment STRING, band BIGINT, sensitive DOUBLE, n BIGINT",
     "nationkey", "segment", "band", "sensitive")
-  private[graft] val Qi = new CountStore("qicounts", QiCounts)
+  private[graft] val Qi = new RunStore("qicounts", QiCounts)
   private val Reps =
-    CountStore.Table("bootreps", "source STRING, b INT, s BIGINT, wsum BIGINT", "source", "b")
+    RunStore.Table("bootreps", "source STRING, b INT, s BIGINT, wsum BIGINT", "source", "b")
   private val Points =
-    CountStore.Table("bootpoint", "source STRING, n_docs BIGINT, lsum BIGINT", "source")
-  private[graft] val Boot = new CountStore("", Reps, Points)
+    RunStore.Table("bootpoint", "source STRING, n_docs BIGINT, lsum BIGINT", "source")
+  private[graft] val Boot = new RunStore("", Reps, Points)
 
   // ---- q171: k-anonymity / l-diversity --------------------------
 

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import graft.ops.RunStore
 
 /** Persisted hybrid retrieval — the SERVED form of q111: build the
   * two ranker indexes once, absorb ingest batches incrementally,
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.StructType
   * deploys, with [[AnnIndex]] supplying the semantic ranker exactly
   * where q111's class doc declares the plug point.
   *
-  * Layout (parquet under `dir`, every store `run=`-partitioned on
-  * the [[DedupIndex]]/[[AnnIndex]] idempotency discipline —
-  * re-delivered batches replace their own partition):
+  * Layout (parquet under `dir`, every store `run=`-partitioned —
+  * re-delivered batches replace their own partition; postings,
+  * termstats, stats and raw are one [[graft.ops.RunStore]] group):
   *   - `postings/` (th, doc_id, tf, dl), hive-partitioned on
   *     (run, tb = th mod TermBuckets) — a query batch touches only
   *     its terms' buckets (static partition pruning, the
@@ -57,21 +57,17 @@ object HybridRetrieval {
 
   private[graft] val TermBuckets = 64
 
-  // Declared store schemas, one per store [[writeLexical]] lands
-  // (the raw and ANN stores' live in [[AnnIndex]]): every read goes
-  // through `spark.read.schema(...)` and never runs a parquet
-  // schema-inference job. Partition columns come last, where
-  // partition discovery appends them; StoreSchemaSpec pins each
-  // declaration against the writers.
-  private[graft] val PostingsSchema = StructType.fromDDL(
-    "th BIGINT, doc_id BIGINT, dl DOUBLE, tf BIGINT, run STRING, tb INT")
-  private[graft] val TermstatsSchema =
-    StructType.fromDDL("th BIGINT, df BIGINT, run STRING, tb INT")
-  private[graft] val StatsSchema =
-    StructType.fromDDL("n BIGINT, sumdl BIGINT, run STRING")
-
-  private def readRaw(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(AnnIndex.RawSchema).parquet(s"$dir/raw")
+  // The four serving-visible stores, one [[graft.ops.RunStore]] group
+  // whose acks sit at `dir` (the ANN stores' schemas live in
+  // [[AnnIndex]]): every read goes through their declarations and
+  // never runs a parquet schema-inference job.
+  private val Postings = RunStore.Table.rows("postings",
+    "th BIGINT, doc_id BIGINT, dl DOUBLE, tf BIGINT").bucketedBy("tb")
+  private val Termstats = RunStore.Table("termstats", "th BIGINT, df BIGINT", "th")
+    .bucketedBy("tb")
+  private val Stats = RunStore.Table("stats", "n BIGINT, sumdl BIGINT")
+  private val Raw = RunStore.Table.rows("raw", "vec_id BIGINT, vec ARRAY<DOUBLE>")
+  private[graft] val Store = new RunStore("", Postings, Termstats, Stats, Raw)
 
   private def tokenHashes(c: Column) =
     array_distinct(graft.ops.expressions.TokenHashes(c))
@@ -105,67 +101,51 @@ object HybridRetrieval {
         unitEmbed(col("text")).as("vec"),
         graft.ops.expressions.TokenHashes(col("text")).as("ths"))
 
-  /** Land one batch's lexical stores under `run=<runId>`. All three
-    * writes are per-batch aggregates of THIS batch only (map-side
-    * combined; the df delta is a groupBy count — q70's skew-free
-    * shape, no content-key window anywhere). */
-  private def writeLexical(prepared: DataFrame, dir: String,
-                           runId: String, dynamic: Boolean): Unit = {
-    val mode = if (dynamic) "dynamic" else "static"
-    val postings = prepared
-      .select(col("doc_id"), col("dl"), explode(col("ths")).as("th"))
-      .groupBy(col("th"), col("doc_id"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    postings
-      .withColumn("run", lit(runId))
-      .withColumn("tb", pmod(col("th"), lit(TermBuckets.toLong)))
-      .write.partitionBy("run", "tb").mode("overwrite")
-      .option("partitionOverwriteMode", mode).parquet(s"$dir/postings")
-    postings.groupBy(col("th")).agg(count(lit(1)).as("df"))
-      .withColumn("run", lit(runId))
-      .withColumn("tb", pmod(col("th"), lit(TermBuckets.toLong)))
-      .write.partitionBy("run", "tb").mode("overwrite")
-      .option("partitionOverwriteMode", mode).parquet(s"$dir/termstats")
-    postings.unpersist()
-    prepared
-      .agg(count(lit(1)).as("n"),
-        sum(col("dl")).cast("bigint").as("sumdl"))
-      .withColumn("run", lit(runId))
-      .coalesce(1)
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", mode).parquet(s"$dir/stats")
-  }
-
   private def vecsOf(prepared: DataFrame): DataFrame =
     prepared.filter(col("vec").isNotNull)
       .select(col("doc_id").as("vec_id"), col("vec"))
 
-  /** Build all stores from scratch (static overwrite — a re-build
-    * replaces any prior runs, the [[AnnIndex.build]] contract). */
+  /** `land` one batch's four store frames (table order): postings,
+    * df deltas, the (n, sumdl) delta and the raw vectors. All are
+    * per-batch aggregates of THIS batch only (map-side combined; the
+    * df delta is a groupBy count — q70's skew-free shape, no
+    * content-key window anywhere). */
+  private def withStoreRows(prepared: DataFrame)(land: Seq[DataFrame] => Unit): Unit = {
+    val postings = prepared
+      .select(col("doc_id"), col("dl"), explode(col("ths")).as("th"))
+      .groupBy(col("th"), col("doc_id"), col("dl"))
+      .agg(count(lit(1)).as("tf"))
+      .withColumn("tb", pmod(col("th"), lit(TermBuckets.toLong)))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try land(Seq(postings,
+      postings.groupBy(col("th"), col("tb")).agg(count(lit(1)).as("df")),
+      prepared.agg(count(lit(1)).as("n"), sum(col("dl")).cast("bigint").as("sumdl"))
+        .coalesce(1),
+      vecsOf(prepared)))
+    finally postings.unpersist()
+  }
+
+  /** Build all stores from scratch (every run replaced by `run=base`,
+    * the [[AnnIndex.build]] contract). */
   def build(spark: SparkSession, docs: DataFrame, dir: String): Unit = {
-    // rebuild: stale delivery markers must not approve reused run ids
-    graft.ops.DeliveryMarker.clearAll(spark, dir)
     val prepared = prepare(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeLexical(prepared, dir, "base", dynamic = false)
-    val vecs = vecsOf(prepared)
-    vecs.withColumn("run", lit("base"))
-      .write.partitionBy("run").mode("overwrite").parquet(s"$dir/raw")
-    // a corpus can be ENTIRELY token-less (a fresh deployment whose
-    // first delivery is boilerplate): the raw store still lands
-    // (zero-row but schema-bearing — the house write convention), the
-    // ANN store is DEFERRED until vectors exist ([[append]]
-    // bootstraps it), and a REBUILD over such a corpus clears any
-    // stale ANN state a prior build left (serving would otherwise
-    // shortlist phantom ids — harmless after the raw refine join,
-    // but dead weight every probe)
-    if (vecs.isEmpty) {
-      val ann = new org.apache.hadoop.fs.Path(s"$dir/ann")
-      val fs = ann.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(ann)) fs.delete(ann, true)
-    } else AnnIndex.build(spark, vecs, s"$dir/ann")
-    prepared.unpersist()
+    try {
+      withStoreRows(prepared)(Store.rebuild(spark, dir, _: _*))
+      // a corpus can be ENTIRELY token-less (a fresh deployment whose
+      // first delivery is boilerplate): the ANN store is DEFERRED
+      // until vectors exist ([[append]] bootstraps it), and a REBUILD
+      // over such a corpus clears any stale ANN state a prior build
+      // left (serving would otherwise shortlist phantom ids —
+      // harmless after the raw refine join, but dead weight every
+      // probe)
+      val vecs = vecsOf(prepared)
+      if (vecs.isEmpty) {
+        val ann = new org.apache.hadoop.fs.Path(s"$dir/ann")
+        val fs = ann.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(ann)) fs.delete(ann, true)
+      } else AnnIndex.build(spark, vecs, s"$dir/ann")
+    } finally prepared.unpersist()
   }
 
   /** Absorb one ingest batch under `run=<runId>` — idempotent under
@@ -179,60 +159,52 @@ object HybridRetrieval {
     * the crash costs recall only until the next delivery. */
   def append(spark: SparkSession, docs: DataFrame, dir: String,
              runId: String): Unit = {
-    Seq("postings", "termstats", "stats", "raw")
-      .foreach(s => graft.ops.StoreCompaction.heal(spark, s"$dir/$s", "run"))
     val prepared = prepare(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    writeLexical(prepared, dir, runId, dynamic = true)
-    val vecs = vecsOf(prepared)
-    vecs.withColumn("run", lit(runId))
-      .write.partitionBy("run").mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic").parquet(s"$dir/raw")
-    // commit point (r17 DeliveryMarker sweep): one delivery spans
-    // FOUR serving-visible writes (postings + termstats + stats +
-    // raw) that BM25 joins across — a crash between them must stay
-    // invisible to serving and be dropped (not folded) by compaction
-    // until the retry lands the run whole. The ANN encode below is
-    // DERIVED state with its own heal-on-append recovery, so the
-    // marker lands before it: a crash mid-encode heals on the next
-    // delivery, it does not un-acknowledge this one.
-    graft.ops.DeliveryMarker.mark(spark, dir, runId)
-    // DEFERRED BOOTSTRAP: the store was built before any vectors
-    // existed ([[build]]'s token-less-corpus posture) — train the
-    // codebooks on the first vectored batch. Train ONLY: build's
-    // run=base codes would need a delete-and-re-key to this
-    // delivery's run id, and a crash between the delete and the
-    // re-append strands a codebooks store with zero codes that
-    // every later append treats as bootstrapped — the first
-    // batch's vectors silently never encode (round-13 advisor).
-    if (!vecs.isEmpty &&
-        !graft.ops.StoreCompaction.hasParquetData(spark, s"$dir/ann/codebooks"))
-      AnnIndex.train(spark, vecs, s"$dir/ann")
-    // HEAL-ON-APPEND (the store family's heal-on-read discipline,
-    // applied to the raw→codes invariant): encode every raw run
-    // the codes store lacks, from the raw side store. This single
-    // loop IS the encode of the current delivery (its raw run
-    // landed above, codes can't have it yet) AND the repair of any
-    // prior delivery whose encode crashed after its raw write —
-    // codebooks-present-but-run-unencoded is no longer a terminal
-    // state. Gated on the CODEBOOKS store, not on this delivery's
-    // vectors (round-14 advisor): an orphan raw run must heal on the
-    // next delivery of ANY kind, or a vector-less ingest stream
-    // leaves it unencoded indefinitely. O(missing runs): steady
-    // state re-reads one run's vectors from parquet instead of the
-    // in-memory frame; the uniform read path is what makes the
-    // crash recovery free.
-    if (graft.ops.StoreCompaction.hasParquetData(spark, s"$dir/ann/codebooks")) {
-      val missing = runsOf(spark, s"$dir/raw") --
-        runsOf(spark, s"$dir/ann/codes")
-      missing.toSeq.sorted.foreach { r =>
-        AnnIndex.append(spark,
-          readRaw(spark, dir).where(col("run") === r)
-            .select(col("vec_id"), col("vec")),
-          s"$dir/ann", r)
+    try {
+      // one delivery spans FOUR serving-visible writes (postings +
+      // termstats + stats + raw) that BM25 joins across, acknowledged
+      // together. The ANN encode below is DERIVED state with its own
+      // heal-on-append recovery, so the ack lands before it: a crash
+      // mid-encode heals on the next delivery, it does not
+      // un-acknowledge this one.
+      withStoreRows(prepared)(Store.absorb(spark, dir, runId, _: _*))
+      val vecs = vecsOf(prepared)
+      // DEFERRED BOOTSTRAP: the store was built before any vectors
+      // existed ([[build]]'s token-less-corpus posture) — train the
+      // codebooks on the first vectored batch. Train ONLY: build's
+      // run=base codes would need a delete-and-re-key to this
+      // delivery's run id, and a crash between the delete and the
+      // re-append strands a codebooks store with zero codes that
+      // every later append treats as bootstrapped — the first
+      // batch's vectors silently never encode.
+      if (!vecs.isEmpty &&
+          !graft.ops.StoreCompaction.hasParquetData(spark, s"$dir/ann/codebooks"))
+        AnnIndex.train(spark, vecs, s"$dir/ann")
+      // HEAL-ON-APPEND (the store family's heal-on-read discipline,
+      // applied to the raw→codes invariant): encode every raw run
+      // the codes store lacks, from the raw side store. This single
+      // loop IS the encode of the current delivery (its raw run
+      // landed above, codes can't have it yet) AND the repair of any
+      // prior delivery whose encode crashed after its raw write —
+      // codebooks-present-but-run-unencoded is no longer a terminal
+      // state. Gated on the CODEBOOKS store, not on this delivery's
+      // vectors: an orphan raw run must heal on the next delivery of
+      // ANY kind, or a vector-less ingest stream leaves it unencoded
+      // indefinitely. O(missing runs): steady state re-reads one
+      // run's vectors from parquet instead of the in-memory frame;
+      // the uniform read path is what makes the crash recovery free.
+      if (graft.ops.StoreCompaction.hasParquetData(spark, s"$dir/ann/codebooks")) {
+        val missing = runsOf(spark, s"$dir/raw") --
+          runsOf(spark, s"$dir/ann/codes")
+        missing.toSeq.sorted.foreach { r =>
+          AnnIndex.append(spark,
+            spark.read.schema(Raw.schema).parquet(s"$dir/raw").where(col("run") === r)
+              .select(col("vec_id"), col("vec")),
+            s"$dir/ann", r)
+        }
       }
-    }
-    prepared.unpersist()
+    } finally prepared.unpersist()
   }
 
   /** The `run=` partition values present under `path` (directory
@@ -250,45 +222,29 @@ object HybridRetrieval {
   /** Fold every store's `run=` partitions to one (daily appends
     * otherwise accumulate a partition per batch forever — the
     * [[DedupIndex.compact]] discipline; run at a quiescent point).
-    * Delta stores (termstats/stats) fold by CONCATENATION — the
-    * serve-time integer sums read identically before and after. */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    def read(store: String, schema: StructType) = graft.ops.DeliveryMarker
-      .approvedOnly(spark.read.schema(schema).parquet(s"$dir/$store"), ap).drop("run")
-    graft.ops.StoreCompaction.fold(spark, s"$dir/postings", "run", "base",
-      read("postings", PostingsSchema), Seq("tb"))
-    graft.ops.StoreCompaction.fold(spark, s"$dir/termstats", "run", "base",
-      read("termstats", TermstatsSchema)
-        .groupBy(col("th"), col("tb")).agg(sum(col("df")).as("df"))
-        .select(col("th"), col("df"), col("tb")), Seq("tb"))
-    graft.ops.StoreCompaction.fold(spark, s"$dir/stats", "run", "base",
-      read("stats", StatsSchema)
-        .agg(sum(col("n")).as("n"), sum(col("sumdl")).as("sumdl")),
-      Nil)
-    graft.ops.StoreCompaction.fold(spark, s"$dir/raw", "run", "base",
-      read("raw", AnnIndex.RawSchema), Nil)
-    // an UNAPPROVED raw run was just dropped, but the heal-on-append
-    // loop may already have encoded it into codes — delete those
-    // code runs BEFORE the codes fold, or the retry's re-encode
-    // would duplicate the ids alongside the folded copy
-    val codesPath = s"$dir/ann/codes"
-    val stray = runsOf(spark, codesPath) -- ap - "base"
-    if (stray.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(codesPath)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      stray.foreach { r =>
-        val pth = new org.apache.hadoop.fs.Path(root, s"run=$r")
-        if (fs.exists(pth) && !fs.delete(pth, true))
-          throw new IllegalStateException(
-            s"hybrid compact: failed to drop unapproved code run $pth")
+    * Delta stores (termstats/stats) fold by their integer sums, so
+    * serving reads identically before and after. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    Store.fold(spark, dir, { ap =>
+      // an UNAPPROVED raw run was just dropped, but the heal-on-append
+      // loop may already have encoded it into codes — delete those
+      // code runs BEFORE the codes fold, or the retry's re-encode
+      // would duplicate the ids alongside the folded copy
+      val codesPath = s"$dir/ann/codes"
+      val stray = runsOf(spark, codesPath) -- ap - "base"
+      if (stray.nonEmpty) {
+        val root = new org.apache.hadoop.fs.Path(codesPath)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        stray.foreach { r =>
+          val pth = new org.apache.hadoop.fs.Path(root, s"run=$r")
+          if (fs.exists(pth) && !fs.delete(pth, true))
+            throw new IllegalStateException(
+              s"hybrid compact: failed to drop unapproved code run $pth")
+        }
       }
-    }
-    AnnIndex.compact(spark, s"$dir/ann")
-    // markers clear only after the LAST fold (unfolded stores'
-    // approved partitions stay readable through the filter)
-    graft.ops.DeliveryMarker.clear(spark, dir, ap)
-  }
+      // folded before the acks clear, like the four stores
+      AnnIndex.compact(spark, s"$dir/ann")
+    })
 
   /** Serve a query batch: (query_id LONG, qtext STRING) →
     * (query_id, doc_id, rrf_nano, rn), top-`k` fused per query.
@@ -321,18 +277,17 @@ object HybridRetrieval {
     * the query set for per-query accounting. */
   def search(spark: SparkSession, queries: DataFrame, dir: String,
              k: Int = 10, denseExact: Boolean = false): DataFrame = {
-    // the approved-run set is listed ONCE per search and threaded to
-    // every store read below (r17 advisor note): each
-    // DeliveryMarker.approved is a FileSystem.listStatus, and the
-    // hot serving path was paying one per sub-store scan — several
-    // remote-FS round-trips per query batch. Markers only change on
+    // ONE store snapshot per search (one heal pass, one ack listing)
+    // threaded to every store read below: each ack listing is a
+    // FileSystem.listStatus, several remote-FS round-trips per query
+    // batch if every sub-store scan paid its own. Acks only change on
     // absorb/compact (not mid-search), so one listing is sound.
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
+    val snap = Store.read(spark, dir)
     // pool depth scales with the requested k: fixed RrfDepth pools
     // would silently cap the fusion at 2·RrfDepth distinct docs per
     // query however large a k the caller asked for
     val depth = math.max(graft.queries.Search.RrfDepth, k)
-    val lex = lexRanks(spark, queries, dir, depth, Some(ap))
+    val lex = lexRanks(spark, queries, dir, depth, Some(snap))
     val qv = queries.select(col("query_id"), unitEmbed(col("qtext")).as("qvec"))
       .filter(col("qvec").isNotNull)
     // a store with no vectored delivery yet has NO ann state (build's
@@ -352,7 +307,7 @@ object HybridRetrieval {
         // (HybridRetrievalSpec pins row equivalence on the gate
         // corpus), so any serving divergence is attributable to the
         // ANN ranker alone.
-        val semAll = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
+        val semAll = snap.rows(Raw)
           .select(col("vec_id").as("doc_id"), col("vec"))
           .crossJoin(broadcast(qv))
           .select(col("query_id"), col("doc_id"),
@@ -360,8 +315,7 @@ object HybridRetrieval {
         graft.plans.TopK.perKey(semAll, Seq("query_id"),
           Seq("cos" -> false, "doc_id" -> true), depth, rankCol = "srank")
       } else {
-        val raw = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
-        AnnIndex.searchRefined(spark, qv, s"$dir/ann", raw, k = depth)
+        AnnIndex.searchRefined(spark, qv, s"$dir/ann", snap.rows(Raw), k = depth)
           .select(col("query_id"), col("vec_id").as("doc_id"),
             col("rn").cast("int").as("srank"))
       }
@@ -411,23 +365,20 @@ object HybridRetrieval {
                     k: Int = graft.queries.Search.HnTopK,
                     depth: Int = 0, nprobe: Int = Int.MaxValue): DataFrame = {
     val d = if (depth > 0) depth else 5 * k
-    // one marker listing + one heal pass per mining call (the
-    // search() note)
-    val ap = graft.ops.DeliveryMarker.approved(spark, dir)
-    healStores(spark, dir)
-    val (qt, _, pruned) = prunedPostings(spark, queries, dir, ap)
+    // one store snapshot per mining call (the search() note)
+    val snap = Store.read(spark, dir)
+    val (qt, _, pruned) = prunedPostings(spark, queries, snap)
     val qv = queries.select(col("query_id"), unitEmbed(col("qtext")).as("qvec"))
       .filter(col("qvec").isNotNull)
     val sharers = pruned.select(col("th"), col("doc_id"))
       .join(broadcast(qt), "th")
       .select(col("query_id"), col("doc_id").as("vec_id")).distinct()
-    // marker-filtered like EVERY raw read (r18 review find): an
-    // unacknowledged half-landed delivery's vectors were visible to
-    // mining while its postings were filtered out of the term-sharing
-    // exclusion — a doc sharing query terms could be emitted as a
-    // "zero-shared-term" hard negative, contaminating training data
-    val raw = graft.ops.DeliveryMarker.approvedOnly(readRaw(spark, dir), ap)
-    val cand = AnnIndex.searchRefined(spark, qv, s"$dir/ann", raw,
+    // ack-filtered like EVERY raw read: were an unacknowledged
+    // half-landed delivery's vectors visible while its postings are
+    // filtered out of the term-sharing exclusion, a doc sharing query
+    // terms could be emitted as a "zero-shared-term" hard negative,
+    // contaminating training data
+    val cand = AnnIndex.searchRefined(spark, qv, s"$dir/ann", snap.rows(Raw),
         k = d, nprobe = nprobe, keepVec = true, exclude = Some(sharers))
       .select(col("query_id"), col("vec_id").as("doc_id"), col("cand_vec"))
     val scored = cand
@@ -449,17 +400,14 @@ object HybridRetrieval {
   private[graft] def lexRanks(spark: SparkSession, queries: DataFrame,
                               dir: String,
                               depth: Int = graft.queries.Search.RrfDepth,
-                              approvedRuns: Option[Set[String]] = None): DataFrame = {
-    // None = standalone call (spec hooks): list markers here, once
-    val ap = approvedRuns.getOrElse(
-      graft.ops.DeliveryMarker.approved(spark, dir))
-    // heal BEFORE the first read (r18): the stats read below is
-    // EAGER, and it used to run before prunedPostings' heal pass — a
-    // compaction of the stats store interrupted in the committed
+                              snapshot: Option[Store.Snapshot] = None): DataFrame = {
+    // None = standalone call (spec hooks): take the snapshot here. It
+    // heals BEFORE the first read: the stats read below is EAGER, and
+    // a compaction of the stats store interrupted in the committed
     // window (run dirs deleted, snapshot still in the hidden tmp dir)
-    // would read n = 0 and silently serve semantic-only fusion
-    // instead of healing first
-    healStores(spark, dir)
+    // would otherwise read n = 0 and silently serve semantic-only
+    // fusion
+    val snap = snapshot.getOrElse(Store.read(spark, dir))
     // one row per approved run, folded on the driver (a scan, no
     // aggregate shuffle). Nulls count as 0: a store built/appended
     // from ONLY empty or token-less batches wrote null sum(dl)
@@ -467,9 +415,7 @@ object HybridRetrieval {
     // the lexical ranker short-circuits to an EMPTY pool and search()
     // degrades to semantic-only fusion (the q111 paraphrase law's
     // posture: absent ranker pools weaken ranking, never crash it)
-    val runStats = graft.ops.DeliveryMarker.approvedOnly(
-        spark.read.schema(StatsSchema).parquet(s"$dir/stats"), ap)
-      .select(col("n"), col("sumdl")).collect()
+    val runStats = snap.rows(Stats).select(col("n"), col("sumdl")).collect()
     def total(i: Int) = runStats.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).sum
     val (n, sumdl) = (total(0).toDouble, total(1).toDouble)
     if (n == 0)
@@ -478,8 +424,8 @@ object HybridRetrieval {
           lit(0L).as("score_u")).filter(lit(false)),
         Seq("query_id"), Seq("score_u" -> false, "doc_id" -> true),
         depth, rankCol = "lrank")
-    val (qt, terms, pruned) = prunedPostings(spark, queries, dir, ap)
-    val dfs = prunedScan(spark, terms, s"$dir/termstats", TermstatsSchema, ap)
+    val (qt, terms, pruned) = prunedPostings(spark, queries, snap)
+    val dfs = prunedScan(spark, terms, snap, Termstats)
       .groupBy(col("th")).agg(sum(col("df")).as("df"))
     val matched = pruned
       .join(broadcast(qt), "th")
@@ -514,39 +460,29 @@ object HybridRetrieval {
     * lists the other buckets, and no directory matching yields an
     * empty frame of the declared schema. Past Spark's 32-path
     * threshold a batch's directories list in Spark's own parallel
-    * job, as a whole-store read did. The marker and partition filters
+    * job, as a whole-store read did. The bucket and term filters
     * below still apply. */
-  private def prunedScan(spark: SparkSession, terms: Array[Long], path: String,
-                         schema: StructType, ap: Set[String]): DataFrame = {
+  private def prunedScan(spark: SparkSession, terms: Array[Long],
+                         snap: Store.Snapshot, t: RunStore.Table): DataFrame = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     val buckets = terms.map(_ % TermBuckets).distinct
     val wanted = buckets.map(b => s"tb=$b").toSet
+    val path = t.path(snap.dir)
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def subdirs(p: Path) = fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-    def approved(runDir: String) = runDir.startsWith("run=") && {
-      val r = unescapePathName(runDir.stripPrefix("run="))
-      r == "base" || ap(r)
-    }
+    def approved(runDir: String) = runDir.startsWith("run=") &&
+      snap.isApproved(unescapePathName(runDir.stripPrefix("run=")))
     val leaves = subdirs(root).filter(p => approved(p.getName))
       .flatMap(subdirs).filter(p => wanted(p.getName))
     val scan =
       if (leaves.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else spark.read.schema(schema).option("basePath", path)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), t.schema)
+      else spark.read.schema(t.schema).option("basePath", path)
         .parquet(leaves.map(_.toString).toIndexedSeq: _*)
-    graft.ops.DeliveryMarker.approvedOnly(scan, ap)
-      .filter(col("tb").isin(buckets: _*) && col("th").isin(terms: _*))
+    scan.filter(col("tb").isin(buckets: _*) && col("th").isin(terms: _*))
   }
-
-  /** Complete any interrupted compaction of the four lexical/raw
-    * sub-stores — every serving entry point calls this before its
-    * FIRST store read (idempotent: four hidden-marker existence
-    * checks when nothing is in flight). */
-  private def healStores(spark: SparkSession, dir: String): Unit =
-    Seq("postings", "termstats", "stats", "raw")
-      .foreach(s => graft.ops.StoreCompaction.heal(spark, s"$dir/$s", "run"))
 
   /** The batch's (query_id, th) table, its distinct terms and the
     * postings scan pruned to them. The batch is tokenized and its
@@ -554,29 +490,22 @@ object HybridRetrieval {
     * rows on the driver (sorted, so the pruning predicate reads the
     * same for the same batch), and the same rows come back as a
     * local relation, the broadcast side of the `th` joins downstream.
-    *
-    * Callers MUST [[healStores]] before this (every serving entry
-    * point — lexRanks, hardNegatives, lexPlan — does, exactly once;
-    * healing here too would double the remote-FS existence checks on
-    * the hot path). */
+    * The snapshot healed the stores once; healing here too would
+    * double the remote-FS existence checks on the hot path. */
   private def prunedPostings(spark: SparkSession, queries: DataFrame,
-                             dir: String, ap: Set[String])
-      : (DataFrame, Array[Long], DataFrame) = {
+                             snap: Store.Snapshot): (DataFrame, Array[Long], DataFrame) = {
     val qtPlan = queries
       .select(col("query_id"), explode(tokenHashes(col("qtext"))).as("th"))
     val qtRows = qtPlan.collect()
     val qt = spark.createDataFrame(java.util.Arrays.asList(qtRows: _*), qtPlan.schema)
     val terms = qtRows.map(_.getLong(1)).distinct.sorted
-    (qt, terms, prunedScan(spark, terms, s"$dir/postings", PostingsSchema, ap))
+    (qt, terms, prunedScan(spark, terms, snap, Postings))
   }
 
   /** The lexical-ranker scan over the stores (spec hook: partition
     * pruning — the postings scan must read only the query terms'
     * `tb` buckets; same heal + pruning code path as serving). */
   private[graft] def lexPlan(spark: SparkSession, queries: DataFrame,
-                             dir: String): DataFrame = {
-    healStores(spark, dir)
-    prunedPostings(spark, queries, dir,
-      graft.ops.DeliveryMarker.approved(spark, dir))._3
-  }
+                             dir: String): DataFrame =
+    prunedPostings(spark, queries, Store.read(spark, dir))._3
 }

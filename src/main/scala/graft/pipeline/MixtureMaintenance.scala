@@ -26,17 +26,17 @@ import graft.ops.TextOps
   * rounded rate; content-hash compare), so re-cutting the same
   * snapshot reproduces the same corpus bit-for-bit.
   *
-  * Store layout: one [[graft.ops.CountStore]] table,
+  * Store layout: one [[graft.ops.RunStore]] table,
   * `dir/domain_counts` (lang, n_docs, n_tokens) — one aggregated
   * delta per absorbed batch.
   */
 object MixtureMaintenance {
 
-  import graft.ops.CountStore
+  import graft.ops.RunStore
 
-  private val Counts = CountStore.Table("domain_counts",
+  private val Counts = RunStore.Table("domain_counts",
     "lang STRING, n_docs BIGINT, n_tokens BIGINT", "lang")
-  private[graft] val Store = new CountStore("", Counts)
+  private[graft] val Store = new RunStore("", Counts)
 
   /** Absorb one ingest batch: one scan of the BATCH aggregates its
     * per-domain (n_docs, n_tokens) and lands it under

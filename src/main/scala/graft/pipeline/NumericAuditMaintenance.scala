@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * scan answers yesterday's question) — while the gated q164 chain
   * stays the from-scratch truth the store is specced against.
   *
-  * Store layout: one [[graft.ops.CountStore]] table,
+  * Store layout: one [[graft.ops.RunStore]] table,
   * `dir/digitcounts` (digit, n_obs). Serving goes through the SAME
   * `Relational.benfordFromCounts` derivation the gated query runs —
   * served ≡ batch is structural. The store is ≤ 10 rows per run
@@ -19,10 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object NumericAuditMaintenance {
 
-  import graft.ops.CountStore
+  import graft.ops.RunStore
 
-  private val Digits = CountStore.Table("digitcounts", "digit BIGINT, n_obs BIGINT", "digit")
-  private[graft] val Store = new CountStore("", Digits)
+  private val Digits = RunStore.Table("digitcounts", "digit BIGINT, n_obs BIGINT", "digit")
+  private[graft] val Store = new RunStore("", Digits)
 
   /** Full rebuild from a snapshot → `run=base`. */
   def build(spark: SparkSession, prices: DataFrame, dir: String): Unit =

@@ -85,38 +85,39 @@ object DedupScreenStream {
     // the batch feeds screening AND the unique-absorb join
     val b = batch.select(col("doc_id"), col("text")).cache()
     try {
+      // checkpointed, not cached: the absorb below writes the index
+      // tables' roots, which makes Spark recompute every cached plan
+      // reading them, and the label path reads the verdicts after it
       val verdicts =
         DedupIndex.screen(spark, b, indexDir,
-          excludeRun = Some(s"b$batchId")).cache()
-      try {
-        verdicts.write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        val uniques = b.join(
-          verdicts.filter(col("verdict") === "unique").select("doc_id"),
+          excludeRun = Some(s"b$batchId")).localCheckpoint()
+      verdicts.write.mode("overwrite")
+        .parquet(s"$outDir/batch=$batchId")
+      val uniques = b.join(
+        verdicts.filter(col("verdict") === "unique").select("doc_id"),
+        Seq("doc_id"))
+      DedupIndex.append(spark, uniques, indexDir, s"b$batchId")
+      // cluster maintenance AFTER the absorb, with the batch's own
+      // run excluded from the edge probes (intra-batch edges come
+      // from nearEdgesWithin) — its epoch=batchId+1 delta is
+      // idempotent under re-delivery like the other sinks. The
+      // screened-out docs append to the probe-only side index
+      // FIRST (same keyed-run idempotency), then the absorb folds
+      // in edges against it so docs dropped by screening stay
+      // reachable as cluster bridges (class doc).
+      labelDir.foreach { ld =>
+        val sd = screenedDir(indexDir)
+        val nonUniques = b.join(
+          verdicts.filter(col("verdict") =!= "unique").select("doc_id"),
           Seq("doc_id"))
-        DedupIndex.append(spark, uniques, indexDir, s"b$batchId")
-        // cluster maintenance AFTER the absorb, with the batch's own
-        // run excluded from the edge probes (intra-batch edges come
-        // from nearEdgesWithin) — its epoch=batchId+1 delta is
-        // idempotent under re-delivery like the other sinks. The
-        // screened-out docs append to the probe-only side index
-        // FIRST (same keyed-run idempotency), then the absorb folds
-        // in edges against it so docs dropped by screening stay
-        // reachable as cluster bridges (class doc).
-        labelDir.foreach { ld =>
-          val sd = screenedDir(indexDir)
-          val nonUniques = b.join(
-            verdicts.filter(col("verdict") =!= "unique").select("doc_id"),
-            Seq("doc_id"))
-          DedupIndex.append(spark, nonUniques, sd, s"b$batchId")
-          val screenedEdges = DedupIndex.nearEdgesAgainst(
-            spark, b, sd, excludeRun = Some(s"b$batchId"))
-          graft.pipeline.ClusterMaintenance.absorb(
-            spark, b, indexDir, ld, batchId,
-            excludeRun = Some(s"b$batchId"),
-            extraEdges = Some(screenedEdges))
-        }
-      } finally verdicts.unpersist()
+        DedupIndex.append(spark, nonUniques, sd, s"b$batchId")
+        val screenedEdges = DedupIndex.nearEdgesAgainst(
+          spark, b, sd, excludeRun = Some(s"b$batchId"))
+        graft.pipeline.ClusterMaintenance.absorb(
+          spark, b, indexDir, ld, batchId,
+          excludeRun = Some(s"b$batchId"),
+          extraEdges = Some(screenedEdges))
+      }
     } finally b.unpersist()
   }
 }

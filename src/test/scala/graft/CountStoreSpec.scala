@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** [[graft.ops.CountStore]] — the five additive count stores reach
-  * their stores only through it, and its declared-schema reads serve
+/** [[graft.ops.RunStore]] — the five additive count stores and the
+  * two serving stores (DedupIndex, HybridRetrieval) reach their
+  * stores only through it, and its declared-schema reads serve
   * without a schema-inference job. The served-≡-batch, re-delivery,
   * crash-window, half-landed and fresh-store contracts are each
   * module's own spec. */
@@ -65,22 +66,29 @@ class CountStoreSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     // read from the project root, where the suite runs
     val root = java.nio.file.Paths.get("src", "main", "scala", "graft")
-    val store = root.resolve("ops/CountStore.scala")
-    val modules = Seq("CorpusStatsMaintenance", "GovernanceMaintenance",
+    val store = root.resolve("ops/RunStore.scala")
+    def modules(names: String*) = names.map(m => root.resolve(s"pipeline/$m.scala"))
+    val counts = modules("CorpusStatsMaintenance", "GovernanceMaintenance",
       "NumericAuditMaintenance", "MixtureMaintenance", "DriftMonitor")
-      .map(m => root.resolve(s"pipeline/$m.scala"))
-    (store +: modules).foreach(p =>
+    // the serving stores keep derived ANN state on StoreCompaction and
+    // read their raw side store by hand, so their pattern is narrower
+    val serving = modules("DedupIndex", "HybridRetrieval")
+    (store +: (counts ++ serving)).foreach(p =>
       assert(Files.isRegularFile(p), s"no $p under ${root.toAbsolutePath}"))
-    val protocol = """read\.parquet\(|partitionOverwriteMode|StoreCompaction\.|DeliveryMarker\.""".r
-    def uses(p: java.nio.file.Path): Seq[String] =
+    val countProtocol =
+      """read\.parquet\(|partitionOverwriteMode|StoreCompaction\.|DeliveryMarker\.""".r
+    val runProtocol =
+      """partitionOverwriteMode|DeliveryMarker\.|StoreCompaction\.fold|withColumn\("run"""".r
+    def uses(protocol: scala.util.matching.Regex)(p: java.nio.file.Path): Seq[String] =
       Files.readAllLines(p).asScala.toSeq.zipWithIndex.collect {
         case (line, i) if protocol.findFirstIn(line).isDefined =>
           s"$p:${i + 1}: ${line.trim}"
       }
-    // CountStore still holds the protocol, so the pattern cannot go stale
-    assert(uses(store).nonEmpty, s"$store no longer matches $protocol")
-    val byHand = modules.flatMap(uses)
+    // RunStore still holds the protocol, so the patterns cannot go stale
+    for (protocol <- Seq(countProtocol, runProtocol))
+      assert(uses(protocol)(store).nonEmpty, s"$store no longer matches $protocol")
+    val byHand = counts.flatMap(uses(countProtocol)) ++ serving.flatMap(uses(runProtocol))
     assert(byHand.isEmpty,
-      s"count stores must reach their store through CountStore:\n${byHand.mkString("\n")}")
+      s"run stores must reach their store through RunStore:\n${byHand.mkString("\n")}")
   }
 }

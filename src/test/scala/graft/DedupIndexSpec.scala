@@ -160,7 +160,7 @@ class DedupIndexSpec extends AnyFunSuite {
       (9002L, "totally novel qqz wwx eey rrt yyu")).toDF("doc_id", "text")
     val derived = DedupIndex.withDerived(batch)
     def pairs(maxBands: Long) =
-      DedupIndex.verifiedAgainst(spark, derived, dir, None, maxBands)
+      DedupIndex.verifiedAgainst(spark, derived, DedupIndex.Store.read(spark, dir), None, maxBands)
         .select($"doc_id", $"corpus_id",
           floor($"jaccard" * lit(1e6) + lit(0.5)).cast("long"))
         .as[(Long, Long, Long)].collect().toSet
@@ -218,6 +218,27 @@ class DedupIndexSpec extends AnyFunSuite {
     DedupIndex.append(spark, batch, dir, "bX")
     assert(verdict() == "exact",
       "retried delivery must make the run visible to screening")
+
+    // a re-delivery of the acknowledged bX whose write job dies
+    // partway leaves the landed run in place: its fingerprints may not
+    // vanish while its ack and bands stay visible (the copy would read
+    // near)
+    FailingWrites.during(DedupIndex.append(spark, batch, dir, "bX"))
+    assert(verdict() == "exact",
+      "a failed re-delivery must not empty the acknowledged run's fingerprints")
+
+    // a rebuild whose write job dies partway leaves the old base
+    FailingWrites.during(DedupIndex.build(spark, corpus.unionByName(batch), dir))
+    val baseCopy = Seq((201L, "base document number 3 with words 3")).toDF("doc_id", "text")
+    val rebuilt = DedupIndex.screen(spark, baseCopy, dir).collect().head
+    assert(rebuilt.getString(1) == "exact" && rebuilt.getLong(2) == 3L,
+      s"a failed rebuild must not empty the base fingerprints: $rebuilt")
+
+    // a directory that was never built fails to screen, never
+    // screens everything unique
+    val never = intercept[Exception](
+      DedupIndex.screen(spark, probe, storeDir("dedup-never")).collect())
+    assert(never.getMessage.contains("PATH_NOT_FOUND"), s"unexpected failure: $never")
   }
 
   test("pre-widening migration: screen/append/compact all refuse, rebuild restores screening, the fp_hi hook proves old-vs-new agreement") {

@@ -557,6 +557,15 @@ class HybridRetrievalSpec extends AnyFunSuite {
     val before = HybridRetrieval.search(spark, qdf, root)
       .select($"doc_id", $"rn").as[(Long, Long)].collect().toMap
 
+    // a rebuild whose write job dies partway leaves every store as it
+    // was: the postings may not vanish and degrade search to
+    // semantic-only
+    FailingWrites.during(HybridRetrieval.build(spark, docs, root))
+    val afterFailedBuild = HybridRetrieval.search(spark, qdf, root)
+      .select($"doc_id", $"rn").as[(Long, Long)].collect().toMap
+    assert(afterFailedBuild == before,
+      s"a failed rebuild changed search: $afterFailedBuild vs $before")
+
     HybridRetrieval.append(spark, batchB, root, "bX")
     graft.ops.DeliveryMarker.clear(spark, root, Set("bX"))
     val hidden = HybridRetrieval.search(spark, qdf, root)

@@ -53,22 +53,20 @@ class StoreSchemaSpec extends AnyFunSuite {
       DriftMonitor.Counts -> drift, DriftMonitor.Ref -> drift)
     // `run` is a count table's only partition column, declared STRING;
     // inference would type the numeric run ids below as INT
-    def pinCountStores(stage: String, stores: Seq[(graft.ops.CountStore, String)]): Unit = {
+    def pinCountStores(stage: String, stores: Seq[(graft.ops.RunStore, String)]): Unit = {
       val key = "spark.sql.sources.partitionColumnTypeInference.enabled"
       spark.conf.set(key, "false")
       try for ((store, dir) <- stores; t <- store.tables) pin(stage, s"$dir/${t.name}", t.schema)
       finally spark.conf.unset(key)
     }
     def pinAll(stage: String, tombstones: Boolean): Unit = {
-      Seq("postings" -> HybridRetrieval.PostingsSchema,
-        "termstats" -> HybridRetrieval.TermstatsSchema,
-        "stats" -> HybridRetrieval.StatsSchema,
-        "raw" -> AnnIndex.RawSchema,
-        "ann/codebooks" -> AnnIndex.CodebooksSchema,
-        "ann/codes" -> AnnIndex.CodesSchema)
+      // every table of the two serving stores, so a table added later
+      // is pinned too (their run ids are not numeric: default inference)
+      for ((store, dir) <- Seq(HybridRetrieval.Store -> hybrid, DedupIndex.Store -> dedup);
+           t <- store.tables) pin(stage, s"$dir/${t.name}", t.schema)
+      Seq("ann/codebooks" -> AnnIndex.CodebooksSchema, "ann/codes" -> AnnIndex.CodesSchema)
         .foreach { case (s, schema) => pin(stage, s"$hybrid/$s", schema) }
       if (tombstones) pin(stage, s"$hybrid/ann/tombstones", AnnIndex.TombstonesSchema)
-      DedupIndex.Schemas.foreach { case (t, schema) => pin(stage, s"$dedup/$t", schema) }
       pin(stage, graft.streaming.AnnScreenStream.rawDir(screen), AnnIndex.RawSchema)
       pin(stage, s"$screen/codes", AnnIndex.CodesSchema)
     }
